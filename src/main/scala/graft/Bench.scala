@@ -81,24 +81,6 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Every populated session memo across the families, as short tags
-    * (`d.signSig`, `m.landmarks`, `rp:x03:…`). Sampled before each
-    * timed run: the cold/warm marker that lets a cross-round reader
-    * distinguish "this query paid a memo build" from "the box was
-    * slow" without re-benching.
-    */
-  private def warmTags(): Seq[String] =
-    graft.pipeline.Dedup.warmMemoNames ++
-      graft.pipeline.Similarity.warmMemoNames ++
-      graft.pipeline.TextAnalysis.warmMemoNames ++
-      graft.pipeline.Multimodal.warmMemoNames ++
-      graft.rass.Corpus.warmMemoNames ++
-      graft.rass.RassEngine.warmMemoNames ++
-      graft.rass.Bm25.warmMemoNames ++
-      graft.rass.RassQueries.warmMemoNames ++
-      graft.relational.StarQueries.warmMemoNames ++
-      graft.RangedPrefix.warmKeys.map("rp:" + _)
-
   /** Block-manager snapshot: (rddId, cachedPartitions, totalPartitions,
     * memBytes) per persisted RDD. The eviction witness the round-16
     * adjudication lacked: a memo whose blocks were evicted mid-suite
@@ -133,6 +115,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+
+    // d08 reads its corpus band table from the durable artifact store
+    // when a valid one is already there; it is labelled warm only then
+    val d08Warm = graft.pipeline.Dedup.corpusBandArtifact.onDisk(spark, sfDir)
 
     // warm the session (JIT, codegen pipeline, FS metadata) so the
     // alphabetically-first query isn't charged for JVM startup
@@ -203,7 +189,7 @@ object Bench {
         .toSeq.sortBy(_._1).flatMap { case (g, group) =>
           axes += ((g, sentinelOnce(spark), floorOnce(spark)))
           val rs = group.sorted.map { name =>
-            val w1 = warmTags().mkString(",")
+            val w1 = Memo.warmNames.mkString(",")
             val before = storageSnap(spark)
             val (t1, pr1) = profiled(name)
             // MID snapshot (round-17 review): an eviction during t1
@@ -212,7 +198,7 @@ object Bench {
             // RDD first persisted during t1 is absent from `before`
             // and its t2-window eviction only shows against `mid`
             val mid = storageSnap(spark)
-            val w2 = warmTags().mkString(",")
+            val w2 = Memo.warmNames.mkString(",")
             val (t2, pr2) = profiled(name)
             val after = storageSnap(spark)
             def cached(s: Seq[(Int, Int, Int, Long)]) =
@@ -230,14 +216,7 @@ object Bench {
             val mb = after.map(_._4).sum >> 20
             RunRec(name, t1, t2, w1, w2, evict, partial, mb, pr1, pr2)
           }
-          graft.pipeline.Dedup.invalidateCaches()
-          graft.pipeline.Similarity.invalidateCaches()
-          graft.pipeline.TextAnalysis.invalidateCaches()
-          graft.pipeline.Multimodal.invalidateCaches()
-          graft.pipeline.Export.invalidateCaches()
-          graft.rass.Corpus.invalidateCaches()
-          graft.rass.RassEngine.invalidateStatsCache()
-          graft.relational.StarQueries.invalidateCaches()
+          Memo.invalidateAll()
           // settle before the next group so one group's GC debt (freed
           // cache blocks) isn't billed to the next group's first query
           System.gc()
@@ -296,20 +275,20 @@ object Bench {
     // warm_queries: measured against ingest artifacts another query in
     // their group already built (the production shape for consumers of
     // stored artifacts); their cold cost includes that build.
-    // d08 is listed because its corpus band table is a DURABLE artifact
-    // (survives sessions in ~/.graft-artifacts): a driver run whose
-    // artifact store already holds the table measures d08 warm — the
-    // declared batch-vs-STORED-index semantics, but a disclosure the
-    // JSON must carry (VERDICT r19 item 4; cold-build cost recorded in
-    // BASELINE).
-    val warm = Seq("d08_delta_dedup", "x01_corpus_export", "x02_decontaminated_export",
+    // d08 is listed when its corpus band table, a DURABLE artifact
+    // (survives sessions in ~/.graft-artifacts), was valid on disk at
+    // run start: the run then measures d08 warm — the declared
+    // batch-vs-STORED-index semantics, but a disclosure the JSON must
+    // carry (cold-build cost recorded in BASELINE).
+    val warm = ((if (d08Warm) Seq("d08_delta_dedup") else Nil) ++ Seq(
+      "x01_corpus_export", "x02_decontaminated_export",
       "x03_packing_layout", "x04_mixture_plan", "x05_mixture_sample",
       "x06_shard_manifest", "s05_recall_profile", "s08_sq8_rescore",
       "s09_incremental_assign", "s10_filtered_knn", "p10_leaked_grams",
       "p14_cross_source_leakage", "d07_minhash_calibration",
       "s18_pq_refine", "s19_refine_pool_curve", "x11_quality_funnel",
       "x12_checksum_manifest", "p25_gram_df_spectrum",
-      "m07_media_survivors", "d11_detector_overlap", "x13_release_provenance")
+      "m07_media_survivors", "d11_detector_overlap", "x13_release_provenance"))
       .filter(names.contains).map("\"" + _ + "\"").mkString("[", ",", "]")
     val totalMax = maxes.map(_._2).filter(_ >= 0).sum
     // key order matters for archival, not parsing: the driver stores

@@ -25,34 +25,21 @@ import org.apache.spark.sql.functions._
   * (RangePartitioner re-samples per execution, so an unpersisted
   * exchange could assign rows differently between the jobs; which
   * boundaries it picks is irrelevant to correctness, but both jobs
-  * must agree). Released by [[invalidateCaches]].
+  * must agree). Each projection is a [[Memo]] entry tagged `rp:` +
+  * its caller key, so a caller releases its own projections with
+  * `Memo.invalidate("rp:<key prefix>")` and never another module's
+  * mid-use.
   */
 object RangedPrefix {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]
+  private val cache = Memo.tagged[(SparkSession, String,
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame](
+    "rp:", Memo.unpersist)(_._2)
 
   // working-column names no reasonable base schema carries; runningSum
   // rejects a base that does rather than silently clobbering it
   private val PidCol = "__rp_pid"
   private val OffsetCol = "__rp_offset"
-
-  /** Release memoized ranged projections whose caller key starts with
-    * `prefix` (empty = all). Callers that expose their own
-    * `invalidateCaches` pass their key prefix, so releasing one
-    * module's artifact can never unpersist another's mid-use.
-    */
-  def invalidateCaches(prefix: String = ""): Unit =
-    cache.keys.filter(_._2.startsWith(prefix))
-      .foreach(k => cache.remove(k).foreach(_.unpersist()))
-
-  /** The caller keys with a live memoized ranged projection (bench
-    * telemetry — which global-rank artifacts were warm when a query
-    * ran). Plan component dropped: the caller key names the artifact.
-    */
-  private[graft] def warmKeys: Seq[String] =
-    cache.keys.map(_._2).toSeq.distinct.sorted
 
   /** `base` extended with `cumCol` = the running sum of `value` in the
     * global `orderCols` order, INCLUSIVE of the current row (so a
@@ -74,7 +61,7 @@ object RangedPrefix {
     val b = base
     require(!b.columns.contains(PidCol) && !b.columns.contains(OffsetCol),
       s"base must not carry the helper's working columns ($PidCol, $OffsetCol)")
-    val parted = Memo.getOrBuild(cache,
+    val parted = cache.getOrBuild(
         (spark, cacheKey, b.queryExecution.analyzed.canonicalized)) {
       b.repartitionByRange(orderCols: _*)
         .withColumn(PidCol, spark_partition_id())

@@ -104,15 +104,6 @@ object ScaleProbe {
       fs.create(new org.apache.hadoop.fs.Path(s"$out/_built"), true).close()
     }
 
-    def invalidateAll(): Unit = {
-      graft.pipeline.Dedup.invalidateCaches()
-      graft.pipeline.Similarity.invalidateCaches()
-      graft.pipeline.TextAnalysis.invalidateCaches()
-      graft.pipeline.Multimodal.invalidateCaches()
-      graft.pipeline.Export.invalidateCaches()
-      System.gc()
-    }
-
     // the superlinear-risk set, bench protocol (noop sink, memoized
     // ingest artifacts warm WITHIN a dir like the bench's d-group)
     val targets: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -370,7 +361,8 @@ object ScaleProbe {
     }
 
     val rows = for (dir <- Seq(base, out)) yield {
-      invalidateAll()
+      Memo.invalidateAll()
+      System.gc()
       // warm FS metadata + page cache so dir order doesn't bias pass 1
       Tables.documents(spark, dir).write.mode("overwrite").format("noop").save()
       Tables.embeddings(spark, dir).write.mode("overwrite").format("noop").save()

@@ -32,14 +32,7 @@ object Verify {
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }
         }
-        graft.pipeline.Dedup.invalidateCaches()
-        graft.pipeline.Similarity.invalidateCaches()
-        graft.pipeline.TextAnalysis.invalidateCaches()
-        graft.pipeline.Multimodal.invalidateCaches()
-        graft.pipeline.Export.invalidateCaches()
-        graft.rass.Corpus.invalidateCaches()
-        graft.rass.RassEngine.invalidateStatsCache()
-        graft.relational.StarQueries.invalidateCaches()
+        Memo.invalidateAll()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

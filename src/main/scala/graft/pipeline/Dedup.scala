@@ -40,34 +40,7 @@ object Dedup {
     * between query groups so one group's artifacts don't squeeze the
     * next group's execution memory.
     */
-  def invalidateCaches(): Unit = {
-    Seq(shingleCache, cappedShingleCache, sigCache, sizesCache,
-      simhashCache, signSigCache, pairsCache,
-      detectorPairsCache, lineSegCache).foreach { c =>
-      c.keys.foreach(k => c.remove(k).foreach(_.unpersist()))
-    }
-    clusterArtifact.invalidate()
-    corpusBandArtifact.invalidate()
-  }
-
-  /** Which of this family's session memos are populated — the bench's
-    * per-query cold/warm marker (round-16 driver runs showed a dedup-
-    * family drift the min-only JSON could not attribute to cold memos
-    * vs box contention; this names the memo state per timed run).
-    */
-  private[graft] def warmMemoNames: Seq[String] = Seq(
-    "d.shingles" -> shingleCache.nonEmpty,
-    "d.cappedShingles" -> cappedShingleCache.nonEmpty,
-    "d.minhashSig" -> sigCache.nonEmpty,
-    "d.sizes" -> sizesCache.nonEmpty,
-    "d.corpusBands" -> corpusBandArtifact.isWarm,
-    "d.simhashSig" -> simhashCache.nonEmpty,
-    "d.signSig" -> signSigCache.nonEmpty,
-    "d.pairs" -> pairsCache.nonEmpty,
-    "d.detectorPairs" -> detectorPairsCache.nonEmpty,
-    "d.clusters" -> clusterArtifact.isWarm,
-    "d.lineSeg" -> lineSegCache.nonEmpty,
-  ).collect { case (n, true) => n }
+  def invalidateCaches(): Unit = Memo.invalidate("d.")
 
   /** Distinct word-3-gram shingles: (doc_id, shingle) rows.
     *
@@ -78,7 +51,7 @@ object Dedup {
     * ingest, not re-derived from raw text per query.
     */
   private def shingleRows(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(shingleCache, (spark, dir)) {
+    shingleCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       Tables.documents(spark, dir)
         .select($"doc_id", toks($"text").as("t"))
@@ -89,9 +62,7 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val shingleCache = Memo.frames("d.shingles")
 
   /** d02's production Jaccard cut as an exact rational: keep pairs
     * with J >= [[JaccardCutNum]]/[[JaccardCutDen]] (= 0.8). A NAMED
@@ -153,7 +124,7 @@ object Dedup {
     * b-side, and the per-doc sizes).
     */
   private def cappedShingles(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(cappedShingleCache, (spark, dir)) {
+    cappedShingleCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       val sh = shingleRows(spark, dir)
       val keep = sh.groupBy($"shingle").agg(count(lit(1)).as("df_"))
@@ -163,9 +134,7 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val cappedShingleCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val cappedShingleCache = Memo.frames("d.cappedShingles")
 
   /** The UNFILTERED candidate-pair stats over the capped inverted
     * index — (a_id, b_id, inter, na, nb) for every pair sharing >= 1
@@ -237,7 +206,7 @@ object Dedup {
     * fires — verified in the physical plan).
     */
   private def minhashSig(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(sigCache, (spark, dir)) {
+    sigCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       val sh = shingleRows(spark, dir)
       val minCols = (0 until NumHashes).map(i =>
@@ -246,9 +215,7 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val sigCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val sigCache = Memo.frames("d.minhashSig")
 
   /** Per-document distinct-shingle counts (doc_id, n) — the Jaccard
     * denominators. Memoized + persisted per (session, dir) like the
@@ -261,16 +228,14 @@ object Dedup {
     * persisted table emulates.
     */
   private def shingleSizes(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(sizesCache, (spark, dir)) {
+    sizesCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       shingleRows(spark, dir).groupBy($"doc_id")
         .agg(count(lit(1)).as("n"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val sizesCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val sizesCache = Memo.frames("d.sizes")
 
   /** d03 — MinHash + LSH banding near-dup pairs, verified by true
     * Jaccard (integer threshold, same as d02). The band-bucket join is
@@ -461,8 +426,8 @@ object Dedup {
     * band definition depends on (hash count x bands, and the delta
     * split that defines which docs are "corpus").
     */
-  private val corpusBandArtifact = new DurableArtifact(
-    "d08_corpus_bands",
+  private[graft] val corpusBandArtifact = new DurableArtifact(
+    "d.corpusBands", "d08_corpus_bands",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$CorpusBandsVersion|minhash=${NumHashes}x$Bands|" +
         s"delta=$DeltaMod/$DeltaRem|" +
@@ -628,14 +593,12 @@ object Dedup {
     * per side.
     */
   private def simhashDf(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(simhashCache, (spark, dir)) {
+    simhashCache.getOrBuild((spark, dir)) {
       buildSimhash(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val simhashCache = Memo.frames("d.simhashSig")
 
   private def buildSimhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -765,7 +728,7 @@ object Dedup {
     * [[minhashSig]] (the band self-join reads it twice).
     */
   private def signSig(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(signSigCache, (spark, dir)) {
+    signSigCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       graft.rass.expressions.DotProduct.register(spark)
       val e = Tables.embeddings(spark, dir)
@@ -778,9 +741,7 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val signSigCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val signSigCache = Memo.frames("d.signSig")
 
   def d05EmbeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -901,15 +862,13 @@ object Dedup {
     * consumes the STORED pairs, it doesn't re-derive them from text.
     */
   private def dupPairs(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(pairsCache, (spark, dir)) {
+    pairsCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       d03MinhashLshPairs(spark, dir).select($"a_id", $"b_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val pairsCache = Memo.frames("d.pairs")
 
   /** The converged cluster-label table (id, label) is a DURABLE ingest
     * artifact: a production pipeline clusters ONCE at ingest, publishes
@@ -919,7 +878,7 @@ object Dedup {
     * corpus, and it must not depend on an in-memory cache surviving
     * either (round 6 measured the export at 0.58 s with the session
     * memo warm and 5.06 s after eviction — a durability bug, not
-    * noise). The TrieMap below is only the session's hot handle to the
+    * noise). The session memo below is only the hot handle to the
     * on-disk table; a miss falls back to the parquet artifact before it
     * ever falls back to a rebuild.
     */
@@ -940,7 +899,7 @@ object Dedup {
     * artifact instead of silently serving wrong clusters.
     */
   private val clusterArtifact = new DurableArtifact(
-    "d06_clusters",
+    "d.clusters", "d06_clusters",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$ClusterArtifactVersion|minhash=${NumHashes}x$Bands|" +
         ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
@@ -1172,7 +1131,7 @@ object Dedup {
     */
   private[graft] def detectorPairs(spark: SparkSession,
       dir: String): DataFrame =
-    Memo.getOrBuild(detectorPairsCache, (spark, dir)) {
+    detectorPairsCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       // fingerprint captured BEFORE the detectors read any source data
       // (the ArtifactStore write-side TOCTOU rule)
@@ -1206,8 +1165,7 @@ object Dedup {
         }
     }
 
-  private val detectorPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val detectorPairsCache = Memo.frames("d.detectorPairs")
 
   /** Bump when ANY detector's pair semantics change in a way the
     * fingerprint's named parameters don't capture, or when the stored
@@ -1569,8 +1527,7 @@ object Dedup {
       .filter($"df" >= 2).select($"h")
   }
 
-  private val lineSegCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val lineSegCache = Memo.frames("d.lineSeg")
 
   /** The CORPUS line-segment table, memoized + persisted under the
     * ingest-artifact policy (the d02 capped-index pattern): d14
@@ -1582,7 +1539,7 @@ object Dedup {
     */
   private[graft] def corpusLineHashes(spark: SparkSession,
       dir: String): DataFrame =
-    Memo.getOrBuild(lineSegCache, (spark, dir)) {
+    lineSegCache.getOrBuild((spark, dir)) {
       val df = lineHashes(Tables.documents(spark, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize: consumers read the rows, not the scan

@@ -26,13 +26,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     every parameter the clustering semantics depend on plus the
   *     source listing(s).
   */
-private[pipeline] final class DurableArtifact(
+private[graft] final class DurableArtifact(
+    name: String,
     suffix: String,
     fingerprint: (SparkSession, String) => String,
     build: (SparkSession, String) => DataFrame) {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val memo = graft.Memo.frames(name)
 
   def path(dir: String): String =
     s"${ArtifactStore.artifactRoot}/${ArtifactStore.md5Hex(dir)}_$suffix"
@@ -51,8 +51,15 @@ private[pipeline] final class DurableArtifact(
       .getOrElse(base)
   }
 
+  /** Whether a published artifact matching the current fingerprint is
+    * on disk (a cold session's [[read]] would load it, not rebuild).
+    */
+  def onDisk(spark: SparkSession, dir: String): Boolean =
+    ArtifactStore.findValid(spark, path(dir),
+      currentFingerprint(spark, dir)).isDefined
+
   def read(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(cache, (spark, dir)) {
+    memo.getOrBuild((spark, dir)) {
       val fp = currentFingerprint(spark, dir)
       ArtifactStore.findValid(spark, path(dir), fp)
         .flatMap(p => ArtifactStore.consistentParquet(spark, p))
@@ -90,9 +97,7 @@ private[pipeline] final class DurableArtifact(
     val served = ArtifactStore.consistentParquet(spark, path(dir))
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       .getOrElse(fresh)
-    cache.synchronized {
-      cache.put((spark, dir), served).foreach(_.unpersist())
-    }
+    memo.replace((spark, dir), served)
     served
   }
 
@@ -101,16 +106,6 @@ private[pipeline] final class DurableArtifact(
     ArtifactStore.publish(spark, path(dir), fp) { staging =>
       labels.write.mode("overwrite").parquet(staging)
     }
-
-  def invalidate(): Unit =
-    cache.keys.foreach(k => cache.remove(k).foreach(_.unpersist()))
-
-  /** Whether the SESSION memo holds this artifact (bench telemetry:
-    * distinguishes a consumer run that read the hot handle from one
-    * that went to disk or rebuilt — the attribution a cross-round
-    * timing comparison needs).
-    */
-  def isWarm: Boolean = cache.nonEmpty
 }
 
 private[pipeline] object DurableArtifact {

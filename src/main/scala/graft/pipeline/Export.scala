@@ -150,11 +150,8 @@ object Export {
   /** Release x03's, x05's and x08's memoized ranged projections (and
     * only them).
     */
-  def invalidateCaches(): Unit = {
-    graft.RangedPrefix.invalidateCaches("x03:")
-    graft.RangedPrefix.invalidateCaches("x05:")
-    graft.RangedPrefix.invalidateCaches("x08:")
-  }
+  def invalidateCaches(): Unit =
+    graft.Memo.invalidate("rp:x03:", "rp:x05:", "rp:x08:")
 
   /** Epochs the shuffle plan covers — enough to show the per-epoch
     * orders are distinct; a training run extends the range, nothing

@@ -276,31 +276,6 @@ object Multimodal {
     graft.pipeline.Dedup.propagateLabels(spark, dup, "m06")
   }
 
-  /** Release the media family's session memos (wired into the
-    * Bench/Verify/ScaleProbe per-group cache releases like every
-    * sibling family's -- the round-16 review caught this family's
-    * seam missing from those release blocks).
-    */
-  private[graft] def invalidateCaches(): Unit = {
-    mediaClusterArtifact.invalidate()
-    phashCache.keys.foreach(k =>
-      phashCache.remove(k).foreach(_.unpersist()))
-    landmarkCache.keys.foreach(k =>
-      landmarkCache.remove(k).foreach(_.unpersist()))
-    mediaDetectorPairsCache.keys.foreach(k =>
-      mediaDetectorPairsCache.remove(k).foreach(_.unpersist()))
-  }
-
-  /** Populated session memos — the bench's per-query cold/warm marker
-    * (see [[graft.pipeline.Dedup.warmMemoNames]]).
-    */
-  private[graft] def warmMemoNames: Seq[String] = Seq(
-    "m.phash" -> phashCache.nonEmpty,
-    "m.landmarks" -> landmarkCache.nonEmpty,
-    "m.clusters" -> mediaClusterArtifact.isWarm,
-    "m.detectorPairs" -> mediaDetectorPairsCache.nonEmpty,
-  ).collect { case (n, true) => n }
-
   /** Bump when the clustering semantics OR the stored schema change.
     * v2: the id→modality convention joined the fingerprint's named
     * parameters.
@@ -315,7 +290,7 @@ object Multimodal {
     * geometry and the containment cut.
     */
   private val mediaClusterArtifact = new DurableArtifact(
-    "m06_clusters",
+    "m.clusters", "m06_clusters",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$MediaClusterArtifactVersion|frames=${FrameLen}x$FrameStep|" +
         s"contain=$ContainNum/$ContainDen|" +
@@ -502,9 +477,7 @@ object Multimodal {
         collect_list($"entries")).as("idx"))
   }
 
-  private val phashCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val phashCache = Memo.frames("m.phash")
 
   /** The per-image 56-bit average hash, memoized + PERSISTED (the
     * cappedShingles pattern). Two reasons, both load-bearing:
@@ -523,7 +496,7 @@ object Multimodal {
     * videoFrames' empty-payload exclusion).
     */
   private def imagePhash(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(phashCache, (spark, dir)) {
+    phashCache.getOrBuild((spark, dir)) {
       val df = imagePhashPlan(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize: consumers read the table, not the scan
@@ -712,14 +685,12 @@ object Multimodal {
     * cappedShingles policy, same reason).
     */
   private def audioLandmarks(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(landmarkCache, (spark, dir)) {
+    landmarkCache.getOrBuild((spark, dir)) {
       audioWindows(mediaTable(spark, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val landmarkCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val landmarkCache = Memo.frames("m.landmarks")
 
   /** The corpus landmark table as a serialized bloom sketch over
     * xxhash64(h) longs (1 % fp) — the constant-size frozen index the
@@ -817,7 +788,7 @@ object Multimodal {
 
   private[graft] def mediaDetectorPairs(spark: SparkSession,
       dir: String): DataFrame =
-    Memo.getOrBuild(mediaDetectorPairsCache, (spark, dir)) {
+    mediaDetectorPairsCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       // fingerprint captured BEFORE the detectors read any source data
       // (the ArtifactStore write-side TOCTOU rule)
@@ -860,8 +831,7 @@ object Multimodal {
         }
     }
 
-  private val mediaDetectorPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val mediaDetectorPairsCache = Memo.frames("m.detectorPairs")
 
   /** Bump when any media detector's pair semantics change in a way the
     * fingerprint's named parameters don't capture, or when the stored

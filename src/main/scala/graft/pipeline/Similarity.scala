@@ -151,9 +151,8 @@ object Similarity {
   private val SeedVariant = "seed"
   private[pipeline] val TrainedVariant = "kmeans"
 
-  private val indexCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, String, Int), (DataFrame, DataFrame)]
+  private val indexCache = Memo.cache[(SparkSession, String, String, Int),
+    (DataFrame, DataFrame)]("s.ivf", Memo.unpersist)
 
   /** k ~ sqrt(n): the retrain lever [[s06CellProfile]]'s doc prescribes
     * when the max cell share drifts. C(occ,2) candidate work per cell
@@ -173,11 +172,10 @@ object Similarity {
     * count; at 100 TB this is the corpus snapshot's row count read
     * from the catalog, not a scan.
     */
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+  private val countCache = Memo.cache[(SparkSession, String), Long]("s.counts")
 
   private[pipeline] def corpusCount(spark: SparkSession, dir: String): Long =
-    Memo.getOrBuild(countCache, (spark, dir)) {
+    countCache.getOrBuild((spark, dir)) {
       vectors(spark, dir).count()
     }
 
@@ -186,7 +184,7 @@ object Similarity {
 
   private[pipeline] def ivfIndex(spark: SparkSession, dir: String,
       variant: String, cells: Int = NumCentroids): (DataFrame, DataFrame) =
-    Memo.getOrBuild(indexCache, (spark, dir, variant, cells)) {
+    indexCache.getOrBuild((spark, dir, variant, cells)) {
       // fingerprint captured BEFORE training reads vectors(): if the
       // embeddings table is regenerated mid-build, the published index
       // carries the pre-build listing and readers invalidate it
@@ -288,50 +286,17 @@ object Similarity {
     * per evaluation run. s01-the-query stays un-memoized: it is the
     * benchmark of the scan itself.
     */
-  private val exactCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val exactCache = Memo.frames("s.topk")
 
   private def exactTopK(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(exactCache, (spark, dir)) {
+    exactCache.getOrBuild((spark, dir)) {
       val df = s01KnnBruteForce(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize: consumers read the artifact, not the scan
       df
     }
 
-  def invalidateCaches(): Unit = {
-    countCache.clear()
-    semClusterArtifact.invalidate()
-    semDropArtifact.invalidate()
-    semContamArtifact.invalidate()
-    indexCache.keys.foreach(k =>
-      indexCache.remove(k).foreach { case (c, a) =>
-        c.unpersist(); a.unpersist()
-      })
-    exactCache.keys.foreach(k =>
-      exactCache.remove(k).foreach(_.unpersist()))
-    baseCentCache.keys.foreach(k =>
-      baseCentCache.remove(k).foreach(_.unpersist()))
-    pqCache.keys.foreach(k =>
-      pqCache.remove(k).foreach { case (c, a) =>
-        c.unpersist(); a.unpersist()
-      })
-  }
-
-  /** Populated session memos — the bench's per-query cold/warm marker
-    * (see [[Dedup.warmMemoNames]]).
-    */
-  private[graft] def warmMemoNames: Seq[String] = Seq(
-    "s.ivf" -> indexCache.nonEmpty,
-    "s.topk" -> exactCache.nonEmpty,
-    "s.baseCents" -> baseCentCache.nonEmpty,
-    "s.pq" -> pqCache.nonEmpty,
-    "s.counts" -> countCache.nonEmpty,
-    "s.semClusters" -> semClusterArtifact.isWarm,
-    "s.semDrops" -> semDropArtifact.isWarm,
-    "s.semContam" -> semContamArtifact.isWarm,
-  ).collect { case (n, true) => n }
+  def invalidateCaches(): Unit = Memo.invalidate("s.")
 
   /** Deterministic Lloyd k-means over (vec_id, v) rows — the IVF
     * centroid trainer. Init = first k vectors; each iteration assigns
@@ -596,7 +561,7 @@ object Similarity {
     * (one implementation for d06/m06/s14).
     */
   private val semClusterArtifact = new DurableArtifact(
-    "s14_clusters",
+    "s.semClusters", "s14_clusters",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$SemClusterArtifactVersion|$s07FingerprintParams|" +
         ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet")),
@@ -685,7 +650,7 @@ object Similarity {
   // a future editor to bump the version is exactly the forgotten-bump
   // staleness class chaining exists to eliminate).
   private val semDropArtifact = new DurableArtifact(
-    "s21_drops",
+    "s.semDrops", "s21_drops",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$SemDropArtifactVersion|" +
         s"s14=${semClusterArtifact.currentFingerprint(spark, dir)}|" +
@@ -726,7 +691,7 @@ object Similarity {
     * thresholds the screen's test/train sides derive from.
     */
   private val semContamArtifact = new DurableArtifact(
-    "s15_contam",
+    "s.semContam", "s15_contam",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$SemContamArtifactVersion|$s07FingerprintParams|" +
         s"probe=$NProbe|train=${graft.pipeline.TextAnalysis.TrainMax}|" +
@@ -1000,7 +965,7 @@ object Similarity {
     */
   private[graft] def pqIndexAt(spark: SparkSession, dir: String,
       nCodes: Int): (DataFrame, DataFrame) =
-    Memo.getOrBuild(pqCache, (spark, dir, nCodes)) {
+    pqCache.getOrBuild((spark, dir, nCodes)) {
       import spark.implicits._
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val sv = subVectors(spark, dir).persist(lvl)
@@ -1019,8 +984,8 @@ object Similarity {
       (cents, codes)
     }
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
+  private val pqCache = Memo.cache[(SparkSession, String, Int),
+    (DataFrame, DataFrame)]("s.pq", Memo.unpersist)
 
   private def trainPqCodebook(spark: SparkSession, sv: DataFrame,
       nCodes: Int): DataFrame = {
@@ -1611,13 +1576,11 @@ object Similarity {
     * released via [[invalidateCaches]]: the Lloyd lineage would
     * otherwise re-run once per consumer of the centroid frame.
     */
-  private val baseCentCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  private val baseCentCache = Memo.frames("s.baseCents")
 
   private def baseCentroids(spark: SparkSession, dir: String,
       nBase: Long): DataFrame =
-    Memo.getOrBuild(baseCentCache, (spark, dir)) {
+    baseCentCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       val base = vectors(spark, dir).filter($"vec_id" < nBase)
       val df = kmeansCentroids(spark, base, recommendedCells(nBase),

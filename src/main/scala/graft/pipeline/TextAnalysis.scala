@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Text-analysis operators for large-scale training-data pipelines, over
   * the `documents` table (doc_id, text, lang, source, n_chars).
@@ -314,7 +314,7 @@ object TextAnalysis {
       .otherwise(array().cast("array<string>"))
 
   private def contamGrams(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(gramCache, (spark, dir)) {
+    gramCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       // explode drops empty arrays, so short docs contribute no rows —
       // same accept set as the pre-refactor size filter
@@ -324,45 +324,10 @@ object TextAnalysis {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val gramCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val gramCache = Memo.frames("p.grams")
 
-  def invalidateCaches(): Unit = {
-    graft.RangedPrefix.invalidateCaches("p29:")
-    graft.RangedPrefix.invalidateCaches("p32:")
-    trainVocabCache.keys.foreach(k =>
-      trainVocabCache.remove(k).foreach(_.unpersist()))
-    gramCache.keys.foreach(k => gramCache.remove(k).foreach(_.unpersist()))
-    contamDocsCache.keys.foreach(k =>
-      contamDocsCache.remove(k).foreach(_.unpersist()))
-    winnowFpCache.keys.foreach(k =>
-      winnowFpCache.remove(k).foreach(_.unpersist()))
-    dupSpanCache.keys.foreach(k =>
-      dupSpanCache.remove(k).foreach(_.unpersist()))
-    bpeRulesCache.clear()
-    qcCache.keys.foreach(k => qcCache.remove(k).foreach { f =>
-      f._1.unpersist(); f._2.unpersist()
-    })
-    qcModelCache.clear()
-    pplCache.keys.foreach(k => pplCache.remove(k).foreach(_.unpersist()))
-    dsirCache.clear() // local relations, nothing to unpersist
-  }
-
-  /** Populated session memos — the bench's per-query cold/warm marker
-    * (see [[Dedup.warmMemoNames]]).
-    */
-  private[graft] def warmMemoNames: Seq[String] = Seq(
-    "p.vocab" -> trainVocabCache.nonEmpty,
-    "p.grams" -> gramCache.nonEmpty,
-    "p.contam" -> contamDocsCache.nonEmpty,
-    "p.winnow" -> winnowFpCache.nonEmpty,
-    "p.spans" -> dupSpanCache.nonEmpty,
-    "p.bpe" -> bpeRulesCache.nonEmpty,
-    "p.qc" -> qcCache.nonEmpty,
-    "p.qcModel" -> qcModelCache.nonEmpty,
-    "p.ppl" -> pplCache.nonEmpty,
-    "p.dsir" -> dsirCache.nonEmpty,
-  ).collect { case (n, true) => n }
+  /** Release the text-analysis memos and the p29/p32 ranged projections. */
+  def invalidateCaches(): Unit = Memo.invalidate("p.", "rp:p29:", "rp:p32:")
 
   /** The contaminated-doc LIST p09 implies — the test-split doc_ids
     * sharing a 13-gram with train — a DURABLE ingest artifact under
@@ -375,13 +340,13 @@ object TextAnalysis {
     * At 100 TB the list is at most the test split's contaminated
     * fraction — broadcast-sized by construction — so durability costs
     * a few MB of parquet and saves a full-corpus gram join per export
-    * session. The TrieMap below is only the session's hot handle to
+    * session. The session memo below is only the hot handle to
     * the on-disk list; a miss falls back to the parquet artifact
     * before it ever falls back to a re-sweep.
     */
   private[graft] def contaminatedDocs(spark: SparkSession,
       dir: String): DataFrame =
-    graft.Memo.getOrBuild(contamDocsCache, (spark, dir)) {
+    contamDocsCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       // fingerprint captured BEFORE the sweep reads any source data:
       // a corpus regenerated mid-sweep invalidates the published list
@@ -397,8 +362,7 @@ object TextAnalysis {
       }
     }
 
-  private val contamDocsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val contamDocsCache = Memo.frames("p.contam")
 
   /** Bump when the sweep semantics change (gram definition, split
     * thresholds): a stale artifact from an older build must never
@@ -802,11 +766,14 @@ object TextAnalysis {
     * are parameterized for the scale probes only; every declared-query
     * caller trains the same [[BpeMerges]] rules with the same fold
     * semantics (a persist changes when a state is recomputed, never
-    * its rows).
+    * its rows). `materialize` fills a persisted layer; specs replace it
+    * to inject a failure.
     */
   private[graft] def trainBpe(spark: SparkSession, dir: String,
       merges: Int = BpeMerges,
-      persistEvery: Int = BpePersistInterval): Seq[(Int, String, String, Long)] = {
+      persistEvery: Int = BpePersistInterval,
+      materialize: DataFrame => Unit = _.count())
+      : Seq[(Int, String, String, Long)] = {
     import spark.implicits._
     // the one corpus-scale job: word frequencies; state = chars joined
     // by ' ' (corpus is ASCII words, asserted by MultimodalSpec)
@@ -824,8 +791,10 @@ object TextAnalysis {
     // materialized (count) BEFORE the previous layer is released —
     // releasing first would let the new layer's fill recompute from
     // the seed through the full chain. See [[BpePersistInterval]] for
-    // the measured crossover behind the default period.
-    var lastLayer: Option[DataFrame] = None
+    // the measured crossover behind the default period. A layer is
+    // tracked BEFORE it is materialized, so a throwing count still
+    // releases it (and the layer it was about to replace).
+    var layers = List.empty[DataFrame]
     try {
       for (k <- 1 to merges) {
         val sy = split($"s", " ")
@@ -847,14 +816,15 @@ object TextAnalysis {
         state = state.select(foldMerge($"s", a, b).as("s"), $"f")
         if (persistEvery > 0 && k % persistEvery == 0 && k < merges) {
           state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          state.count()
-          lastLayer.foreach(_.unpersist())
-          lastLayer = Some(state)
+          layers = state :: layers
+          materialize(state)
+          layers.tail.foreach(_.unpersist())
+          layers = List(state)
         }
       }
     } finally {
       seed.unpersist()
-      lastLayer.foreach(_.unpersist())
+      layers.foreach(_.unpersist())
     }
     rules.toSeq
   }
@@ -866,10 +836,10 @@ object TextAnalysis {
     */
   private def bpeRules(spark: SparkSession,
       dir: String): Seq[(Int, String, String, Long)] =
-    bpeRulesCache.getOrElseUpdate((spark, dir), trainBpe(spark, dir))
+    bpeRulesCache.getOrBuild((spark, dir))(trainBpe(spark, dir))
 
-  private val bpeRulesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, String, String, Long)]]
+  private val bpeRulesCache = Memo.cache[(SparkSession, String),
+    Seq[(Int, String, String, Long)]]("p.bpe")
 
   def p16BpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1001,13 +971,12 @@ object TextAnalysis {
     * consumer.
     */
   private def dupSpanIndex(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(dupSpanCache, (spark, dir)) {
+    dupSpanCache.getOrBuild((spark, dir)) {
       dupSpansPlan(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val dupSpanCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val dupSpanCache = Memo.frames("p.spans")
 
   private def dupSpansPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1394,7 +1363,7 @@ object TextAnalysis {
     * novelty is measured against exactly that freeze).
     */
   private[graft] def trainVocab(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(trainVocabCache, (spark, dir)) {
+    trainVocabCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       Tables.documents(spark, dir)
         .select(toks($"text").as("t"), SplitBucket.as("b"))
@@ -1404,8 +1373,7 @@ object TextAnalysis {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val trainVocabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val trainVocabCache = Memo.frames("p.vocab")
 
   /** The frozen train vocabulary as a serialized bloom sketch over
     * xxhash64(tok) longs (1 % fp) — the constant-size model row the
@@ -1751,7 +1719,7 @@ object TextAnalysis {
     * un-memoized: it IS the benchmark of the fingerprint pass.
     */
   private def winnowFpIndex(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(winnowFpCache, (spark, dir)) {
+    winnowFpCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       // distinct HASHES per doc: the packed sel dedupes (hash, pos)
       // pairs, so the same hash selected at two positions must collapse
@@ -1772,8 +1740,7 @@ object TextAnalysis {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val winnowFpCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val winnowFpCache = Memo.frames("p.winnow")
 
   def p18FingerprintOverlap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1850,8 +1817,7 @@ object TextAnalysis {
     pplScored(spark, dir).orderBy($"doc_id")
   }
 
-  private val pplCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val pplCache = Memo.frames("p.ppl")
 
   /** p22's scored frame in DuckDB SQL (no presentation sort) — p22's
     * oracle appends ORDER BY; s21's survivor oracle embeds it as the
@@ -1888,7 +1854,7 @@ object TextAnalysis {
     * stage each pay it once without this.
     */
   private[pipeline] def pplScored(spark: SparkSession,
-      dir: String): DataFrame = graft.Memo.getOrBuild(pplCache, (spark, dir)) {
+      dir: String): DataFrame = pplCache.getOrBuild((spark, dir)) {
     import spark.implicits._
     val tk = Tables.documents(spark, dir)
       .select($"doc_id", toks($"text").as("t"), SplitBucket.as("b"))
@@ -1996,11 +1962,10 @@ object TextAnalysis {
     * hashed-feature property — and broadcasts (or collapses to one
     * row for the stream).
     */
-  private val dsirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val dsirCache = Memo.cache[(SparkSession, String), DataFrame]("p.dsir")
 
   private[graft] def dsirModel(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(dsirCache, (spark, dir)) {
+    dsirCache.getOrBuild((spark, dir)) {
       dsirModelBuild(spark, dir)
     }
 
@@ -2087,10 +2052,10 @@ object TextAnalysis {
     */
   private def rdivL(a: Long, b: Long): Long = Math.floorDiv(2 * a + b, 2 * b)
 
-  private val qcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, Long, Long)]
-  private val qcModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Long]]
+  private val qcCache = Memo.cache[(SparkSession, String),
+    (DataFrame, DataFrame, Long, Long)]("p.qc", Memo.unpersist)
+  private val qcModelCache = Memo.cache[(SparkSession, String), Array[Long]](
+    "p.qcModel")
 
   /** p24's persisted training frames: `occ` (doc_id, bkt, k) — the
     * per-doc hashed-bigram counts, text-free — and `lab` (doc_id, n,
@@ -2102,7 +2067,7 @@ object TextAnalysis {
     */
   private def qcFrames(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Long, Long) =
-    graft.Memo.getOrBuild(qcCache, (spark, dir)) {
+    qcCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       val lev = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val occ = Tables.documents(spark, dir)
@@ -2142,7 +2107,7 @@ object TextAnalysis {
     * documents).
     */
   private[graft] def qcModel(spark: SparkSession, dir: String): Array[Long] =
-    graft.Memo.getOrBuild(qcModelCache, (spark, dir)) {
+    qcModelCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       val (occ, lab, n1, n0) = qcFrames(spark, dir)
       // class-balanced GD divides by BOTH class counts; an

@@ -191,15 +191,14 @@ object Corpus {
     * deployment this is simply the written document table.
     */
   def corpus(spark: SparkSession, dir: String): DataFrame =
-    Memo.getOrBuild(cache, (spark, dir)) {
+    cache.getOrBuild((spark, dir)) {
       val c = structured(spark, dir).unionByName(unstructured(spark, dir),
         allowMissingColumns = true)
       c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       c
     }
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cache = Memo.frames("r.corpus")
 
   /** Materialized BM25 corpus statistics over every BM25-scored field
     * (the ingest-time path, [[CorpusStats]]): built ONCE per (session,
@@ -209,40 +208,23 @@ object Corpus {
     * additively (CorpusStatsSpec proves batch merge = rebuild).
     */
   def stats(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    Memo.getOrBuild(statsCache, (spark, dir)) {
+    statsCache.getOrBuild((spark, dir)) {
       val (f, t) = CorpusStats.build(corpus(spark, dir), DocSchema.scoredFields)
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       (f.persist(lvl), t.persist(lvl))
     }
 
-  private val statsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val statsCache = Memo.cache[(SparkSession, String), (DataFrame, DataFrame)](
+    "r.stats", Memo.unpersist)
 
   /** Release the memoized corpus and stats tables (see
-    * [[graft.pipeline.Dedup.invalidateCaches]] for the policy: the
-    * caches are session-lived with no staleness detection, so callers
-    * invalidate explicitly when source data changes or between
-    * unrelated workloads).
+    * [[graft.pipeline.Dedup.invalidateCaches]] for the policy), and with
+    * them the BM25 accept sets, stats rows and query vectors derived
+    * from the same tables, so a rebuilt vocabulary or a rewritten
+    * embeddings table never serves stale entries.
     */
-  def invalidateCaches(): Unit = {
-    cache.keys.foreach(k => cache.remove(k).foreach(_.unpersist()))
-    statsCache.keys.foreach(k => statsCache.remove(k).foreach { case (f, t) =>
-      f.unpersist(); t.unpersist()
-    })
-    // the fuzzy accept sets derive from the stats tables — drop them
-    // together so a rebuilt vocabulary can never serve stale variants
-    Bm25.invalidateAcceptCache()
-    // ditto the memoized query-vector lookups (same source tables)
-    RassQueries.invalidateQvCache()
-  }
-
-  /** Populated session memos — the bench's per-query cold/warm marker
-    * (see [[graft.pipeline.Dedup.warmMemoNames]]).
-    */
-  private[graft] def warmMemoNames: Seq[String] = Seq(
-    "r.corpus" -> cache.nonEmpty,
-    "r.stats" -> statsCache.nonEmpty,
-  ).collect { case (n, true) => n }
+  def invalidateCaches(): Unit =
+    Memo.invalidate("r.corpus", "r.stats", "r.bm25", "r.qv")
 
   // ------------------------------------------------------------- sql side
 

@@ -351,7 +351,7 @@ final class RassEngine(
   private lazy val effectiveStats: Option[(DataFrame, DataFrame)] =
     stats.orElse {
       val key = (docs.sparkSession, docs.queryExecution.analyzed.canonicalized)
-      Some(graft.Memo.getOrBuild(RassEngine.builtStatsCache, key) {
+      Some(RassEngine.builtStatsCache.getOrBuild(key) {
         val (f, t) = CorpusStats.build(docs, DocSchema.scoredFields)
         val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         (f.persist(lvl), t.persist(lvl))
@@ -587,28 +587,7 @@ object RassEngine {
   /** Built-stats sharing across engine instances: keyed by the corpus
     * plan's canonicalized form within a session (see `effectiveStats`).
     */
-  private[rass] val builtStatsCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-        (DataFrame, DataFrame)]
-
-  /** Release the shared built-stats tables (the policy of
-    * [[graft.pipeline.Dedup.invalidateCaches]]: session-lived caches
-    * are invalidated explicitly when corpora change or between
-    * unrelated workloads).
-    */
-  def invalidateStatsCache(): Unit = {
-    builtStatsCache.keys.foreach(k =>
-      builtStatsCache.remove(k).foreach { case (f, t) =>
-        f.unpersist(); t.unpersist()
-      })
-    // accept sets derive from the stats tables — same lifetime
-    Bm25.invalidateAcceptCache()
-  }
-
-  /** Populated session memos — the bench's per-query cold/warm marker
-    * (see [[graft.pipeline.Dedup.warmMemoNames]]).
-    */
-  private[graft] def warmMemoNames: Seq[String] =
-    if (builtStatsCache.nonEmpty) Seq("r.builtStats") else Nil
+  private[rass] val builtStatsCache = graft.Memo.cache[
+    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
+    (DataFrame, DataFrame)]("r.builtStats", graft.Memo.unpersist)
 }

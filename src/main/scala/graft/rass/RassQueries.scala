@@ -21,19 +21,11 @@ object RassQueries {
   // re-run a parquet job per call. ~1 KB per entry. Cleared by
   // [[Corpus.invalidateCaches]]: a re-ingest that rewrites the
   // embeddings table must not keep serving the pre-rewrite vector.
-  private val qvCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), Seq[Double]]
-
-  private[rass] def invalidateQvCache(): Unit = qvCache.clear()
-
-  /** Populated session memo — bench cold/warm telemetry (see
-    * [[graft.pipeline.Dedup.warmMemoNames]]).
-    */
-  private[graft] def warmMemoNames: Seq[String] =
-    if (qvCache.nonEmpty) Seq("r.qv") else Nil
+  private val qvCache =
+    graft.Memo.cache[(SparkSession, String, Long), Seq[Double]]("r.qv")
 
   private def qv(spark: SparkSession, dir: String, vecId: Long = 0): Seq[Double] =
-    graft.Memo.getOrBuild(qvCache, (spark, dir, vecId)) {
+    qvCache.getOrBuild((spark, dir, vecId)) {
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") === vecId).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble)

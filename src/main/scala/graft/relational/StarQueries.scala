@@ -522,20 +522,6 @@ object StarQueries {
       .orderBy($"cohort_type", $"week_offset")
   }
 
-  /** Release the memoized q14 ranged projection (and only it). */
-  def invalidateCaches(): Unit = {
-    graft.RangedPrefix.invalidateCaches("q14:")
-    graft.RangedPrefix.invalidateCaches("q28")
-    rfmCache.keys.foreach(k => rfmCache.remove(k).foreach(_.unpersist()))
-  }
-
-  /** Populated session memos — the bench's per-query cold/warm marker
-    * (see [[graft.pipeline.Dedup.warmMemoNames]]). Ranged-prefix
-    * projections (q14/q28) surface via `RangedPrefix.warmKeys`.
-    */
-  private[graft] def warmMemoNames: Seq[String] =
-    if (rfmCache.nonEmpty) Seq("q.rfm") else Nil
-
   /** SQL-standard NTILE(k) in closed form from a 1-based global rank:
     * with n rows, the first `n % k` buckets hold `n/k + 1` rows and the
     * rest hold `n/k` (what Spark's `ntile` and DuckDB's `NTILE` both
@@ -586,7 +572,7 @@ object StarQueries {
     * rebuild it (4 full scans at 100 TB for one |users|-sized frame).
     */
   private def rfmUsers(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.getOrBuild(rfmCache, (spark, dir)) {
+    rfmCache.getOrBuild((spark, dir)) {
       import spark.implicits._
       Tables.events(spark, dir)
         .groupBy($"user_id")
@@ -595,8 +581,7 @@ object StarQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val rfmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val rfmCache = graft.Memo.frames("q.rfm")
 
   /** q28 — RFM user segmentation over the event stream: the classic
     * recency/frequency/monetary quintile grid (each user bucketed 1-5

@@ -71,7 +71,7 @@ class PlanAuditSpec extends SparkSpec {
     graft.pipeline.Dedup.invalidateCaches()
     graft.pipeline.Similarity.invalidateCaches()
     graft.pipeline.TextAnalysis.invalidateCaches()
-    graft.pipeline.Multimodal.invalidateCaches()
+    Memo.invalidate("m.")
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
       val bad = filtersOf(qe.sparkPlan)

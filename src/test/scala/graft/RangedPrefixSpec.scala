@@ -70,6 +70,6 @@ class RangedPrefixSpec extends SparkSpec {
           if w.partitionSpec.isEmpty => w
     }
     assert(global.isEmpty, "the helper exists to avoid exactly this")
-    RangedPrefix.invalidateCaches()
+    Memo.invalidate("rp:spec:")
   }
 }

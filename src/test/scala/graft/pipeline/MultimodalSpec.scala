@@ -291,7 +291,7 @@ class MultimodalSpec extends SparkSpec {
       // plant a distinguishable artifact under the SAME fingerprint: a
       // cold session (memo invalidated) must serve the published table,
       // not silently re-run the pair derivation + contraction
-      Multimodal.invalidateCaches()
+      graft.Memo.invalidate("m.")
       Seq((-1L, -2L)).toDF("id", "label")
         .write.mode("overwrite").parquet(path)
       putFingerprint(path, fp)
@@ -301,14 +301,14 @@ class MultimodalSpec extends SparkSpec {
         s"cold read must come from the disk artifact, got ${planted.take(5)}")
       // corrupt the fingerprint: the reader must REBUILD rather than
       // serve clusters for data it wasn't built from
-      Multimodal.invalidateCaches()
+      graft.Memo.invalidate("m.")
       putFingerprint(path, "stale-source-data")
       val rebuilt = Multimodal.mediaClusterLabels(spark, sfDir).collect()
         .map(r => (r.getAs[Long]("id"), r.getAs[Long]("label"))).toSet
       assert(rebuilt == truth, "stale artifact must not be served")
     } finally {
       // leave a correct published artifact for later suites
-      Multimodal.invalidateCaches()
+      graft.Memo.invalidate("m.")
       Multimodal.m06MediaClusters(spark, sfDir).collect()
     }
   }

@@ -511,6 +511,25 @@ class TextAnalysisSpec extends SparkSpec {
       s"interval-persist diverged: $interval vs $never")
   }
 
+  test("p16 interval-persist releases every layer when a layer's count throws") {
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cached
+    var filled = 0
+    // the second layer fills its blocks, then its count fails: the
+    // layer it was about to replace AND the layer itself must go
+    intercept[IllegalStateException] {
+      TextAnalysis.trainBpe(spark, sfDir, merges = 12, persistEvery = 4,
+        materialize = { df =>
+          df.count()
+          filled += 1
+          if (filled == 2) throw new IllegalStateException("injected count failure")
+        })
+    }
+    assert(filled == 2)
+    assert(cached == before,
+      s"persisted BPE layers outlived the failed training: ${cached -- before}")
+  }
+
   test("p17 winnowing equals a reference implementation, density in bounds") {
     import org.apache.spark.sql.functions.col
     val (k, w) = (TextAnalysis.WinnowK, TextAnalysis.WinnowW)
