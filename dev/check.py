@@ -10,7 +10,9 @@ NOT part of the shipped library — developer tooling only.
 """
 import json
 import math
+import shutil
 import sys
+import tempfile
 
 import duckdb
 
@@ -40,7 +42,18 @@ def canon(rows, cols):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    # a spill directory lets the large oracles (x11 at sf0.01) page to
+    # disk instead of failing with "failed to pin block"
+    spill = tempfile.mkdtemp(prefix="check-duckdb-")
+    try:
+        sys.exit(run(sf_dir, out_dir, spill))
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def run(sf_dir, out_dir, spill):
     con = duckdb.connect()
+    con.sql(f"SET temp_directory='{spill}'")
     con.sql("SET TimeZone='UTC'")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -70,7 +83,8 @@ def main():
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
     print(f"== {n_pass} pass / {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    con.close()
+    return 1 if n_fail else 0
 
 
 if __name__ == "__main__":

@@ -1,7 +1,13 @@
 package graft.rass
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import query._
 import ingest.DocumentFetch
@@ -78,14 +84,22 @@ final class InMemoryChatStore extends ChatStore {
 }
 
 /** Durable messages table as parquet (the Spark-native stand-in for the
-  * reference's Postgres `Message` table): appends are small atomic
-  * parquet writes, history is a chatId-filtered read of the last n
-  * messages — both survive process restarts, so a new engine on the
-  * same path continues the conversation (SURVEY §7.1 P6).
+  * reference's Postgres `Message` table); both operations survive
+  * process restarts, so a new engine on the same path continues the
+  * conversation (SURVEY §7.1 P6).
   *
-  * Appends are one small file per message, so a busy deployment would
-  * accumulate files without bound and history() would pay an
-  * ever-growing listing; once the file count passes
+  *   - `append` writes ONE parquet part per message on the driver,
+  *     through the same `OutputWriter` a Spark write task uses (so the
+  *     file format is unchanged) and runs no Spark job. The part is
+  *     written under a hidden `_append-` name and renamed into place,
+  *     so readers only ever see whole parts; a part left hidden by a
+  *     killed append is deleted by the next append's recovery.
+  *   - `history` is ONE Spark job: the chatId-filtered last-n scan. The
+  *     schema is given and the scan's file index is the store's own
+  *     race-checked listing, so no schema-inference or listing job runs
+  *     however many parts the table holds.
+  *
+  * Parts accumulate one per message; once their count passes
   * `compactAfterFiles`, the table is rewritten into a few
   * chatId-clustered, createdAt-sorted files and promoted with the same
   * staged double-rename as [[ingest.IngestCommit]] (a crash at any
@@ -94,22 +108,42 @@ final class InMemoryChatStore extends ChatStore {
   */
 final class ParquetChatStore(spark: SparkSession, path: String,
     compactAfterFiles: Int = 64) extends ChatStore {
+  import ParquetChatStore._
 
-  private type HPath = org.apache.hadoop.fs.Path
   private def fs = new HPath(path).getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
+  private lazy val toRow = Encoder.createSerializer()
+
   override def append(m: ChatMessage): Unit = synchronized {
-    import spark.implicits._
     recover()
-    Seq(m).toDF().write.mode("append").parquet(path)
+    writePart(m)
     maybeCompact()
+  }
+
+  /** One single-row part, written where a write task would write it:
+    * `ParquetFileFormat.prepareWrite` configures the job exactly as a
+    * DataFrame write does, and its factory's writer lands the file.
+    */
+  private def writePart(m: ChatMessage): Unit = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sparkContext.hadoopConfiguration)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, Schema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val hidden = new HPath(path, HiddenPrefix + name)
+    val writer = factory.newInstance(hidden.toString, Schema, ctx)
+    try writer.write(toRow(m)) finally writer.close()
+    if (!fs.rename(hidden, new HPath(path, name)))
+      throw new java.io.IOException(s"could not publish chat part $hidden")
   }
 
   /** Crash recovery, same contract as IngestCommit: a kill between a
     * compaction's two renames leaves the table at `_old` — restore it;
     * a leftover staging is an unpromoted rewrite of data still fully
-    * present in the live table — discard it.
+    * present in the live table — discard it; a hidden part is an
+    * append killed before its rename — discard it too.
     *
     * Destructive (deletes staging, renames), so it runs ONLY on the
     * append path, which the single-WRITER-per-path contract already
@@ -123,19 +157,56 @@ final class ParquetChatStore(spark: SparkSession, path: String,
     if (!fs.exists(target) && fs.exists(retired)) fs.rename(retired, target)
     val staging = new HPath(path + "_staging")
     if (fs.exists(staging)) fs.delete(staging, true)
+    if (fs.exists(target))
+      fs.listStatus(target).filter(_.getPath.getName.startsWith(HiddenPrefix))
+        .foreach(s => fs.delete(s.getPath, false))
   }
 
   private def maybeCompact(): Unit = {
-    val nFiles = fs.listStatus(new HPath(path))
-      .count(_.getPath.getName.endsWith(".parquet"))
-    if (nFiles > compactAfterFiles) {
-      spark.read.parquet(path)
+    val dir = new HPath(path)
+    val parts = liveParts(dir)
+    if (parts.length > compactAfterFiles) {
+      scan(dir, parts)
         .repartitionByRange(col("chatId"), col("createdAt"))
         .sortWithinPartitions(col("chatId"), col("createdAt"))
         .write.mode("overwrite").parquet(path + "_staging")
       ingest.IngestCommit.swapIn(fs, path)
     }
   }
+
+  /** The committed parts under `dir`, snapshotted OURSELVES: Spark's
+    * file-index listing (InMemoryFileIndex/HadoopFSUtils) tolerates a
+    * path vanishing mid-list — it logs "Was it deleted very recently?"
+    * and SKIPS it — so a compaction rename racing it could silently
+    * serve HALF a conversation. A plain fs.listStatus is stat-per-entry
+    * and silently TRUNCATES under the same race, so this goes through
+    * listComplete, which cross-checks the stat count against the raw
+    * name enumeration and throws the FileNotFound that pathGone retries
+    * instead of returning a partial listing.
+    */
+  private def liveParts(dir: HPath): Array[FileStatus] =
+    graft.pipeline.ArtifactStore.listComplete(fs, dir).filter { s =>
+      val name = s.getPath.getName
+      name.endsWith(".parquet") && !name.startsWith(HiddenPrefix)
+    }
+
+  /** A scan of exactly `parts`: the message schema is given and the
+    * file index serves `parts` as the listing of `dir`, so building the
+    * frame lists nothing and infers nothing — the scan's own job is the
+    * only one.
+    */
+  private def scan(dir: HPath, parts: Array[FileStatus]): DataFrame = {
+    val snapshot = new FileStatusCache {
+      override def getLeafFiles(p: HPath) = Some(parts)
+      override def putLeafFiles(p: HPath, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, Seq(dir), Map.empty, Some(Schema),
+      snapshot, Some(PartitionSpec.emptySpec), None)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), Schema,
+      None, new ParquetFileFormat(), Map.empty)(spark))
+  }
+
   override def history(chatId: String, n: Int = 10): Seq[ChatMessage] = synchronized {
     import spark.implicits._
     // read-only recovery: after a crash between the compaction renames
@@ -143,33 +214,22 @@ final class ParquetChatStore(spark: SparkSession, path: String,
     // repair (rename/delete) to the writer so a reader instance can
     // never destroy a concurrent compaction's staging directory
     def attempt(): Seq[ChatMessage] = {
-      val readPath =
+      val dir =
         if (!fs.exists(new HPath(path)) && fs.exists(new HPath(path + "_old")))
-          path + "_old"
-        else path
-      // Snapshot the file listing OURSELVES and scan those exact files:
-      // Spark's file-index listing (InMemoryFileIndex/HadoopFSUtils)
-      // tolerates a path vanishing mid-list — it logs "Was it deleted
-      // very recently?" and SKIPS it, even for explicitly named files —
-      // so a compaction rename racing the scan could silently serve
-      // HALF a conversation. A plain fs.listStatus is stat-per-entry
-      // and silently TRUNCATES under the same race, so route through
-      // listComplete, which cross-checks the stat count against the
-      // raw name enumeration and throws the FileNotFound that pathGone
-      // retries instead of returning a partial listing.
-      val partStatuses =
-        graft.pipeline.ArtifactStore.listComplete(fs, new HPath(readPath))
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.toString)
+          new HPath(path + "_old")
+        else new HPath(path)
+      val parts = liveParts(dir)
       // RawLocalFileSystem can win its exists() probe and then lose the
       // File.length() call to the rename — java.io.File.length() reports
       // a MISSING file as 0, so the race materializes as a zero-length
       // FileStatus, not an exception. A committed parquet part is never
       // 0 bytes (writers rename in complete files), so zero length IS
-      // the race — reclassify it as the FileNotFound it really is.
-      if (partStatuses.exists(_.getLen == 0L))
+      // the race — reclassify it as the FileNotFound it really is (the
+      // file index would otherwise plan no splits for it and the scan
+      // would serve a partial conversation).
+      if (parts.exists(_.getLen == 0L))
         throw new java.io.FileNotFoundException(
-          s"zero-length parquet part under $readPath (rename race)")
-      val parts = partStatuses.map(_.getPath.toString)
+          s"zero-length parquet part under $dir (rename race)")
       if (parts.isEmpty) Seq.empty
       else {
         // last-n pushed into the scan (TakeOrderedAndProject after the
@@ -181,29 +241,7 @@ final class ParquetChatStore(spark: SparkSession, path: String,
         // desc order keeps an exchange's halves together) and the final
         // ascending render (user line before its answer).
         val roleRank = when(col("role") === "user", 0).otherwise(1)
-        val df = spark.read.parquet(parts: _*)
-        // The eager file index is what the scan will actually read, and
-        // it degrades under the same race two different ways, neither an
-        // exception: a file that vanished between our listing and its
-        // own is logged ("Was it deleted very recently?") and SKIPPED,
-        // and a file whose stat lost the length call to the rename is
-        // kept at length 0 — which plans NO scan splits. Either way the
-        // scan silently serves a PARTIAL conversation; surface both as
-        // the classified FileNotFound they really are so the retry
-        // re-resolves the moved table.
-        val indexedLens = df.queryExecution.analyzed.collect {
-          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            lr.relation match {
-              case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                h.location.listFiles(Nil, Nil).flatMap(_.files.map(_.getLen))
-              case _ => Nil
-            }
-        }.flatten
-        if (indexedLens.length != parts.length || indexedLens.contains(0L))
-          throw new java.io.FileNotFoundException(
-            s"file index saw ${indexedLens.count(_ > 0L)} complete of " +
-              s"${parts.length} listed files under $readPath (rename race)")
-        df.as[ChatMessage]
+        scan(dir, parts).as[ChatMessage]
           .filter(col("chatId") === chatId)
           .orderBy(col("createdAt").desc, roleRank.desc)
           .limit(n)
@@ -216,10 +254,10 @@ final class ParquetChatStore(spark: SparkSession, path: String,
     catch {
       // Two distinct disappearances land here:
       //   - first message of the first chat: the table doesn't exist
-      //     yet (planning-time PATH_NOT_FOUND) — the retry re-resolves,
-      //     fails the same way, and returns empty;
+      //     yet (the listing throws FileNotFound) — the retry
+      //     re-resolves, fails the same way, and returns empty;
       //   - a concurrent writer's recover()/compaction renamed the
-      //     table between our exists-probe and the scan (scan-time
+      //     table between our listing and the scan (scan-time
       //     FileNotFound buried in a SparkException): the data MOVED,
       //     it didn't vanish — the retry re-resolves the live path and
       //     serves it. Only if the second attempt ALSO finds nothing is
@@ -232,10 +270,16 @@ final class ParquetChatStore(spark: SparkSession, path: String,
 }
 
 object ParquetChatStore {
-  /** Does this failure (anywhere in its cause chain) mean the path we
-    * resolved is no longer there — as opposed to corrupt data, a bad
-    * schema, or any other real error that must propagate?
+  /** Name prefix of a part still being written; Spark's own listings
+    * skip `_`-prefixed files too.
     */
+  private val HiddenPrefix = "_append-"
+
+  private val Encoder = ExpressionEncoder[ChatMessage]()
+
+  /** The table's schema, exactly what `Seq(m).toDF()` writes. */
+  private val Schema: StructType = Encoder.schema
+
   /** Disambiguates FileUtil.list's File.list()==null misreports: the
     * rename race either leaves the path absent or puts it back whole
     * (a fresh enumeration succeeds); a real EACCES leaves it present
@@ -248,6 +292,10 @@ object ParquetChatStore {
         new java.io.File(path).list() != null
     } catch { case _: java.nio.file.InvalidPathException => false }
 
+  /** Does this failure (anywhere in its cause chain) mean the path we
+    * resolved is no longer there — as opposed to corrupt data, a bad
+    * schema, or any other real error that must propagate?
+    */
   private[graft] def pathGone(t: Throwable): Boolean =
     if (t == null) false
     else t match {
@@ -519,9 +567,14 @@ final class RassEngine(
 
     // DOCUMENT_FETCH consumes the collapse result three ways (hit list,
     // fallback checks, file-identity projection) — cache it so those are
-    // reads of one execution, not three runs of the scan+window plan
-    if (intent == Intent.DocumentFetch) hitsDf.persist()
-    val collected = hitsDf.collect()
+    // reads of one execution, not three runs of the scan+window plan.
+    // The finally covers the first collect too: a scan that throws must
+    // not strand the persisted plan.
+    val fetch = intent == Intent.DocumentFetch
+    if (fetch) hitsDf.persist()
+    val (collected, fetchAnswer) =
+      try (hitsDf.collect(), if (fetch) documentFetchAnswer(hitsDf, patient) else "")
+      finally if (fetch) hitsDf.unpersist()
     val hits: Seq[(String, Double)] = intent match {
       case Intent.Aggregate =>
         collected.map(r => (s"${r.getString(0)}=${r.get(1)}", r.getLong(2).toDouble)).toSeq
@@ -545,10 +598,7 @@ final class RassEngine(
     }
     intent match {
       case Intent.DocumentFetch =>
-        val answer =
-          try documentFetchAnswer(hitsDf, patient)
-          finally hitsDf.unpersist()
-        return jsonAnswer(answer)
+        return jsonAnswer(fetchAnswer)
       case Intent.Aggregate =>
         return jsonAnswer(aggregateAnswer(collected.toSeq))
       case _ => ()

@@ -245,6 +245,34 @@ class EngineSpec extends SparkSpec {
     assert(hybrid.intent == Intent.Hybrid && hybrid.hits.nonEmpty)
   }
 
+  test("a DOCUMENT_FETCH whose scan throws releases its persisted plan") {
+    corpus.count() // the shared corpus cache is filled before the baseline
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val storedBefore = stored
+    // patient resolution never reads file_path, so the ask gets as far
+    // as the fetch's own collect, which does
+    val broken = udf((_: String) =>
+      (throw new IllegalStateException("injected scan failure")): String)
+    val docs = corpus.withColumn("file_path", broken(col("file_path")))
+    val query = "Fetch the medical records for alice johnson"
+    val e = intercept[Exception](new RassEngine(docs,
+      nowMicros = () => 1748736000000000L).ask(query, "u1", "c1"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected scan failure")), e)
+    // the plan ask() persisted, rebuilt from the same inputs: a failed
+    // build leaves no blocks for storage info to show, so the cache
+    // manager is what must have let it go
+    val ner = new RuleNer()
+    val hits = graft.rass.Searches.q12DocumentFetch(docs,
+      PatientResolver.resolve(docs, ner, query).get._2.head, graft.rass.Searches.DefaultK,
+      EntityFilters.compile(ner.extract(query)))
+    val stranded = spark.sharedState.cacheManager.lookupCachedData(
+      hits.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    assert(!stranded, "the failed fetch left its plan registered for caching")
+    assert((stored -- storedBefore).isEmpty,
+      s"the failed fetch left cached blocks ${stored -- storedBefore}")
+  }
+
   private def fixedIntent(i: Intent): IntentClassifier =
     new IntentClassifier { override def classify(query: String): Intent = i }
 
