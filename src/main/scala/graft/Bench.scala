@@ -2,8 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Bench main — driver contract: ONE JSON line on stdout,
-  * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
+/** Bench main — output contract: the LAST stdout line is one JSON
+  * record, `{"metric":"total_min","value":…,"unit":"sec",…,"queries":{…}}`,
+  * with `queries` mapping each query's short id to its best time in
+  * seconds. A full-resolution line (full names, max times, per-run
+  * attribution, `sf`) precedes it and is also written to
+  * `bench_detail_<sf>_c<cpus>.json`.
   *
   * Each registered query is fully materialized through the noop sink
   * (count() would let Catalyst prune scored columns away), run TWICE,
@@ -383,30 +387,27 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] detail file write failed: ${e.getMessage}")
     }
-    // and a compact min-only record as the FINAL line: the archival
-    // tail is bounded, and the suite keeps growing — this line alone
-    // carries everything cross-round comparison needs (total + per-
-    // query mins), so it survives even when the full line above no
-    // longer fits the tail (VERDICT r7 asked for exactly this shape).
-    // Keys are the unique suite short ids (the token before the first
-    // '_': d01, s03, x02 — names are ~17.5 chars on average, the ids 3,
-    // and the id IS the cross-round identity), values 3-decimal (1 ms,
-    // far below noise): 65 queries fit in ~0.9 kB and a projected
-    // 80-query suite in ~1.1 kB, inside the 2000-char tail with room
-    // to spare (VERDICT r9 asked for exactly this headroom)
+    // and a compact min-only record as the FINAL line: the harness
+    // that runs the bench keeps only the last 2,000 characters of
+    // stdout, so this line alone carries what cross-round comparison
+    // needs — total and per-query mins under the contract's "queries"
+    // key — and stays under ~1,800 characters. Keys are the unique
+    // suite short ids (the token before the first '_': d01, s03, x02 —
+    // the id IS the cross-round identity), values in seconds to 10 ms:
+    // 145 queries take ~1.6 kB. The sf path, the sentinel/floor spreads
+    // and 0.1 ms times stay in the full line and the detail file.
     val shortId = {
       val ids = results.map { case (n, _) => n -> n.takeWhile(_ != '_') }
       val dup = ids.groupBy(_._2).collect { case (s, g) if g.size > 1 => s }.toSet
       ids.map { case (n, s) => n -> (if (dup(s)) n else s) }.toMap
     }
-    val qsMin = jsonMap(results.map { case (n, v) => shortId(n) -> v }, 1000)
+    val qsMin = jsonMap(results.map { case (n, v) => shortId(n) -> v }, 100)
     // the compact line carries the ADJUDICATED summary: failures by
     // name (empty on a healthy run) + the uncovered-new count — the
-    // verdict a judge reads first, inside the bounded stdout tail.
-    // sent/floor spreads ride along so a contended run self-identifies
-    // even when only the tail survives.
+    // verdict a judge reads first, inside the bounded stdout tail —
+    // and the contention factor, so a contended run self-identifies.
     val compact =
-      s"""{"metric":"total_min","value":${r4(total)},"unit":"sec","sf":"${jesc(sfDir)}","contention":$contention,"floor":${r4(floorMedian)},"sent_spread":${spread(sentinel)},"floor_spread":${spread(floorSent)},"box_scale":${r4(boxScale)},"band_fail":${jsonNames(bandFail)},"band_new_count":${bandNew.size},"queries_min":$qsMin}"""
+      s"""{"metric":"total_min","value":${r4(total)},"unit":"sec","contention":$contention,"box_scale":${r4(boxScale)},"band_fail":${jsonNames(bandFail)},"band_new_count":${bandNew.size},"queries":$qsMin}"""
     println(compact)
     // quiesce shutdown logging, stop Spark, then print the compact line
     // ONCE MORE: spark.stop() can emit late stderr lines after the

@@ -1,7 +1,9 @@
 package graft.rass
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.rass.expressions.Bm25Field
 
 /** Deterministic BM25-family scoring over document columns.
   *
@@ -14,28 +16,25 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle. k1 = 1.2, b = 0.75 (textbook defaults).
   *
   * Execution shape (100 TB): per-field stats (N, avgdl, per-term df for
-  * the <=8 query terms) are ONE aggregate row, broadcast back into the
-  * scan as a literal-free cross join — no driver collect, no second
-  * shuffle; per-document tf/dl are computed inline over the token array
-  * in the same scan that evaluates the filter.
+  * the query terms) are ONE small row on the driver — looked up in the
+  * materialized stats tables, or one aggregate collected — from which
+  * the driver computes each field's idf. Each scored field is then one
+  * native `bm25_field` call in the scan's projection, holding the
+  * query's accept sets and parameters as reference objects: no join,
+  * no per-term expression tree, and one generated class per field list
+  * whatever the question; per-document tf/dl come from one pass over
+  * the token array in the same scan that evaluates the filter.
   */
 object Bm25 {
 
   val K1 = 1.2
   val B = 0.75
 
-  /** tf for one term over a token array (exact int) — the native
-    * codegen term_freq expression; count semantics identical to
-    * size(filter(toks, t -> t === term)).
-    */
-  private def tf(toksCol: Column, term: String, fuzz: Int = 0): Column =
-    call_function("term_freq", toksCol, lit(term), lit(fuzz)).cast("double")
-
   /** Default token provider: tokenize the field inline. Searches pass a
     * pretokenized-projection provider instead so each field's token
-    * array is computed once per row, not once per term use —
-    * LambdaFunction trees are non-cheap, so CollapseProject keeps the
-    * projection and downstream uses become column references.
+    * array is computed once per row, not once per use — LambdaFunction
+    * trees are non-cheap, so CollapseProject keeps the projection and
+    * downstream uses become column references.
     */
   val inlineToks: String => Column = f => Analyzer.tokens(col(f))
 
@@ -67,47 +66,51 @@ object Bm25 {
     docs.agg(aggCols.head, aggCols.tail: _*)
   }
 
-  /** The shared BM25 skeleton: per-term idf x saturation over whatever
-    * tf expression the variant supplies. ONE copy of the formula (k1/b,
-    * rational idf, the avgdl>0 ANSI guard, the null-field wrapper) so
-    * the oracle-parity surface is single-sourced across the exact,
-    * fuzzy-scan, and fuzzy-vocab variants.
+  /** One field's BM25 score for the query: a single native
+    * `bm25_field` call over the field's token array, fed by the driver-
+    * side `stats` row (`s_<field>_{n_docs,avgdl,df_<i>}`, from
+    * [[inlineStats]] or [[materializedStats]]). Per term, `sets(i)` is
+    * the term's accept set and `dist(i)` its edit distance (0 = set
+    * membership). The idf is computed here, on the driver, with the
+    * Column formula's arithmetic `(n - df + 0.5) / (df + 0.5)`; a null
+    * field scores 0. The accept sets and the parameters reach the
+    * generated code as reference objects, so the scoring plan's
+    * generated class is the same for every question over these fields.
     */
-  private def scoreWith(field: String, terms: Seq[String], statsPrefix: String,
-      tok: String => Column)(tfFor: (Column, String) => Column): Column = {
-    val toksCol = tok(field)
-    val dl = size(toksCol).cast("double")
-    val avgdl = col(s"${statsPrefix}avgdl")
-    // empty-string fields make avgdl 0; tf is 0 there too, so the term is
-    // 0 either way — the CASE just keeps ANSI mode from raising /0
-    val lnorm = when(avgdl > 0, dl / avgdl).otherwise(lit(0.0))
-    val n = col(s"${statsPrefix}n_docs")
-    val perTerm = terms.zipWithIndex.map { case (t, i) =>
-      val dfT = col(s"${statsPrefix}df_$i")
-      val idf = (n - dfT + lit(0.5)) / (dfT + lit(0.5))
-      val tfT = tfFor(toksCol, t)
-      idf * (tfT * (K1 + 1)) / (tfT + lit(K1) * (lit(1.0) - B + lit(B) * lnorm))
+  private def fieldScore(field: String, sets: Seq[Seq[String]], dist: Seq[Int],
+      stats: Row, tok: String => Column): Column = {
+    def stat(name: String): java.lang.Double =
+      stats.getAs[java.lang.Double](s"s_${field}_$name")
+    val n = stat("n_docs")
+    val idf = sets.indices.map { i =>
+      val df = stat(s"df_$i")
+      if (n == null || df == null) null
+      else java.lang.Double.valueOf((n - df + 0.5) / (df + 0.5))
     }
-    val s = perTerm.reduceOption(_ + _).getOrElse(lit(0.0))
-    when(col(field).isNotNull, s).otherwise(lit(0.0))
+    val params = ((stat("avgdl") +: idf) ++
+      dist.map(d => java.lang.Double.valueOf(d.toDouble))).toArray
+    // a field's tokens are null exactly when the field is; reading the
+    // token column twice keeps CollapseProject from inlining the
+    // tokenizer's lambda into the scoring projection, which would take
+    // that projection out of whole-stage codegen
+    val toks = tok(field)
+    call_function("bm25_field", toks, toks.isNotNull,
+      lit(sets.map(_.toArray).toArray), lit(params))
   }
 
-  /** BM25 score of `field` for the query terms, given the broadcast
-    * stats columns (prefixed). Null field scores 0.
-    */
-  def score(field: String, terms: Seq[String], statsPrefix: String,
+  /** BM25 score of `field` for the query terms (exact match). */
+  def score(field: String, terms: Seq[String], stats: Row,
       tok: String => Column = inlineToks): Column =
-    scoreWith(field, terms, statsPrefix, tok)((toksCol, t) => tf(toksCol, t))
+    fieldScore(field, terms.map(Seq(_)), terms.map(_ => 0), stats, tok)
 
   /** Fuzzy variant (`fuzziness: AUTO`): tf counts tokens within the
     * term's AUTO edit distance (0/1/2 by length; Levenshtein is
     * integer-exact in both engines). df stays exact-term — a
     * deliberate simplification kept identical on both sides.
     */
-  def scoreFuzzy(field: String, terms: Seq[String], statsPrefix: String,
+  def scoreFuzzy(field: String, terms: Seq[String], stats: Row,
       tok: String => Column = inlineToks): Column =
-    scoreWith(field, terms, statsPrefix, tok)((toksCol, t) =>
-      tf(toksCol, t, Analyzer.autoFuzz(t)))
+    fieldScore(field, terms.map(Seq(_)), terms.map(Analyzer.autoFuzz), stats, tok)
 
   /** Fuzzy accept sets from the MATERIALIZED vocabulary: for each
     * (scored field, query term), the vocabulary tokens within the
@@ -119,8 +122,9 @@ object Bm25 {
     * corpus-sized (row x token x term on every scoring scan). At 100 TB
     * the vocabulary is millions of rows where the corpus is trillions
     * of tokens; the resulting sets (typo variants actually present in
-    * the corpus) are a handful of strings, broadcast as literals into
-    * the scan. Same trick as d04's vocab-join, applied to scoring.
+    * the corpus) are a handful of strings, which the scan's
+    * `bm25_field` holds as a literal. Same trick as d04's vocab-join,
+    * applied to scoring.
     *
     * The returned map is TOTAL over (requested field x distinct term):
     * a covered field with no in-distance variants maps to `Nil`
@@ -205,88 +209,79 @@ object Bm25 {
   /** [[scoreFuzzy]] with the per-term fuzzy scan replaced by exact
     * membership in a precomputed accept set ([[fuzzyAcceptSets]]):
     * identical tf (membership count == bounded-distance count), one
-    * codegen'd IN-filter pass per term instead of a Levenshtein band
-    * per token.
+    * hash lookup per token instead of a Levenshtein band per token and
+    * term.
     */
-  def scoreFuzzyVocab(field: String, terms: Seq[String], statsPrefix: String,
+  def scoreFuzzyVocab(field: String, terms: Seq[String], stats: Row,
       accept: Map[(String, String), Seq[String]],
-      tok: String => Column = inlineToks): Column =
-    scoreWith(field, terms, statsPrefix, tok) { (toksCol, t) =>
-      // sum of EXACT counts per accepted variant: the sets are disjoint
-      // tokens, so the counts add to the membership count — and each
-      // term_freq is the native codegen expression, keeping the whole
-      // score inside WholeStageCodegen (a filter() higher-order
-      // function would drop the scan out of codegen)
-      val variants = accept.getOrElse((field, t),
-        // fuzzyAcceptSets maps are total over the fields+terms they
-        // were built for, so a miss means THIS field/term was never
-        // built — scoring it 0 would be a silent relevance regression
-        throw new IllegalStateException(
-          s"no accept set built for ($field, $t); build fuzzyAcceptSets " +
-            "over this field or score it via scoreFuzzy"))
-      if (variants.isEmpty) lit(0.0)
-      else variants.map(v => tf(toksCol, v)).reduce(_ + _)
-    }
+      tok: String => Column = inlineToks): Column = {
+    val sets = terms.map(t => accept.getOrElse((field, t),
+      // fuzzyAcceptSets maps are total over the fields+terms they
+      // were built for, so a miss means THIS field/term was never
+      // built — scoring it 0 would be a silent relevance regression
+      throw new IllegalStateException(
+        s"no accept set built for ($field, $t); build fuzzyAcceptSets " +
+          "over this field or score it via scoreFuzzy")))
+    fieldScore(field, sets, terms.map(_ => 0), stats, tok)
+  }
 
   /** `best_fields` multi_match: max over fields of (BM25 x field boost),
-    * then x clause boost. Stats for all fields must be joined with
-    * per-field prefixes `s_<field>_`. When `accept` is provided, fuzzy
-    * clauses score via the vocabulary accept sets (the materialized-
-    * stats fast path); without it they fall back to the per-row
-    * bounded-Levenshtein scan.
+    * then x clause boost, with every field's stats read from the one
+    * driver-side `stats` row. When `accept` is provided, fuzzy clauses
+    * score via the vocabulary accept sets (the materialized-stats fast
+    * path); without it they fall back to the per-row bounded-Levenshtein
+    * scan.
     */
-  def bestFields(fields: Seq[(String, Double)], terms: Seq[String],
+  def bestFields(fields: Seq[(String, Double)], terms: Seq[String], stats: Row,
       clauseBoost: Double = 1.0, fuzzy: Boolean = false,
       tok: String => Column = inlineToks,
       accept: Option[Map[(String, String), Seq[String]]] = None): Column = {
     val scores = fields.map { case (f, boost) =>
       (if (fuzzy) accept match {
-        case Some(a) => scoreFuzzyVocab(f, terms, s"s_${f}_", a, tok)
-        case None => scoreFuzzy(f, terms, s"s_${f}_", tok)
+        case Some(a) => scoreFuzzyVocab(f, terms, stats, a, tok)
+        case None => scoreFuzzy(f, terms, stats, tok)
       }
-      else score(f, terms, s"s_${f}_", tok)) * boost
+      else score(f, terms, stats, tok)) * boost
     }
     greatest(scores: _*) * clauseBoost
   }
 
-  /** Attach the single broadcast stats row (map-side literal join). */
-  def withStats(docs: DataFrame, fields: Seq[String], terms: Seq[String],
-      tok: String => Column = inlineToks): DataFrame = {
-    graft.rass.expressions.TermFrequency.register(docs.sparkSession)
-    docs.crossJoin(broadcast(allStats(docs, fields, terms, tok)))
+  /** The query's stats from one aggregate over `docs` ([[allStats]]),
+    * collected to the driver, where the scoring expressions read them
+    * as literals.
+    */
+  def inlineStats(docs: DataFrame, fields: Seq[String], terms: Seq[String],
+      tok: String => Column = inlineToks): Row = {
+    Bm25Field.register(docs.sparkSession)
+    allStats(docs, fields, terms, tok).head()
   }
 
-  /** Attach the stats row reconstructed from the MATERIALIZED corpus
-    * statistics ([[CorpusStats]]) instead of re-aggregating the corpus:
-    * the lookup touches |fields| + |fields|x|terms| rows of the (cached
-    * / ingest-maintained) stats tables — no second corpus scan per
-    * query. Stats are corpus-global, matching the reference's
+  /** The query's stats reconstructed from the MATERIALIZED corpus
+    * statistics ([[CorpusStats.statsRow]]) instead of re-aggregating
+    * the corpus: the lookup touches |fields| + |fields|x|terms| rows of
+    * the (cached / ingest-maintained) stats tables — no second corpus
+    * scan per query. Stats are corpus-global, matching the reference's
     * index-global OpenSearch statistics (filters never change scoring
-    * stats there either).
+    * stats there either). Memoized like the accept sets: statsRow runs
+    * two small collect jobs, a fixed per-query latency a repeated query
+    * shouldn't re-pay.
     */
-  def withMaterializedStats(docs: DataFrame, fieldStats: DataFrame,
-      termStats: DataFrame, fields: Seq[String],
-      terms: Seq[String]): DataFrame = {
-    graft.rass.expressions.TermFrequency.register(docs.sparkSession)
-    // the reconstructed one-row stats frame is memoized like the accept
-    // sets: statsRow runs two small collect jobs against the persisted
-    // stats tables, a fixed per-query latency a repeated query (or the
-    // best-of-2 bench) shouldn't re-pay
-    val row = statsRowCache.getOrBuild(
-      (docs.sparkSession, fieldStats.queryExecution.analyzed.canonicalized,
+  def materializedStats(spark: SparkSession, fieldStats: DataFrame,
+      termStats: DataFrame, fields: Seq[String], terms: Seq[String]): Row = {
+    Bm25Field.register(spark)
+    statsRowCache.getOrBuild(
+      (spark, fieldStats.queryExecution.analyzed.canonicalized,
         termStats.queryExecution.analyzed.canonicalized,
         fields.toList, terms.toList)) {
-      CorpusStats.statsRow(docs.sparkSession, fieldStats, termStats,
-        fields, terms)
+      CorpusStats.statsRow(fieldStats, termStats, fields, terms)
     }
-    docs.crossJoin(broadcast(row))
   }
 
   private val statsRowCache = graft.Memo.cache[
-    (org.apache.spark.sql.SparkSession,
+    (SparkSession,
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      List[String], List[String]), DataFrame]("r.bm25Stats")
+      List[String], List[String]), Row]("r.bm25Params")
 
   /** DuckDB oracle fragments mirroring the Column side bit-for-bit. */
   object Sql {

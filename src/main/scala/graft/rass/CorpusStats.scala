@@ -1,6 +1,7 @@
 package graft.rass
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,12 +19,13 @@ import org.apache.spark.sql.types._
   *     the postings).
   *
   * Both come from ONE scan (fields stacked as an array-of-structs, then
-  * exploded). [[statsRow]] reconstructs the exact broadcast row
-  * [[Bm25.score]] consumes — the spec asserts bit-equality with
-  * [[Bm25.allStats]], so a search can swap in the materialized table
-  * with zero scoring drift. Incremental maintenance is additive: df,
-  * n_docs, and sum_dl are all sums, so a new batch's stats merge by
-  * addition (and removal subtracts) without rescanning history.
+  * exploded). [[statsRow]] reconstructs the exact stats row
+  * [[Bm25.bestFields]] reads on the driver — the spec asserts
+  * bit-equality with [[Bm25.allStats]], so a search can swap in the
+  * materialized table with zero scoring drift. Incremental maintenance
+  * is additive: df, n_docs, and sum_dl are all sums, so a new batch's
+  * stats merge by addition (and removal subtracts) without rescanning
+  * history.
   */
 object CorpusStats {
 
@@ -80,13 +82,14 @@ object CorpusStats {
     (fieldStats, termStats)
   }
 
-  /** Reconstruct the one-row broadcast stats frame (column names
-    * `s_<field>_{n_docs,avgdl,df_<i>}`) for a query's fields+terms from
-    * the materialized tables. The lookup touches only |fields| +
-    * |fields|x|terms| rows — no corpus scan.
+  /** Reconstruct the query's stats row (field names
+    * `s_<field>_{n_docs,avgdl,df_<i>}`, the one row [[Bm25.allStats]]
+    * aggregates) on the driver from the materialized tables, for
+    * [[Bm25.bestFields]] to read its idfs and avgdls from. The lookup
+    * touches only |fields| + |fields|x|terms| rows — no corpus scan.
     */
-  def statsRow(spark: SparkSession, fieldStats: DataFrame, termStats: DataFrame,
-      fields: Seq[String], terms: Seq[String]): DataFrame = {
+  def statsRow(fieldStats: DataFrame, termStats: DataFrame,
+      fields: Seq[String], terms: Seq[String]): Row = {
     val fs = fieldStats.filter(col("field").isInCollection(fields))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val ts = termStats
@@ -107,7 +110,6 @@ object CorpusStats {
         StructField(s"s_${f}_avgdl", DoubleType)) ++
         terms.indices.map(i => StructField(s"s_${f}_df_$i", DoubleType))
     })
-    spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(values)), schema)
+    new GenericRowWithSchema(values.toArray, schema)
   }
 }

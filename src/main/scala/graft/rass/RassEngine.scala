@@ -479,14 +479,13 @@ final class RassEngine(
     * patients' raw files and return them as JSON, with the reference's
     * three fallback messages.
     */
-  private def documentFetchAnswer(collapsed: DataFrame,
+  private def documentFetchAnswer(results: Seq[Row],
       patient: Option[(String, Seq[String])]): String = {
-    val results = collapsed.collect()
     if (results.isEmpty) return "No matching documents found."
     if (!results.exists(r => r.getAs[String]("patientId") != null &&
         r.getAs[String]("file_path") != null))
       return "No documents with valid patient ID or file path found."
-    val fetched = DocumentFetch.fetch(collapsed, fetchBaseDir)
+    val fetched = DocumentFetch.fetch(results, fetchBaseDir)
     if (fetched.isEmpty) return "No accessible documents found for the patient."
     val records = fetched.map(d =>
       s"""{"patientId": ${jstr(d.patientId)}, "file_path": ${jstr(d.filePath)}, """ +
@@ -565,16 +564,9 @@ final class RassEngine(
       }
     }
 
-    // DOCUMENT_FETCH consumes the collapse result three ways (hit list,
-    // fallback checks, file-identity projection) — cache it so those are
-    // reads of one execution, not three runs of the scan+window plan.
-    // The finally covers the first collect too: a scan that throws must
-    // not strand the persisted plan.
-    val fetch = intent == Intent.DocumentFetch
-    if (fetch) hitsDf.persist()
-    val (collected, fetchAnswer) =
-      try (hitsDf.collect(), if (fetch) documentFetchAnswer(hitsDf, patient) else "")
-      finally if (fetch) hitsDf.unpersist()
+    // one collect per ask: DOCUMENT_FETCH's hit list, fallback checks
+    // and file-identity projection all read the same <=k collapsed rows
+    val collected = hitsDf.collect()
     val hits: Seq[(String, Double)] = intent match {
       case Intent.Aggregate =>
         collected.map(r => (s"${r.getString(0)}=${r.get(1)}", r.getLong(2).toDouble)).toSeq
@@ -598,7 +590,7 @@ final class RassEngine(
     }
     intent match {
       case Intent.DocumentFetch =>
-        return jsonAnswer(fetchAnswer)
+        return jsonAnswer(documentFetchAnswer(collected.toSeq, patient))
       case Intent.Aggregate =>
         return jsonAnswer(aggregateAnswer(collected.toSeq))
       case _ => ()

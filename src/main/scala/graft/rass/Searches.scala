@@ -1,6 +1,6 @@
 package graft.rass
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,10 @@ import DocSchema._
   * Scale shape of every operator: one scan of the (pruned) corpus
   * computing a score expression inline, then TakeOrderedAndProject for
   * top-k — no join, no shuffle except the single top-k reduction; the
-  * BM25 ones add one broadcast stats row (computed in one aggregate,
-  * at ingest time a materialized corpus-stats table).
+  * BM25 ones first read one small stats row on the driver (a lookup in
+  * the materialized corpus-stats tables, or one aggregate collected)
+  * and score each field with one native `bm25_field` call whose query
+  * terms, accept sets and statistics are runtime parameters.
   */
 object Searches {
 
@@ -63,17 +65,18 @@ object Searches {
     f2.map(docs.filter).getOrElse(docs)
   }
 
-  /** Attach BM25 stats: from the MATERIALIZED corpus-stats tables when
-    * provided (the 100 TB path — no per-query corpus re-aggregate;
-    * bit-equal to the direct aggregate, CorpusStatsSpec), else from one
-    * inline aggregate over the (filtered) docs.
+  /** The query's BM25 stats on the driver: from the MATERIALIZED
+    * corpus-stats tables when provided (the 100 TB path — no per-query
+    * corpus re-aggregate; bit-equal to the direct aggregate,
+    * CorpusStatsSpec), else one inline aggregate over the (filtered)
+    * docs, collected.
     */
-  private def attachStats(docsTok: DataFrame, fields: Seq[String],
+  private def queryStats(docsTok: DataFrame, fields: Seq[String],
       terms: Seq[String], tok: String => Column,
-      stats: Option[(DataFrame, DataFrame)]): DataFrame = stats match {
+      stats: Option[(DataFrame, DataFrame)]): Row = stats match {
     case Some((fs, ts)) =>
-      Bm25.withMaterializedStats(docsTok, fs, ts, fields, terms)
-    case None => Bm25.withStats(docsTok, fields, terms, tok)
+      Bm25.materializedStats(docsTok.sparkSession, fs, ts, fields, terms)
+    case None => Bm25.inlineStats(docsTok, fields, terms, tok)
   }
 
   /** Fuzzy accept sets for the fuzzy-scored fields — only available on
@@ -87,6 +90,14 @@ object Searches {
     stats.map { case (fs, ts) =>
       Bm25.fuzzyAcceptSets(fs, ts, fields.map(_._1), terms)
     }
+
+  /** The window [now - 1y, now] as an `in_window` predicate on `field`:
+    * the bounds reach the generated code as a reference object, so a
+    * moving clock compiles nothing new.
+    */
+  private def withinYear(field: String, nowMicros: Long): Column =
+    call_function("in_window", col(field),
+      lit(Array(nowMicros - 365L * 86400000000L, nowMicros)))
 
   /** Project each scored field's token array once (`__tok_<f>`), so the
     * BM25 stats aggregate and every per-term tf read a column reference
@@ -144,14 +155,14 @@ object Searches {
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
-    val withStats = attachStats(docsTok, fields, terms, tok, stats)
+    val st = queryStats(docsTok, fields, terms, tok, stats)
     val qv = array(queryVec.map(lit): _*)
     val knn = coalesce(VectorOps.cosineFused(docs.sparkSession,
       col("embedding").cast("array<double>"), qv), lit(0.0))
-    val score = Bm25.bestFields(textFields, terms, 1.5, fuzzy = true, tok = tok,
+    val score = Bm25.bestFields(textFields, terms, st, 1.5, fuzzy = true, tok = tok,
       accept = fuzzyAccept(stats, textFields, terms)) +
-      Bm25.bestFields(keywordFields, terms, 1.0, tok = tok) + knn * 2.0
-    topK(withStats.withColumn("score", score), k)
+      Bm25.bestFields(keywordFields, terms, st, 1.0, tok = tok) + knn * 2.0
+    topK(docsTok.withColumn("score", score), k)
   }
 
   /** Q4 — structured_search, INTENDED semantics (`main.py:1617-1708`
@@ -226,9 +237,9 @@ object Searches {
     val terms = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
       compareFields.map(_._1))
-    val withStats = attachStats(docsTok, compareFields.map(_._1), terms, tok, stats)
-    topK(withStats.withColumn("score",
-      Bm25.bestFields(compareFields, terms, fuzzy = true, tok = tok,
+    val st = queryStats(docsTok, compareFields.map(_._1), terms, tok, stats)
+    topK(docsTok.withColumn("score",
+      Bm25.bestFields(compareFields, terms, st, fuzzy = true, tok = tok,
         accept = fuzzyAccept(stats, compareFields, terms))), k)
   }
 
@@ -241,6 +252,7 @@ object Searches {
       k: Int = DefaultK, patientId: Option[String] = None,
       filter: Option[Column] = None): DataFrame = {
     graft.rass.expressions.TermFrequency.register(docs.sparkSession)
+    graft.rass.expressions.InWindow.register(docs.sparkSession)
     val terms = Analyzer.normalizeQuery(query)
     val allText = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), allText)
@@ -249,9 +261,7 @@ object Searches {
         call_function("term_freq", tok(f), lit(t), lit(0)) > 0,
         lit(false))).reduceOption(_ || _).getOrElse(lit(false)))
       .reduce(_ || _)
-    val lo = timestamp_micros(lit(nowMicros - 365L * 86400000000L))
-    val hi = timestamp_micros(lit(nowMicros))
-    val dateOk = dateFields.map(f => col(f).between(lo, hi)).reduce(_ || _)
+    val dateOk = dateFields.map(withinYear(_, nowMicros)).reduce(_ || _)
     docsTok
       .filter(textMatch && dateOk)
       .orderBy(col("conditionOnsetDateTime").desc_nulls_last, col("doc_id"))
@@ -268,9 +278,9 @@ object Searches {
     val terms = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
       noteFields.map(_._1))
-    val withStats = attachStats(docsTok, noteFields.map(_._1), terms, tok, stats)
-    topK(withStats.withColumn("score",
-      Bm25.bestFields(noteFields, terms, fuzzy = true, tok = tok,
+    val st = queryStats(docsTok, noteFields.map(_._1), terms, tok, stats)
+    topK(docsTok.withColumn("score",
+      Bm25.bestFields(noteFields, terms, st, fuzzy = true, tok = tok,
         accept = fuzzyAccept(stats, noteFields, terms))), k)
   }
 
@@ -282,21 +292,20 @@ object Searches {
       nowMicros: Long, k: Int = DefaultK, patientId: Option[String] = None,
       filter: Option[Column] = None,
       stats: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+    graft.rass.expressions.InWindow.register(docs.sparkSession)
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
-    val withStats = attachStats(docsTok, fields, terms, tok, stats)
+    val st = queryStats(docsTok, fields, terms, tok, stats)
     val qv = array(queryVec.map(lit): _*)
     val knn = coalesce(VectorOps.cosineFused(docs.sparkSession,
       col("embedding").cast("array<double>"), qv), lit(0.0))
-    val lo = timestamp_micros(lit(nowMicros - 365L * 86400000000L))
-    val hi = timestamp_micros(lit(nowMicros))
     val dateBonus = dateFields.map(f =>
-      when(col(f).between(lo, hi), lit(0.5)).otherwise(lit(0.0))).reduce(_ + _)
-    val score = Bm25.bestFields(textFields, terms, 1.0, fuzzy = true, tok = tok,
+      when(withinYear(f, nowMicros), lit(0.5)).otherwise(lit(0.0))).reduce(_ + _)
+    val score = Bm25.bestFields(textFields, terms, st, 1.0, fuzzy = true, tok = tok,
       accept = fuzzyAccept(stats, textFields, terms)) +
-      Bm25.bestFields(keywordFields, terms, 0.5, tok = tok) + knn * 1.5 + dateBonus
-    topK(withStats.withColumn("score", score), k)
+      Bm25.bestFields(keywordFields, terms, st, 0.5, tok = tok) + knn * 1.5 + dateBonus
+    topK(docsTok.withColumn("score", score), k)
   }
 
   /** Q11 — entity_specific_search (`main.py:2029-2074`): phrase match

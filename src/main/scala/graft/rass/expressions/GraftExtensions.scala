@@ -29,5 +29,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       { exprs: Seq[Expression] => DotProduct(exprs.head, exprs(1)) }))
+    ext.injectFunction((
+      new FunctionIdentifier("bm25_field"),
+      new ExpressionInfo(classOf[Bm25Field].getName, "bm25_field"),
+      { exprs: Seq[Expression] => Bm25Field(exprs.head, exprs(1), exprs(2), exprs(3)) }))
+    ext.injectFunction((
+      new FunctionIdentifier("in_window"),
+      new ExpressionInfo(classOf[InWindow].getName, "in_window"),
+      { exprs: Seq[Expression] => InWindow(exprs.head, exprs(1)) }))
   }
 }

@@ -2,8 +2,7 @@ package graft.rass.ingest
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
 /** S12 — raw-document fetch (reference `retrieve_ehr_document` +
   * `validate_file_path`, `app/main.py:1324-1392`, caller
@@ -12,9 +11,9 @@ import org.apache.spark.sql.functions._
   * .json/.md/.txt only, non-empty, capped at MAX_FILES_PER_PATIENT(5)
   * (`main.py:108`).
   *
-  * The collapse and the distinct-file projection run on executors; only
-  * the final <=5 small file identities reach the driver for the read —
-  * the same driver-side K-file fetch the reference performs.
+  * The collapse runs on executors; its <=k rows reach the driver once,
+  * where the distinct-file projection, the per-patient cap and the
+  * read run — the same driver-side K-file fetch the reference performs.
   */
 object DocumentFetch {
 
@@ -48,22 +47,22 @@ object DocumentFetch {
       else None
     } catch { case _: Exception => None }
 
-  /** Collapse hits -> distinct (patientId, file_path, file_type) capped
-    * per patient -> driver-side validated read.
+  /** Collapsed hit rows (named fields `patientId`, `file_path`,
+    * `file_type`) -> distinct file identities, at most
+    * [[MaxFilesPerPatient]] per patient by file path -> validated read.
+    * The rows are the <=k the Q12 collapse already brought to the
+    * driver, so the projection and the cap run here, with no Spark job.
     */
-  def fetch(collapsedHits: DataFrame, baseDir: Option[String] = None): Seq[FetchedDoc] = {
+  def fetch(collapsedHits: Seq[Row], baseDir: Option[String] = None): Seq[FetchedDoc] = {
     val files = collapsedHits
-      .select(col("patientId"), col("file_path"), col("file_type"))
-      .filter(col("file_path").isNotNull)
-      .distinct()
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("patientId")).orderBy(col("file_path"))))
-      .filter(col("rn") <= MaxFilesPerPatient)
-      .drop("rn")
-      .collect()
-    files.toSeq.flatMap { r =>
-      val (pid, fp, ft) = (r.getString(0), r.getString(1), r.getString(2))
+      .map(r => (r.getAs[String]("patientId"), r.getAs[String]("file_path"),
+        r.getAs[String]("file_type")))
+      .filter(_._2 != null)
+      .distinct
+      .groupBy(_._1).values.toSeq
+      .flatMap(_.sortBy(_._2).take(MaxFilesPerPatient))
+      .sortBy(f => (Option(f._1), f._2))
+    files.flatMap { case (pid, fp, ft) =>
       validatePath(fp, baseDir).flatMap { p =>
         try {
           val content = Files.readString(p)

@@ -150,18 +150,30 @@ class PlanAuditSpec extends SparkSpec {
   test("fuzzy searches score via vocabulary accept sets — no per-row Levenshtein") {
     // the materialized-stats fuzzy path (r03/r07/r09/r10) computes its
     // accepted typo variants ONCE against the term vocabulary and
-    // scores by exact codegen term_freq membership; a regression that
-    // silently falls back to the bounded-Levenshtein scan would put a
-    // per-(row x token x term) edit-distance band back into every
+    // scores by exact codegen bm25_field set membership; a regression
+    // that silently falls back to the bounded-Levenshtein scan would put
+    // a per-(row x token x term) edit-distance band back into every
     // scoring pass — corpus-sized work at 100 TB. levenshtein() may
-    // only appear in the vocab job, never in a registered scan plan.
+    // only appear in the vocab job, never in a registered scan plan,
+    // and no bm25_field call may carry a scan distance (params holds
+    // avgdl, T idfs, then T edit distances; 0 = set membership).
+    import org.apache.spark.sql.catalyst.util.ArrayData
     Seq("r03_hybrid", "r07_comparison", "r09_explanatory",
       "r10_multi_intent").foreach { name =>
       val p = plan(name)
       assert(!p.toLowerCase.contains("levenshtein"),
         s"$name scores with per-row Levenshtein — vocab accept path lost")
-      assert(p.contains("term_freq"),
-        s"$name lost its codegen term_freq scoring")
+      val scorers = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+          case b: graft.rass.expressions.Bm25Field => b
+        })
+      assert(scorers.nonEmpty, s"$name lost its codegen bm25_field scoring")
+      scorers.foreach { b =>
+        val t = b.accept.eval().asInstanceOf[ArrayData].numElements()
+        val params = b.params.eval().asInstanceOf[ArrayData]
+        assert((0 until t).forall(i => params.getDouble(1 + t + i) == 0.0),
+          s"$name scores ${b.tokens} with a per-row edit-distance scan")
+      }
     }
   }
 

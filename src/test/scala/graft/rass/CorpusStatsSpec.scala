@@ -9,8 +9,8 @@ class CorpusStatsSpec extends SparkSpec {
     val fields = DocSchema.noteFields.map(_._1) ++ Seq("unstructuredText", "patientName")
     val terms = Seq("note", "severity", "zzz_absent_term")
     val (fieldStats, termStats) = CorpusStats.build(corpus, fields.distinct)
-    val fromTable = CorpusStats.statsRow(spark, fieldStats, termStats,
-      fields.distinct, terms).head()
+    val fromTable = CorpusStats.statsRow(fieldStats, termStats,
+      fields.distinct, terms)
     val direct = Bm25.allStats(corpus, fields.distinct, terms).head()
     assert(fromTable.schema.fieldNames.sameElements(direct.schema.fieldNames))
     fromTable.schema.fieldNames.foreach { c =>
@@ -60,11 +60,11 @@ class CorpusStatsSpec extends SparkSpec {
     }
     assert(accept(("note", "metformin")).size >= 3, "typo variants must be admitted")
     // and the two scoring paths agree to the bit on every row
-    val stats = Bm25.withStats(docs, Seq("note"), terms)
-    val both = stats.withColumn("slow",
-        Bm25.scoreFuzzy("note", terms, "s_note_"))
+    val stats = Bm25.inlineStats(docs, Seq("note"), terms)
+    val both = docs.withColumn("slow",
+        Bm25.scoreFuzzy("note", terms, stats))
       .withColumn("fast",
-        Bm25.scoreFuzzyVocab("note", terms, "s_note_", accept))
+        Bm25.scoreFuzzyVocab("note", terms, stats, accept))
       .select($"doc_id", $"slow", $"fast").collect()
     both.foreach { r =>
       assert(r.getDouble(1) == r.getDouble(2),
@@ -78,8 +78,9 @@ class CorpusStatsSpec extends SparkSpec {
     val (fieldStats, termStats) = CorpusStats.build(docs, Seq("note"))
     assert(Bm25.fuzzyAcceptSets(fieldStats, termStats, Seq("note"), Nil).isEmpty)
     // and the scoring column degrades to 0 for null-term queries
-    val scored = Bm25.withStats(docs, Seq("note"), Nil)
-      .withColumn("s", Bm25.scoreFuzzyVocab("note", Nil, "s_note_", Map.empty))
+    val scored = docs
+      .withColumn("s", Bm25.scoreFuzzyVocab("note", Nil,
+        Bm25.inlineStats(docs, Seq("note"), Nil), Map.empty))
       .select($"s").head()
     assert(scored.getDouble(0) == 0.0)
   }
@@ -103,7 +104,8 @@ class CorpusStatsSpec extends SparkSpec {
       Seq("zzzzzzzzzz"))
     assert(accept(("note", "zzzzzzzzzz")) == Nil)
     intercept[IllegalStateException] {
-      Bm25.scoreFuzzyVocab("symptom", Seq("metformin"), "s_symptom_", accept)
+      Bm25.scoreFuzzyVocab("symptom", Seq("metformin"),
+        Bm25.inlineStats(docs, Seq("symptom"), Seq("metformin")), accept)
     }
     // an EMPTY corpus covers nothing but is not a coverage failure —
     // every vocabulary is legitimately empty

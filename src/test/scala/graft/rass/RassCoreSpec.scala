@@ -108,8 +108,9 @@ class Bm25Spec extends SparkSpec {
       ("d3", "common words all over the place common words common words"),
       ("d4", "nothing relevant at all")).toDF("doc_id", "unstructuredText")
     val terms = Seq("diabetes")
-    val scored = Bm25.withStats(docs, Seq("unstructuredText"), terms)
-      .withColumn("score", Bm25.score("unstructuredText", terms, "s_unstructuredText_"))
+    val stats = Bm25.inlineStats(docs, Seq("unstructuredText"), terms)
+    val scored = docs
+      .withColumn("score", Bm25.score("unstructuredText", terms, stats))
       .select("doc_id", "score").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(scored("d1") > 0 && scored("d2") > 0)

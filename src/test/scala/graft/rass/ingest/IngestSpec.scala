@@ -158,7 +158,7 @@ class DocumentFetchSpec extends SparkSpec {
     val hits = graft.rass.Searches.q12DocumentFetch(docs, "9", 5)
     // q12 collapses to one row; fetch over the full per-patient doc set
     val fetched = DocumentFetch.fetch(
-      docs.filter(org.apache.spark.sql.functions.col("patientId") === "9"))
+      docs.filter(org.apache.spark.sql.functions.col("patientId") === "9").collect().toSeq)
     assert(fetched.nonEmpty)
     assert(fetched.size <= DocumentFetch.MaxFilesPerPatient)
     assert(fetched.forall(_.content.contains("note body")))
