@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump full `explain("formatted")` output for registered
@@ -10,9 +9,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: runMain graft.PlanDump <outDir> <tag> [queryName ...]
   * e.g.   runMain graft.PlanDump plans/r19 before d02_ngram_jaccard_pairs
   *
-  * Runs at the bench's core count / shuffle-partition settings so the
-  * dumped plan is the one the bench executes (partition counts differ
-  * from the driver box only by the env knobs, never by plan shape).
+  * Runs at the bench's core count (`SPARK_GRAFT_CPUS`, default 4) and
+  * session conf ([[GraftSession]]) so the dumped plan is the one the
+  * bench executes (partition counts differ between machines only by
+  * the env knobs, never by plan shape).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,13 +20,7 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

@@ -2,9 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared mechanics for durable, fingerprint-guarded parquet artifacts —
-  * the d06 cluster table, the IVF index, and the p09 contaminated-doc
-  * list all follow the same protocol:
+/** Shared mechanics for durable, fingerprint-guarded parquet artifacts.
+  * Every artifact goes through [[DurableArtifact]], the one caller of
+  * [[findValid]] and [[publish]]; the protocol is:
   *
   *   1. compute a fingerprint of the SOURCE table's file listing plus
   *      every parameter the artifact depends on — BEFORE the build reads
@@ -24,8 +24,9 @@ import org.apache.spark.sql.SparkSession
   *      current source listing.
   *
   * Only the mechanics live here; each artifact keeps its own version
-  * constant and parameter string at the call site, so bumping one
-  * artifact's semantics never invalidates the others.
+  * constant and parameter string where it is declared, so bumping one
+  * artifact's semantics never invalidates the others (unless its
+  * fingerprint chains the bumped one's).
   */
 private[graft] object ArtifactStore {
 

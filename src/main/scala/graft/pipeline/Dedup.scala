@@ -898,7 +898,7 @@ object Dedup {
     * regenerated test data or changed LSH parameters invalidate the
     * artifact instead of silently serving wrong clusters.
     */
-  private val clusterArtifact = new DurableArtifact(
+  private[pipeline] val clusterArtifact = new DurableArtifact(
     "d.clusters", "d06_clusters",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$ClusterArtifactVersion|minhash=${NumHashes}x$Bands|" +
@@ -907,9 +907,6 @@ object Dedup {
 
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     clusterArtifact.read(spark, dir)
-
-  private[graft] def clusterArtifactPath(dir: String): String =
-    clusterArtifact.path(dir)
 
   /** The drop list d06 implies — every non-canonical cluster member —
     * read from the stored artifact (building it first if cold). This is
@@ -1130,42 +1127,28 @@ object Dedup {
     * ONLY the audits consume this table.
     */
   private[graft] def detectorPairs(spark: SparkSession,
-      dir: String): DataFrame =
-    detectorPairsCache.getOrBuild((spark, dir)) {
-      import spark.implicits._
-      // fingerprint captured BEFORE the detectors read any source data
-      // (the ArtifactStore write-side TOCTOU rule)
-      val fp = d11Fingerprint(spark, dir)
-      ArtifactStore.findValid(spark, d11ArtifactPath(dir), fp)
-        .flatMap(p => ArtifactStore.consistentParquet(spark, p))
-        .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        .getOrElse {
-          def flagged(df: DataFrame, which: Int): DataFrame = {
-            val flags = (0 until 5).map(i =>
-              lit(if (i == which) 1L else 0L).as(s"f$i"))
-            df.select(($"a_id" +: $"b_id" +: flags): _*)
-          }
-          val df = flagged(d02NgramJaccardPairs(spark, dir), 0)
-            .unionAll(flagged(d03MinhashLshPairs(spark, dir), 1))
-            .unionAll(flagged(d04SimhashPairs(spark, dir)
-              .select($"a_id", $"b_id"), 2))
-            .unionAll(flagged(d05EmbeddingNearDup(spark, dir)
-              .select($"a_id", $"b_id"), 3))
-            .unionAll(flagged(Similarity.s07AuditPairs(spark, dir), 4))
-            .groupBy($"a_id", $"b_id")
-            .agg(max($"f0").as("in_ngram"), max($"f1").as("in_minhash"),
-              max($"f2").as("in_simhash"), max($"f3").as("in_signlsh"),
-              max($"f4").as("in_semantic"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          df.count() // materialize: consumers read the set, not the joins
-          ArtifactStore.publish(spark, d11ArtifactPath(dir), fp) {
-            staging => df.write.mode("overwrite").parquet(staging)
-          }
-          df
-        }
-    }
+      dir: String): DataFrame = detectorPairsArtifact.read(spark, dir)
 
-  private val detectorPairsCache = Memo.frames("d.detectorPairs")
+  private def buildDetectorPairs(spark: SparkSession,
+      dir: String): DataFrame = {
+    import spark.implicits._
+    def flagged(df: DataFrame, which: Int): DataFrame = {
+      val flags = (0 until 5).map(i =>
+        lit(if (i == which) 1L else 0L).as(s"f$i"))
+      df.select(($"a_id" +: $"b_id" +: flags): _*)
+    }
+    flagged(d02NgramJaccardPairs(spark, dir), 0)
+      .unionAll(flagged(d03MinhashLshPairs(spark, dir), 1))
+      .unionAll(flagged(d04SimhashPairs(spark, dir)
+        .select($"a_id", $"b_id"), 2))
+      .unionAll(flagged(d05EmbeddingNearDup(spark, dir)
+        .select($"a_id", $"b_id"), 3))
+      .unionAll(flagged(Similarity.s07AuditPairs(spark, dir), 4))
+      .groupBy($"a_id", $"b_id")
+      .agg(max($"f0").as("in_ngram"), max($"f1").as("in_minhash"),
+        max($"f2").as("in_simhash"), max($"f3").as("in_signlsh"),
+        max($"f4").as("in_semantic"))
+  }
 
   /** Bump when ANY detector's pair semantics change in a way the
     * fingerprint's named parameters don't capture, or when the stored
@@ -1173,9 +1156,6 @@ object Dedup {
     * joined the lineup).
     */
   private val D11ArtifactVersion = 2
-
-  private def d11ArtifactPath(dir: String): String =
-    s"${ArtifactStore.artifactRoot}/${ArtifactStore.md5Hex(dir)}_d11_pairs"
 
   /** Staleness guard: the source listings (documents for the lexical
     * detectors, embeddings for the two vector detectors) plus every
@@ -1185,15 +1165,17 @@ object Dedup {
     * [[SignLshTau]], s07's params), so changing a cut invalidates the
     * artifact automatically instead of depending on a version bump.
     */
-  private[graft] def d11Fingerprint(spark: SparkSession, dir: String): String =
-    ArtifactStore.md5Hex(
+  private[pipeline] val detectorPairsArtifact = new DurableArtifact(
+    "d.detectorPairs", "d11_pairs",
+    (spark, dir) => ArtifactStore.md5Hex(
       s"v$D11ArtifactVersion|cap=$ShingleDfCap|" +
         s"j>=$JaccardCutNum/$JaccardCutDen|" +
         s"mh=$NumHashes/$Bands|sim=$SimBits/$SimBands/ham<=$HammingCap|" +
         s"slsh=$NumPlanes/$SignBands/tau=$SignLshTau|" +
         s"${Similarity.s07FingerprintParams}|" +
         ArtifactStore.sourceListing(spark, dir + "/documents.parquet") + "|" +
-        ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet"))
+        ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet")),
+    buildDetectorPairs)
 
   /** Distributed connected components over the stored d03 pairs;
     * returns the converged, persisted (id, label) table.

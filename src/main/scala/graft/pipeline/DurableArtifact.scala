@@ -2,13 +2,18 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the durable fingerprint-guarded cluster
-  * artifacts — ONE implementation of the read-through-memo /
-  * staged-publish / rebuild-and-swap sequence the three dup families
-  * each carried a verbatim copy of (d06 text, m06 media, s14
-  * semantic; unified after the round-16 review caught the copies
-  * already diverging — one family's cache had missed the harness
-  * release wiring).
+/** Shared plumbing for every durable fingerprint-guarded artifact —
+  * the ONE implementation of the read-through-memo / staged-publish /
+  * rebuild-and-swap sequence, and the only caller of
+  * [[ArtifactStore.findValid]] and [[ArtifactStore.publish]]
+  * (`MemoGuardSpec` fails on another). Its users: the cluster tables
+  * (d06 text, m06 media, s14 semantic), the d08 corpus band table, the
+  * lists the release anti-joins (p09 lexical and s15 semantic
+  * contamination, s21 SemDeDup drops), and the detector-pair tables
+  * the lineup audits roll up (d11, and m10 which chains it). A copy
+  * written by hand around the store drifts from this one (it skips
+  * [[DurableArtifact.salts]], or serves its unpublished build), which
+  * is why the spec guards against one.
   *
   * Contract (the d06 rules, now in one place):
   *   - [[read]] is the CONSUMER path: session memo → on-disk parquet
@@ -28,7 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] final class DurableArtifact(
     name: String,
-    suffix: String,
+    val suffix: String,
     fingerprint: (SparkSession, String) => String,
     build: (SparkSession, String) => DataFrame) {
 

@@ -289,7 +289,7 @@ object Multimodal {
     * plus every parameter the pair derivation depends on: frame
     * geometry and the containment cut.
     */
-  private val mediaClusterArtifact = new DurableArtifact(
+  private[pipeline] val mediaClusterArtifact = new DurableArtifact(
     "m.clusters", "m06_clusters",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$MediaClusterArtifactVersion|frames=${FrameLen}x$FrameStep|" +
@@ -300,9 +300,6 @@ object Multimodal {
 
   private[graft] def mediaClusterLabels(spark: SparkSession,
       dir: String): DataFrame = mediaClusterArtifact.read(spark, dir)
-
-  private[graft] def mediaClusterArtifactPath(dir: String): String =
-    mediaClusterArtifact.path(dir)
 
   /** m04 — resize planning: aspect-preserving fit of every image into
     * [[ResizeTarget]]² plus letterbox padding, from metadata alone. The
@@ -787,51 +784,36 @@ object Multimodal {
   }
 
   private[graft] def mediaDetectorPairs(spark: SparkSession,
-      dir: String): DataFrame =
-    mediaDetectorPairsCache.getOrBuild((spark, dir)) {
-      import spark.implicits._
-      // fingerprint captured BEFORE the detectors read any source data
-      // (the ArtifactStore write-side TOCTOU rule)
-      val fp = m10Fingerprint(spark, dir)
-      ArtifactStore.findValid(spark, m10ArtifactPath(dir), fp)
-        .flatMap(p => ArtifactStore.consistentParquet(spark, p))
-        .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        .getOrElse {
-          def flagged(df: DataFrame, which: Int): DataFrame = {
-            val flags = (0 until 4).map(i =>
-              lit(if (i == which) 1L else 0L).as(s"f$i"))
-            df.select(($"doc_a" +: $"doc_b" +: flags): _*)
-          }
-          val frames = m05Pairs(spark, dir)
-            .filter(mediaDup($"n_shared_frames", $"n_frames_a",
-              $"n_frames_b"))
-            .select($"doc_a", $"doc_b")
-          val phash = m08ImagePhashPairs(spark, dir)
-            .select($"doc_a", $"doc_b")
-          val landmark = m09AudioAlignedPairs(spark, dir)
-            .select($"doc_a", $"doc_b")
-          val lexical = Dedup.detectorPairs(spark, dir)
-            .select($"a_id".as("doc_a"), $"b_id".as("doc_b"))
-          val df = flagged(frames, 0)
-            .unionAll(flagged(phash, 1))
-            .unionAll(flagged(landmark, 2))
-            .unionAll(flagged(lexical, 3))
-            .groupBy($"doc_a", $"doc_b")
-            .agg(max($"f0").as("in_frames"), max($"f1").as("in_phash"),
-              max($"f2").as("in_landmark"), max($"f3").as("in_lexical"))
-            .withColumn("media_type",
-              when(modality($"doc_a") =!= modality($"doc_b"), "cross")
-                .otherwise(modalityName($"doc_a")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          df.count() // materialize: consumers read the set, not the joins
-          ArtifactStore.publish(spark, m10ArtifactPath(dir), fp) {
-            staging => df.write.mode("overwrite").parquet(staging)
-          }
-          df
-        }
-    }
+      dir: String): DataFrame = mediaDetectorPairsArtifact.read(spark, dir)
 
-  private val mediaDetectorPairsCache = Memo.frames("m.detectorPairs")
+  private def buildMediaDetectorPairs(spark: SparkSession,
+      dir: String): DataFrame = {
+    import spark.implicits._
+    def flagged(df: DataFrame, which: Int): DataFrame = {
+      val flags = (0 until 4).map(i =>
+        lit(if (i == which) 1L else 0L).as(s"f$i"))
+      df.select(($"doc_a" +: $"doc_b" +: flags): _*)
+    }
+    val frames = m05Pairs(spark, dir)
+      .filter(mediaDup($"n_shared_frames", $"n_frames_a", $"n_frames_b"))
+      .select($"doc_a", $"doc_b")
+    val phash = m08ImagePhashPairs(spark, dir)
+      .select($"doc_a", $"doc_b")
+    val landmark = m09AudioAlignedPairs(spark, dir)
+      .select($"doc_a", $"doc_b")
+    val lexical = Dedup.detectorPairs(spark, dir)
+      .select($"a_id".as("doc_a"), $"b_id".as("doc_b"))
+    flagged(frames, 0)
+      .unionAll(flagged(phash, 1))
+      .unionAll(flagged(landmark, 2))
+      .unionAll(flagged(lexical, 3))
+      .groupBy($"doc_a", $"doc_b")
+      .agg(max($"f0").as("in_frames"), max($"f1").as("in_phash"),
+        max($"f2").as("in_landmark"), max($"f3").as("in_lexical"))
+      .withColumn("media_type",
+        when(modality($"doc_a") =!= modality($"doc_b"), "cross")
+          .otherwise(modalityName($"doc_a")))
+  }
 
   /** Bump when any media detector's pair semantics change in a way the
     * fingerprint's named parameters don't capture, or when the stored
@@ -841,24 +823,25 @@ object Multimodal {
     */
   private val M10ArtifactVersion = 2
 
-  private def m10ArtifactPath(dir: String): String =
-    s"${ArtifactStore.artifactRoot}/${ArtifactStore.md5Hex(dir)}_m10_pairs"
-
   /** Staleness guard: every named constant the three media detectors
-    * filter with, plus d11's OWN fingerprint — which already hashes
+    * filter with, plus d11's CURRENT fingerprint (chained through
+    * [[DurableArtifact.currentFingerprint]], so a d11 salt reaches
+    * this artifact exactly as a d11 constant bump does) — which hashes
     * the five text/embedding detectors' thresholds and the documents/
     * embeddings source listings — so either lineup's cut change (or a
     * corpus change) invalidates this artifact transitively.
     */
-  private def m10Fingerprint(spark: SparkSession, dir: String): String =
-    ArtifactStore.md5Hex(
+  private[pipeline] val mediaDetectorPairsArtifact = new DurableArtifact(
+    "m.detectorPairs", "m10_pairs",
+    (spark, dir) => ArtifactStore.md5Hex(
       s"v$M10ArtifactVersion|cont=$ContainNum/$ContainDen|" +
         s"mod=$MediaModalities:$ImageMod/$AudioMod/$VideoMod|" +
         s"frame=$FrameLen/$FrameStep|" +
         s"ph=$PhBits/$PhBands/$PhBandBits/ham<=$PhHammingCap|" +
         s"au=$AuWinLen/$AuAnchor/$AuDfCap/$AuMinVotes/" +
         s"$AuHashBase/$AuHashMod|" +
-        Dedup.d11Fingerprint(spark, dir))
+        Dedup.detectorPairsArtifact.currentFingerprint(spark, dir)),
+    buildMediaDetectorPairs)
 
   // ---------------------------------------------------------------- registry
 

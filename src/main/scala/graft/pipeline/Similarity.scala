@@ -137,16 +137,11 @@ object Similarity {
     * [[invalidateCaches]] (same explicit-invalidation contract as
     * [[Dedup.invalidateCaches]]).
     *
-    * By DEFAULT the artifact is session-memoized only, NOT persisted to
-    * disk: s02/s03/s04 are benchmarked as build+probe (the bench
-    * releases the memo between groups so every round measures the index
-    * build), and no registered query consumes the index from a separate
-    * session the way x01 consumes d06's clusters. A deployment that
-    * wants the index durable sets `graft.ivf.durable=true` (system
-    * property, or env `SPARK_GRAFT_DURABLE_IVF`): (centroids, assign)
-    * then publish with exactly the staged-swap + fingerprint pattern of
-    * `Dedup.writeClusterArtifact`, and a cold session whose fingerprint
-    * matches probes straight from the artifact without retraining.
+    * The index is session-memoized only, never published to disk:
+    * s02/s03/s04 are benchmarked as build+probe (the bench releases the
+    * memo between groups so every round measures the index build), and
+    * no registered query consumes the index from a separate session the
+    * way x01 consumes d06's clusters.
     */
   private val SeedVariant = "seed"
   private[pipeline] val TrainedVariant = "kmeans"
@@ -185,99 +180,17 @@ object Similarity {
   private[pipeline] def ivfIndex(spark: SparkSession, dir: String,
       variant: String, cells: Int = NumCentroids): (DataFrame, DataFrame) =
     indexCache.getOrBuild((spark, dir, variant, cells)) {
-      // fingerprint captured BEFORE training reads vectors(): if the
-      // embeddings table is regenerated mid-build, the published index
-      // carries the pre-build listing and readers invalidate it
-      // instead of serving cells trained on the vanished snapshot
-      val fp =
-        if (durableIvf) indexFingerprint(spark, dir, variant, cells) else ""
-      readIndexArtifact(spark, dir, variant, cells, fp).getOrElse {
-        import spark.implicits._
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val e = vectors(spark, dir)
-        val cents = (variant match {
-          case TrainedVariant => kmeansCentroids(spark, e, cells, KmeansIters)
-          case _ => e.filter($"vec_id" < cells)
-            .select($"vec_id".as("cid"), $"v".as("cv"))
-        }).persist(lvl)
-        cents.count() // materialize: consumers read the artifact, not the Lloyd lineage
-        val assign = cellAssign(spark, e, cents).persist(lvl)
-        if (durableIvf) writeIndexArtifact(spark, dir, variant, cells, fp, cents, assign)
-        (cents, assign)
-      }
+      import spark.implicits._
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      val e = vectors(spark, dir)
+      val cents = (variant match {
+        case TrainedVariant => kmeansCentroids(spark, e, cells, KmeansIters)
+        case _ => e.filter($"vec_id" < cells)
+          .select($"vec_id".as("cid"), $"v".as("cv"))
+      }).persist(lvl)
+      cents.count() // materialize: consumers read the artifact, not the Lloyd lineage
+      (cents, cellAssign(spark, e, cents).persist(lvl))
     }
-
-  /** Durable-index flag: off by default so the bench keeps measuring
-    * build+probe; a deployment (or spec) opts in per JVM.
-    */
-  private def durableIvf: Boolean =
-    sys.props.get("graft.ivf.durable")
-      .orElse(sys.env.get("SPARK_GRAFT_DURABLE_IVF"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-
-  /** Bump when index semantics change: a stale artifact from an older
-    * build must never satisfy a newer reader.
-    */
-  private val IvfArtifactVersion = 1
-
-  private[pipeline] def ivfArtifactPath(dir: String, variant: String,
-      cells: Int): String =
-    s"${ArtifactStore.artifactRoot}/${ArtifactStore.md5Hex(dir)}_ivf_${variant}_$cells"
-
-  /** Staleness guard, the d06 pattern applied to the IVF index: the
-    * fingerprint hashes the embeddings table's file listing (metadata
-    * only) plus every parameter the index depends on, and is checked on
-    * every read — regenerated data or changed training parameters
-    * invalidate the artifact instead of silently serving wrong cells.
-    */
-  private def indexFingerprint(spark: SparkSession, dir: String,
-      variant: String, cells: Int): String =
-    ArtifactStore.md5Hex(
-      s"v$IvfArtifactVersion|ivf=$variant|k=$cells|iters=$KmeansIters|" +
-        s"q=$Quant|" +
-        ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet"))
-
-  /** Read the published (centroids, assign) pair if one exists for
-    * exactly this source data and parameters
-    * ([[ArtifactStore.findValid]] handles the `_old` crash-recovery
-    * probe). Only consulted when [[durableIvf]] is on.
-    */
-  private def readIndexArtifact(spark: SparkSession, dir: String,
-      variant: String, cells: Int,
-      fingerprint: String): Option[(DataFrame, DataFrame)] = {
-    if (!durableIvf) return None
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    ArtifactStore.findValid(spark, ivfArtifactPath(dir, variant, cells),
-        fingerprint)
-      .flatMap { p =>
-        for {
-          c <- ArtifactStore.consistentParquet(spark, p + "/centroids")
-          a <- ArtifactStore.consistentParquet(spark, p + "/assign")
-        } yield (c.persist(lvl), a.persist(lvl))
-      }
-  }
-
-  /** Publish the trained index: stage both tables + fingerprint fully,
-    * then promote atomically — [[ArtifactStore.publish]] holds the
-    * per-path monitor and runs the staging/_old swap; a reader sees
-    * the old index or the new one, never a half-written directory.
-    */
-  private def writeIndexArtifact(spark: SparkSession, dir: String,
-      variant: String, cells: Int, fingerprint: String, cents: DataFrame,
-      assign: DataFrame): Unit =
-    ArtifactStore.publish(spark, ivfArtifactPath(dir, variant, cells),
-        fingerprint) { staging =>
-      cents.write.mode("overwrite").parquet(staging + "/centroids")
-      assign.write.mode("overwrite").parquet(staging + "/assign")
-    }
-
-  /** Test seam: the trained corpus-sized index exactly as s04/s06
-    * consume it — lets a spec inspect provenance (inputFiles) without
-    * widening [[ivfIndex]]'s visibility.
-    */
-  private[pipeline] def indexForTest(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    ivfIndex(spark, dir, TrainedVariant, corpusCells(spark, dir))
 
   /** The exact brute-force top-k table, memoized per (session, dir):
     * like the IVF index it is an EVAL artifact — the recall profile
@@ -560,7 +473,7 @@ object Similarity {
     * artifact + session memo — the shared [[DurableArtifact]] plumbing
     * (one implementation for d06/m06/s14).
     */
-  private val semClusterArtifact = new DurableArtifact(
+  private[pipeline] val semClusterArtifact = new DurableArtifact(
     "s.semClusters", "s14_clusters",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$SemClusterArtifactVersion|$s07FingerprintParams|" +
@@ -569,9 +482,6 @@ object Similarity {
 
   private[pipeline] def semClusterLabels(spark: SparkSession,
       dir: String): DataFrame = semClusterArtifact.read(spark, dir)
-
-  private[pipeline] def semClusterArtifactPath(dir: String): String =
-    semClusterArtifact.path(dir)
 
   /** s21 — SemDeDup survivor selection: d10 keeps the longest text
     * member, m07 the highest-fidelity media encode; the semantic
@@ -649,7 +559,7 @@ object Similarity {
   // parameter string travels here (round-18 review — a comment telling
   // a future editor to bump the version is exactly the forgotten-bump
   // staleness class chaining exists to eliminate).
-  private val semDropArtifact = new DurableArtifact(
+  private[pipeline] val semDropArtifact = new DurableArtifact(
     "s.semDrops", "s21_drops",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$SemDropArtifactVersion|" +
@@ -677,9 +587,6 @@ object Similarity {
   private[graft] def semDropList(spark: SparkSession,
       dir: String): DataFrame = semDropArtifact.read(spark, dir)
 
-  private[graft] def semDropArtifactPath(dir: String): String =
-    semDropArtifact.path(dir)
-
   /** Bump when the s15 screen semantics or stored schema change. */
   private val SemContamArtifactVersion = 1
 
@@ -706,9 +613,6 @@ object Similarity {
 
   private[graft] def semContamList(spark: SparkSession,
       dir: String): DataFrame = semContamArtifact.read(spark, dir)
-
-  private[graft] def semContamArtifactPath(dir: String): String =
-    semContamArtifact.path(dir)
 
   /** s22's re-rank depth and relevance/diversity weight. λ = 1/2 is
     * exactly representable, so λ·rel and (1−λ)·sim are exact halvings

@@ -340,29 +340,12 @@ object TextAnalysis {
     * At 100 TB the list is at most the test split's contaminated
     * fraction — broadcast-sized by construction — so durability costs
     * a few MB of parquet and saves a full-corpus gram join per export
-    * session. The session memo below is only the hot handle to
+    * session. The artifact's session memo is only the hot handle to
     * the on-disk list; a miss falls back to the parquet artifact
     * before it ever falls back to a re-sweep.
     */
   private[graft] def contaminatedDocs(spark: SparkSession,
-      dir: String): DataFrame =
-    contamDocsCache.getOrBuild((spark, dir)) {
-      import spark.implicits._
-      // fingerprint captured BEFORE the sweep reads any source data:
-      // a corpus regenerated mid-sweep invalidates the published list
-      // instead of being silently stamped with the fresh listing
-      val fp = contamFingerprint(spark, dir)
-      readContamArtifact(spark, dir, fp).getOrElse {
-        val df = p09Contamination(spark, dir)
-          .filter($"contaminated" === 1L).select($"doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count() // materialize: consumers read the list, not the sweep plan
-        writeContamArtifact(spark, dir, fp, df)
-        df
-      }
-    }
-
-  private val contamDocsCache = Memo.frames("p.contam")
+      dir: String): DataFrame = contamArtifact.read(spark, dir)
 
   /** Bump when the sweep semantics change (gram definition, split
     * thresholds): a stale artifact from an older build must never
@@ -370,29 +353,17 @@ object TextAnalysis {
     */
   private val ContamArtifactVersion = 1
 
-  private[graft] def contamArtifactPath(dir: String): String =
-    s"${ArtifactStore.artifactRoot}/${ArtifactStore.md5Hex(dir)}_p09_contam"
-
   /** Staleness guard: the documents table's file listing (metadata
     * only) plus every parameter the sweep depends on — the gram width
     * and both split thresholds.
     */
-  private def contamFingerprint(spark: SparkSession, dir: String): String =
-    ArtifactStore.md5Hex(
+  private[pipeline] val contamArtifact = new DurableArtifact(
+    "p.contam", "p09_contam",
+    (spark, dir) => ArtifactStore.md5Hex(
       s"v$ContamArtifactVersion|n=$ContamN|train=$TrainMax|val=$ValMax|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet"))
-
-  private def readContamArtifact(spark: SparkSession, dir: String,
-      fingerprint: String): Option[DataFrame] =
-    ArtifactStore.findValid(spark, contamArtifactPath(dir), fingerprint)
-      .flatMap(p => ArtifactStore.consistentParquet(spark, p))
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private def writeContamArtifact(spark: SparkSession, dir: String,
-      fingerprint: String, docs: DataFrame): Unit =
-    ArtifactStore.publish(spark, contamArtifactPath(dir), fingerprint) {
-      staging => docs.write.mode("overwrite").parquet(staging)
-    }
+        ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
+    (spark, dir) => p09Contamination(spark, dir)
+      .filter(col("contaminated") === 1L).select(col("doc_id")))
 
   def p09Contamination(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

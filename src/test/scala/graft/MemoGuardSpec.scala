@@ -4,9 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scan: a `TrieMap` declared under src/main/scala outside
+/** Source scans over src/main/scala: a `TrieMap` declared outside
   * Memo.scala is a session cache bypassing the registry, unless it is
-  * one of the named non-cache maps.
+  * one of the named non-cache maps; and an `ArtifactStore.findValid` or
+  * `ArtifactStore.publish` call outside DurableArtifact.scala is a
+  * durable read-through written by hand beside the shared one.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
@@ -17,28 +19,41 @@ class MemoGuardSpec extends AnyFunSuite {
   private val Decl =
     """(?:val|var|def)\s+(\w+)\s*(?::[^=]*)?=\s*(?:new\s+)?(?:scala\.collection\.concurrent\.)?TrieMap\b""".r
 
+  /** `code` without comments or import lines. */
+  private def stripped(code: String): String =
+    code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      .linesIterator.filterNot(_.trim.startsWith("import ")).mkString("\n")
+
   /** The `TrieMap`s `code` declares or uses outside a named
     * declaration, as `Object.name` (or `Object.?` when unnamed).
     */
   private def trieMaps(obj: String, code: String): Seq[String] = {
-    val stripped = code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-      .linesIterator.filterNot(_.trim.startsWith("import ")).mkString("\n")
-    val named = Decl.findAllMatchIn(stripped).map(m => s"$obj.${m.group(1)}").toSeq
-    val unnamed = "\\bTrieMap\\b".r.findAllMatchIn(Decl.replaceAllIn(stripped, "")).size
+    val bare = stripped(code)
+    val named = Decl.findAllMatchIn(bare).map(m => s"$obj.${m.group(1)}").toSeq
+    val unnamed = "\\bTrieMap\\b".r.findAllMatchIn(Decl.replaceAllIn(bare, "")).size
     named ++ Seq.fill(unnamed)(s"$obj.?")
   }
 
-  test("no TrieMap under src/main/scala outside Memo.scala but the named non-cache maps") {
+  /** Every `.scala` file under src/main/scala, as (object name, code). */
+  private lazy val mainSources: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
-    val found = files.filterNot(_.getFileName.toString == "Memo.scala").flatMap { f =>
-      trieMaps(f.getFileName.toString.stripSuffix(".scala"),
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(f => f.getFileName.toString.stripSuffix(".scala") ->
         new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+    finally s.close()
+  }
+
+  /** Calls into the artifact store's read-through primitives. */
+  private val StoreCall = """\bArtifactStore\s*\.\s*(?:findValid|publish)\s*\(""".r
+
+  private def storeCalls(code: String): Int =
+    StoreCall.findAllMatchIn(stripped(code)).size
+
+  test("no TrieMap under src/main/scala outside Memo.scala but the named non-cache maps") {
+    val found = mainSources.filterNot(_._1 == "Memo").flatMap { case (obj, code) =>
+      trieMaps(obj, code)
     }
     assert(found.toSet == NonCacheMaps,
       s"TrieMaps outside the registry: ${found.filterNot(NonCacheMaps)}; " +
@@ -52,5 +67,17 @@ class MemoGuardSpec extends AnyFunSuite {
     assert(trieMaps("X", "val m: TrieMap[Int, Int] = TrieMap.empty") == Seq("X.m"))
     assert(trieMaps("X", "f(new TrieMap[Int, Int])") == Seq("X.?"))
     assert(trieMaps("X", "// a TrieMap in a comment\nimport scala.collection.concurrent.TrieMap").isEmpty)
+  }
+
+  test("ArtifactStore.findValid/publish are called only from DurableArtifact") {
+    val callers = mainSources.filter(kv => storeCalls(kv._2) > 0).map(_._1)
+    assert(callers == Seq("DurableArtifact"),
+      s"a durable read-through written by hand around ArtifactStore: $callers")
+  }
+
+  test("the store-call scan catches a planted read-through") {
+    assert(storeCalls("ArtifactStore.findValid(spark, p, fp)") == 1)
+    assert(storeCalls("ArtifactStore\n  .publish (spark, p, fp) { s => }") == 1)
+    assert(storeCalls("// ArtifactStore.publish(spark, p, fp)\n/** [[ArtifactStore.findValid]] */") == 0)
   }
 }

@@ -151,7 +151,7 @@ class DedupSpec extends SparkSpec {
     }
     // publish a fresh artifact and record the truth
     Dedup.d06NeardupClusters(spark, sfDir).collect()
-    val path = Dedup.clusterArtifactPath(sfDir)
+    val path = Dedup.clusterArtifact.path(sfDir)
     assert(fs.exists(new HP(path + "/_fingerprint")), "publish must write the guard")
     val fpIn = fs.open(new HP(path + "/_fingerprint"))
     val fp = try scala.io.Source.fromInputStream(fpIn, "UTF-8").mkString.trim

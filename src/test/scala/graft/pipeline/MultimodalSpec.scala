@@ -49,6 +49,35 @@ class MultimodalSpec extends SparkSpec {
       "media detector flagged a cross-modality pair")
   }
 
+  test("a bumped d11 constant rebuilds EXACTLY the d11 -> m10 cone, rollup unchanged") {
+    // baseline: both pair tables fresh and published
+    val before = Multimodal.m10MediaDetectorOverlap(spark, sfDir).collect().toSeq
+    // salt d11's fingerprint as a threshold/version bump would change
+    // it; m10 chains d11's CURRENT fingerprint, so a cold m10 read must
+    // see its own store as stale and rebuild over a rebuilt d11
+    DurableArtifact.salts(Dedup.detectorPairsArtifact.suffix) = "bump"
+    Dedup.invalidateCaches()
+    graft.Memo.invalidate("m.")
+    try {
+      val published = ArtifactStore.publishEvents
+      val after = Multimodal.m10MediaDetectorOverlap(spark, sfDir).collect().toSeq
+      Dedup.d11DetectorOverlap(spark, sfDir).collect()
+      val rebuilt = ArtifactStore.publishEvents.collect {
+        case (p, n) if published.getOrElse(p, 0L) != n => p
+      }.toSet
+      assert(rebuilt == Set(Dedup.detectorPairsArtifact.path(sfDir),
+        Multimodal.mediaDetectorPairsArtifact.path(sfDir)),
+        s"rebuild cone was $rebuilt")
+      assert(after == before, "the rebuilt m10 rollup must equal the original")
+    } finally {
+      // un-bump and restore the unsalted stores for later suites
+      DurableArtifact.salts.remove(Dedup.detectorPairsArtifact.suffix)
+      Dedup.invalidateCaches()
+      graft.Memo.invalidate("m.")
+      Multimodal.m10MediaDetectorOverlap(spark, sfDir).collect()
+    }
+  }
+
   test("media table partitions docs across the three modalities") {
     val types = Multimodal.mediaTable(spark, sfDir)
       .groupBy("media_type").count().collect()
@@ -279,7 +308,7 @@ class MultimodalSpec extends SparkSpec {
     }
     // publish a fresh artifact and record the truth
     Multimodal.m06MediaClusters(spark, sfDir).collect()
-    val path = Multimodal.mediaClusterArtifactPath(sfDir)
+    val path = Multimodal.mediaClusterArtifact.path(sfDir)
     assert(fs.exists(new HP(path + "/_fingerprint")), "publish must write the guard")
     val fpIn = fs.open(new HP(path + "/_fingerprint"))
     val fp = try scala.io.Source.fromInputStream(fpIn, "UTF-8").mkString.trim

@@ -34,34 +34,42 @@ class ReleaseSpec extends SparkSpec {
         after.collect { case (p, n) if before.getOrElse(p, 0L) != n => p }}")
   }
 
-  test("a bumped s14 constant rebuilds EXACTLY the s14 -> s21 cone, nothing else") {
-    // baseline: everything fresh and published
-    Release.build(spark, sfDir).provenance.collect()
-    // emulate editing SemClusterArtifactVersion (or SemDedupTau): salt
-    // s14's fingerprint — the expected fingerprint changes exactly as
-    // a compile-time constant bump would change it
-    DurableArtifact.salts("s14_clusters") = "bump"
-    dropSessionMemos()
-    try {
-      val before = ArtifactStore.publishEvents
-      val m = Release.build(spark, sfDir)
-      assert(m.provenance.collect().nonEmpty)
-      val after = ArtifactStore.publishEvents
-      val rebuilt = after.collect {
-        case (p, n) if before.getOrElse(p, 0L) != n => p
-      }.toSet
-      // the cone: the salted s14 label table AND the s21 drop list
-      // whose fingerprint CHAINS s14's — and absolutely nothing else
-      // (d06, p09, s15 stay served from their valid stores)
-      assert(rebuilt == Set(
-        Similarity.semClusterArtifactPath(sfDir),
-        Similarity.semDropArtifactPath(sfDir)),
-        s"rebuild cone was $rebuilt")
-    } finally {
-      // un-bump and restore the unsalted stores for later suites
-      DurableArtifact.salts.remove("s14_clusters")
-      dropSessionMemos()
+  /** (salted artifact, cone label, the artifacts that must rebuild):
+    * salting an artifact's fingerprint emulates editing its version
+    * constant (or a threshold it hashes) — the expected fingerprint
+    * changes exactly as a compile-time bump would change it — and the
+    * rebuild set must be exactly that artifact plus every artifact
+    * whose fingerprint CHAINS it (s21 chains s14; nothing chains p09),
+    * with d06, s15 and the rest still served from their valid stores.
+    */
+  private val cones: Seq[(DurableArtifact, String, Seq[DurableArtifact])] = Seq(
+    (Similarity.semClusterArtifact, "s14 -> s21",
+      Seq(Similarity.semClusterArtifact, Similarity.semDropArtifact)),
+    (TextAnalysis.contamArtifact, "p09", Seq(TextAnalysis.contamArtifact)))
+
+  cones.foreach { case (salted, label, cone) =>
+    val suffix = salted.suffix
+    test(s"a bumped ${suffix.take(3)} constant rebuilds EXACTLY the $label cone, nothing else") {
+      // baseline: everything fresh and published
       Release.build(spark, sfDir).provenance.collect()
+      DurableArtifact.salts(suffix) = "bump"
+      dropSessionMemos()
+      try {
+        val before = ArtifactStore.publishEvents
+        val m = Release.build(spark, sfDir)
+        assert(m.provenance.collect().nonEmpty)
+        val after = ArtifactStore.publishEvents
+        val rebuilt = after.collect {
+          case (p, n) if before.getOrElse(p, 0L) != n => p
+        }.toSet
+        assert(rebuilt == cone.map(_.path(sfDir)).toSet,
+          s"rebuild cone was $rebuilt")
+      } finally {
+        // un-bump and restore the unsalted stores for later suites
+        DurableArtifact.salts.remove(suffix)
+        dropSessionMemos()
+        Release.build(spark, sfDir).provenance.collect()
+      }
     }
   }
 }

@@ -300,7 +300,7 @@ class SimilaritySpec extends SparkSpec {
     val fs = new HP("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
     // publish a fresh artifact and record the truth
     Similarity.s14SemanticClusters(spark, sfDir).collect()
-    val path = Similarity.semClusterArtifactPath(sfDir)
+    val path = Similarity.semClusterArtifact.path(sfDir)
     assert(fs.exists(new HP(path + "/_fingerprint")), "publish must write the guard")
     val fpIn = fs.open(new HP(path + "/_fingerprint"))
     val fp = try scala.io.Source.fromInputStream(fpIn, "UTF-8").mkString.trim
@@ -611,60 +611,6 @@ class SimilaritySpec extends SparkSpec {
     rows.foreach { r =>
       val n = r.getAs[Long]("n_vectors")
       assert(r.getAs[Long]("self_join_pairs") == n * (n - 1) / 2)
-    }
-  }
-
-  test("durable IVF artifact: a cold session probes from disk, results unchanged") {
-    import org.apache.hadoop.fs.Path
-    val cells = Similarity.recommendedCells(
-      graft.Tables.embeddings(spark, sfDir).count())
-    val path = Similarity.ivfArtifactPath(sfDir, "kmeans", cells)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def wipe(): Unit =
-      Seq(path, path + "_old", path + "_staging")
-        .foreach(p => fs.delete(new Path(p), true))
-    System.setProperty("graft.ivf.durable", "true")
-    try {
-      wipe()
-      Similarity.invalidateCaches()
-      // warm build publishes the artifact as a side effect
-      val a = Similarity.s04IvfKmeans(spark, sfDir).collect().toSeq
-      assert(fs.exists(new Path(path + "/_fingerprint")),
-        "the trained index must publish (parquet + fingerprint)")
-      // cold session (memo cleared): the index must come from the
-      // artifact — its tables scan the published parquet, not the
-      // embeddings table the Lloyd lineage would read. Provenance via
-      // the analyzed plan's scan roots (Dataset.inputFiles returns
-      // empty for persisted frames, so it can't be the witness here).
-      def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.queryExecution.analyzed.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation match {
-              case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                h.location.rootPaths.map(_.toString)
-              case _ => Seq.empty[String]
-            }
-        }.flatten
-      Similarity.invalidateCaches()
-      val (cents, assign) = Similarity.indexForTest(spark, sfDir)
-      Seq("centroids" -> cents, "assign" -> assign).foreach { case (n, df) =>
-        val roots = scanRoots(df)
-        assert(roots.nonEmpty && roots.forall(_.contains("_ivf_kmeans_")),
-          s"cold $n table not served from the artifact: ${roots.take(2).mkString(",")}")
-      }
-      val b = Similarity.s04IvfKmeans(spark, sfDir).collect().toSeq
-      assert(a == b, "artifact-served results must equal the trained build")
-      // a fingerprint mismatch (stale/foreign artifact) forces a retrain
-      val out = fs.create(new Path(path + "/_fingerprint"), true)
-      try out.write("stale".getBytes("UTF-8")) finally out.close()
-      Similarity.invalidateCaches()
-      val (cents2, _) = Similarity.indexForTest(spark, sfDir)
-      assert(scanRoots(cents2).exists(_.contains("embeddings.parquet")),
-        "a stale fingerprint must trigger a rebuild from the source table")
-    } finally {
-      System.clearProperty("graft.ivf.durable")
-      wipe()
-      Similarity.invalidateCaches()
     }
   }
 

@@ -271,7 +271,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("durable contaminated-doc artifact: a cold session reads the list from disk") {
     import org.apache.hadoop.fs.Path
-    val path = TextAnalysis.contamArtifactPath(sfDir)
+    val path = TextAnalysis.contamArtifact.path(sfDir)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def wipe(): Unit =
       Seq(path, path + "_old", path + "_staging")
@@ -309,12 +309,22 @@ class TextAnalysisSpec extends SparkSpec {
       val x02 = graft.pipeline.Export.x02DecontaminatedExport(spark, sfDir)
         .collect().map(_.getAs[Long]("doc_id")).toSeq
       TextAnalysis.invalidateCaches()
-      // a stale fingerprint (foreign/outdated artifact) forces a re-sweep
+      // a stale fingerprint (foreign/outdated artifact) forces a re-sweep:
+      // exactly one republish, restamped with the current fingerprint
+      // (the rebuilt frame itself is served from the republished parquet)
       val out = fs.create(new Path(path + "/_fingerprint"), true)
       try out.write("stale".getBytes("UTF-8")) finally out.close()
+      val published = ArtifactStore.publishEvents.getOrElse(path, 0L)
       val rebuilt = TextAnalysis.contaminatedDocs(spark, sfDir)
-      assert(scanRoots(rebuilt).exists(_.contains("documents.parquet")),
-        "a stale fingerprint must trigger a re-sweep from the source table")
+      assert(ArtifactStore.publishEvents.getOrElse(path, 0L) == published + 1,
+        "a stale fingerprint must trigger exactly one re-sweep and republish")
+      val stamped = {
+        val in = fs.open(new Path(path + "/_fingerprint"))
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        finally in.close()
+      }
+      assert(stamped == TextAnalysis.contamArtifact.currentFingerprint(spark, sfDir),
+        "the re-sweep must restamp the current fingerprint")
       assert(rebuilt.collect().map(_.getLong(0)).toSet == warm)
       assert(graft.pipeline.Export.x02DecontaminatedExport(spark, sfDir)
         .collect().map(_.getAs[Long]("doc_id")).toSeq == x02,
