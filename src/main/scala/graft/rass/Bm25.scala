@@ -16,14 +16,16 @@ import graft.rass.expressions.Bm25Field
   * DuckDB oracle. k1 = 1.2, b = 0.75 (textbook defaults).
   *
   * Execution shape (100 TB): per-field stats (N, avgdl, per-term df for
-  * the query terms) are ONE small row on the driver — looked up in the
-  * materialized stats tables, or one aggregate collected — from which
-  * the driver computes each field's idf. Each scored field is then one
-  * native `bm25_field` call in the scan's projection, holding the
-  * query's accept sets and parameters as reference objects: no join,
-  * no per-term expression tree, and one generated class per field list
-  * whatever the question; per-document tf/dl come from one pass over
-  * the token array in the same scan that evaluates the filter.
+  * the query terms) are ONE small row on the driver, looked up in the
+  * materialized corpus-stats tables ([[CorpusStats]]), from which the
+  * driver computes each field's idf. A fuzzy clause's typo variants
+  * come from the same tables' vocabulary ([[fuzzyAcceptSets]]). Each
+  * scored field is then one native `bm25_field` call in the scan's
+  * projection, holding the query's accept sets and parameters as
+  * reference objects: no join, no per-term expression tree, and one
+  * generated class per field list whatever the question; per-document
+  * tf/dl come from one pass over the token array in the same scan that
+  * evaluates the filter.
   */
 object Bm25 {
 
@@ -38,46 +40,18 @@ object Bm25 {
     */
   val inlineToks: String => Column = f => Analyzer.tokens(col(f))
 
-  /** ONE stats row for ALL fields in a single scan: for each field,
-    * `s_<f>_n_docs` (docs with the field non-null), `s_<f>_avgdl`, and
-    * `s_<f>_df_<i>` per query term. One aggregate job regardless of how
-    * many fields a search scores — at ingest time this same aggregate
-    * materializes as the corpus-stats table.
-    */
-  def allStats(docs: DataFrame, fields: Seq[String], terms: Seq[String],
-      tok: String => Column = inlineToks): DataFrame = {
-    val aggCols = fields.flatMap { f =>
-      val toksCol = tok(f)
-      val nDocs = sum(when(col(f).isNotNull, 1L).otherwise(0L)).cast("double")
-      // CASE keeps the division un-evaluated when the (possibly
-      // filtered) corpus has no rows for the field — ANSI mode would
-      // otherwise raise DIVIDE_BY_ZERO; the score is 0 for such fields
-      // anyway (every row is null there).
-      Seq(
-        nDocs.as(s"s_${f}_n_docs"),
-        when(nDocs > 0,
-          sum(when(col(f).isNotNull, size(toksCol).cast("long")).otherwise(0L))
-            .cast("double") / nDocs).as(s"s_${f}_avgdl")) ++
-        terms.zipWithIndex.map { case (t, i) =>
-          sum(when(col(f).isNotNull && array_contains(toksCol, t), 1L)
-            .otherwise(0L)).cast("double").as(s"s_${f}_df_$i")
-        }
-    }
-    docs.agg(aggCols.head, aggCols.tail: _*)
-  }
-
   /** One field's BM25 score for the query: a single native
     * `bm25_field` call over the field's token array, fed by the driver-
     * side `stats` row (`s_<field>_{n_docs,avgdl,df_<i>}`, from
-    * [[inlineStats]] or [[materializedStats]]). Per term, `sets(i)` is
-    * the term's accept set and `dist(i)` its edit distance (0 = set
-    * membership). The idf is computed here, on the driver, with the
-    * Column formula's arithmetic `(n - df + 0.5) / (df + 0.5)`; a null
-    * field scores 0. The accept sets and the parameters reach the
-    * generated code as reference objects, so the scoring plan's
-    * generated class is the same for every question over these fields.
+    * [[materializedStats]]). Per term, `sets(i)` is the term's accept
+    * set: its tf counts the tokens that are members. The idf is computed
+    * here, on the driver, with the Column formula's arithmetic
+    * `(n - df + 0.5) / (df + 0.5)`; a null field scores 0. The accept
+    * sets and the parameters reach the generated code as reference
+    * objects, so the scoring plan's generated class is the same for
+    * every question over these fields.
     */
-  private def fieldScore(field: String, sets: Seq[Seq[String]], dist: Seq[Int],
+  private def fieldScore(field: String, sets: Seq[Seq[String]],
       stats: Row, tok: String => Column): Column = {
     def stat(name: String): java.lang.Double =
       stats.getAs[java.lang.Double](s"s_${field}_$name")
@@ -87,8 +61,7 @@ object Bm25 {
       if (n == null || df == null) null
       else java.lang.Double.valueOf((n - df + 0.5) / (df + 0.5))
     }
-    val params = ((stat("avgdl") +: idf) ++
-      dist.map(d => java.lang.Double.valueOf(d.toDouble))).toArray
+    val params = (stat("avgdl") +: idf).toArray
     // a field's tokens are null exactly when the field is; reading the
     // token column twice keeps CollapseProject from inlining the
     // tokenizer's lambda into the scoring projection, which would take
@@ -101,21 +74,13 @@ object Bm25 {
   /** BM25 score of `field` for the query terms (exact match). */
   def score(field: String, terms: Seq[String], stats: Row,
       tok: String => Column = inlineToks): Column =
-    fieldScore(field, terms.map(Seq(_)), terms.map(_ => 0), stats, tok)
-
-  /** Fuzzy variant (`fuzziness: AUTO`): tf counts tokens within the
-    * term's AUTO edit distance (0/1/2 by length; Levenshtein is
-    * integer-exact in both engines). df stays exact-term — a
-    * deliberate simplification kept identical on both sides.
-    */
-  def scoreFuzzy(field: String, terms: Seq[String], stats: Row,
-      tok: String => Column = inlineToks): Column =
-    fieldScore(field, terms.map(Seq(_)), terms.map(Analyzer.autoFuzz), stats, tok)
+    fieldScore(field, terms.map(Seq(_)), stats, tok)
 
   /** Fuzzy accept sets from the MATERIALIZED vocabulary: for each
     * (scored field, query term), the vocabulary tokens within the
-    * term's AUTO edit distance. The same accept set [[scoreFuzzy]]'s
-    * per-row scan admits — every token of every document row is by
+    * term's AUTO edit distance (0/1/2 by length; Levenshtein is
+    * integer-exact in both engines). The same tokens a per-row bounded
+    * Levenshtein scan admits — every token of every document row is by
     * construction a member of its field's vocabulary — but the
     * edit-distance work is VOCAB-sized (one pass over the persisted
     * termStats table, |vocab| x |terms| bounded comparisons) instead of
@@ -128,21 +93,19 @@ object Bm25 {
     *
     * The returned map is TOTAL over (requested field x distinct term):
     * a covered field with no in-distance variants maps to `Nil`
-    * (scores 0, same as the per-row scan), and [[scoreFuzzyVocab]]
-    * treats a MISSING key as a contract violation. Coverage is
-    * validated against `fieldStats`: a requested field the stats
-    * build never covered (externally supplied stats over fewer
-    * fields) throws instead of silently scoring 0 where the per-row
-    * Levenshtein scan would have scored. An entirely empty
-    * `fieldStats` (empty corpus) is NOT a coverage failure — every
+    * (scores 0), and [[scoreFuzzyVocab]] treats a MISSING key as a
+    * contract violation. Coverage is validated against `fieldStats`: a
+    * requested field the stats build never covered (externally
+    * supplied stats over fewer fields) throws instead of silently
+    * scoring 0 where the field's tokens would have matched. An entirely
+    * empty `fieldStats` (empty corpus) is NOT a coverage failure — every
     * field's vocabulary is legitimately empty there.
     */
   def fuzzyAcceptSets(fieldStats: DataFrame, termStats: DataFrame,
       fields: Seq[String],
       terms: Seq[String]): Map[(String, String), Seq[String]] =
     // a query normalized to zero terms ("???") must score 0 on the BM25
-    // clauses, not crash the vocabulary job on an empty OR-reduce — the
-    // per-row fuzzy path got this for free via reduceOption
+    // clauses, not crash the vocabulary job on an empty OR-reduce
     if (terms.isEmpty) Map.empty
     else acceptCache.getOrBuild(
       (termStats.sparkSession, fieldStats.queryExecution.analyzed.canonicalized,
@@ -155,17 +118,17 @@ object Bm25 {
         throw new IllegalArgumentException(
           s"fuzzy accept sets requested for field(s) ${uncovered.mkString(", ")} " +
             s"not covered by the materialized stats (covers: ${covered.mkString(", ")}); " +
-            "rebuild stats over these fields or score them via the per-row fuzzy path")
+            "rebuild stats over these fields")
       buildFuzzyAcceptSets(termStats, fields, terms)
     }
 
   /** Accept-set lookups memoized per (session, fieldStats plan,
     * termStats plan, fields, terms): a repeated query re-uses the
     * collected sets instead of re-running the vocabulary job — the
-    * same keying discipline as [[graft.rass.RassEngine]]'s
-    * builtStatsCache (canonicalized plans compare structurally, so two
-    * corpora never share an entry). fieldStats is part of the key even
-    * though only the coverage VALIDATION reads it: keyed on termStats
+    * same keying discipline as [[Corpus.statsOf]] (canonicalized plans
+    * compare structurally, so two corpora never share an entry).
+    * fieldStats is part of the key even though only the coverage
+    * VALIDATION reads it: keyed on termStats
     * alone, a later call with the same vocabulary but a different,
     * non-covering fieldStats would hit the cache and silently skip the
     * coverage check that call was owed. Entries are dropped by
@@ -206,11 +169,11 @@ object Bm25 {
       yield (f, t) -> matched.getOrElse((f, t), Nil)).toMap
   }
 
-  /** [[scoreFuzzy]] with the per-term fuzzy scan replaced by exact
-    * membership in a precomputed accept set ([[fuzzyAcceptSets]]):
-    * identical tf (membership count == bounded-distance count), one
-    * hash lookup per token instead of a Levenshtein band per token and
-    * term.
+  /** Fuzzy variant (`fuzziness: AUTO`): tf counts the tokens that are
+    * members of the term's accept set ([[fuzzyAcceptSets]]) — the same
+    * count as a per-token bounded Levenshtein test, at one hash lookup
+    * per token. df stays exact-term — a deliberate simplification kept
+    * identical in the DuckDB mirror ([[Sql.scoreFuzzy]]).
     */
   def scoreFuzzyVocab(field: String, terms: Seq[String], stats: Row,
       accept: Map[(String, String), Seq[String]],
@@ -220,41 +183,29 @@ object Bm25 {
       // were built for, so a miss means THIS field/term was never
       // built — scoring it 0 would be a silent relevance regression
       throw new IllegalStateException(
-        s"no accept set built for ($field, $t); build fuzzyAcceptSets " +
-          "over this field or score it via scoreFuzzy")))
-    fieldScore(field, sets, terms.map(_ => 0), stats, tok)
+        s"no accept set built for ($field, $t); build fuzzyAcceptSets over this field")))
+    fieldScore(field, sets, stats, tok)
   }
 
   /** `best_fields` multi_match: max over fields of (BM25 x field boost),
     * then x clause boost, with every field's stats read from the one
-    * driver-side `stats` row. When `accept` is provided, fuzzy clauses
-    * score via the vocabulary accept sets (the materialized-stats fast
-    * path); without it they fall back to the per-row bounded-Levenshtein
-    * scan.
+    * driver-side `stats` row.
     */
   def bestFields(fields: Seq[(String, Double)], terms: Seq[String], stats: Row,
-      clauseBoost: Double = 1.0, fuzzy: Boolean = false,
-      tok: String => Column = inlineToks,
-      accept: Option[Map[(String, String), Seq[String]]] = None): Column = {
-    val scores = fields.map { case (f, boost) =>
-      (if (fuzzy) accept match {
-        case Some(a) => scoreFuzzyVocab(f, terms, stats, a, tok)
-        case None => scoreFuzzy(f, terms, stats, tok)
-      }
-      else score(f, terms, stats, tok)) * boost
-    }
-    greatest(scores: _*) * clauseBoost
-  }
+      clauseBoost: Double = 1.0, tok: String => Column = inlineToks): Column =
+    best(fields, clauseBoost)(score(_, terms, stats, tok))
 
-  /** The query's stats from one aggregate over `docs` ([[allStats]]),
-    * collected to the driver, where the scoring expressions read them
-    * as literals.
+  /** [[bestFields]] with `fuzziness: AUTO`: every field scores its
+    * terms' vocabulary accept sets ([[fuzzyAcceptSets]]).
     */
-  def inlineStats(docs: DataFrame, fields: Seq[String], terms: Seq[String],
-      tok: String => Column = inlineToks): Row = {
-    Bm25Field.register(docs.sparkSession)
-    allStats(docs, fields, terms, tok).head()
-  }
+  def fuzzyBestFields(fields: Seq[(String, Double)], terms: Seq[String], stats: Row,
+      accept: Map[(String, String), Seq[String]], clauseBoost: Double = 1.0,
+      tok: String => Column = inlineToks): Column =
+    best(fields, clauseBoost)(scoreFuzzyVocab(_, terms, stats, accept, tok))
+
+  private def best(fields: Seq[(String, Double)], clauseBoost: Double)(
+      scoreOf: String => Column): Column =
+    greatest(fields.map { case (f, boost) => scoreOf(f) * boost }: _*) * clauseBoost
 
   /** The query's stats reconstructed from the MATERIALIZED corpus
     * statistics ([[CorpusStats.statsRow]]) instead of re-aggregating
@@ -289,8 +240,9 @@ object Bm25 {
     def toks(field: String): String =
       s"list_filter(string_split_regex(lower($field), '[^a-z0-9]+'), t -> t != '')"
 
-    /** Single stats SELECT over `docsRel` for all fields — same column
-      * names and math as [[Bm25.allStats]].
+    /** Single stats SELECT over `docsRel` for all fields: the stats
+      * row [[CorpusStats.statsRow]] reconstructs, same column names and
+      * math.
       */
     def allStatsSelect(fields: Seq[String], terms: Seq[String],
         docsRel: String): String = {
@@ -327,7 +279,10 @@ object Bm25 {
       s"CASE WHEN $field IS NOT NULL THEN ($perTerm) ELSE 0.0 END"
     }
 
-    /** Fuzzy score mirror of [[Bm25.scoreFuzzy]]. */
+    /** Fuzzy score mirror of [[Bm25.scoreFuzzyVocab]]: a per-row
+      * bounded Levenshtein test admits the same tokens as the
+      * vocabulary accept set.
+      */
     def scoreFuzzy(field: String, terms: Seq[String], sp: String): String = {
       val tk = toks(field)
       val perTerm = terms.zipWithIndex.map { case (t, i) =>

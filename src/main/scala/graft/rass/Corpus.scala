@@ -201,21 +201,33 @@ object Corpus {
   private val cache = Memo.frames("r.corpus")
 
   /** Materialized BM25 corpus statistics over every BM25-scored field
-    * (the ingest-time path, [[CorpusStats]]): built ONCE per (session,
-    * dir) and cached, so searches look up their stats row from these
-    * tables instead of re-aggregating the corpus per query. In a real
-    * deployment these are parquet tables the ingest job maintains
-    * additively (CorpusStatsSpec proves batch merge = rebuild).
+    * of [[corpus]] ([[statsOf]]). In a real deployment these are
+    * parquet tables the ingest job maintains additively
+    * (CorpusStatsSpec proves batch merge = rebuild).
     */
   def stats(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    statsCache.getOrBuild((spark, dir)) {
-      val (f, t) = CorpusStats.build(corpus(spark, dir), DocSchema.scoredFields)
+    statsOf(corpus(spark, dir))
+
+  /** The (fieldStats, termStats) pair of `docs` over every BM25-scored
+    * field ([[CorpusStats.build]]), built ONCE per (session, corpus
+    * plan) and kept persisted, so searches look up their stats row from
+    * these tables instead of re-aggregating the corpus per query, and
+    * the registry's searches and every [[RassEngine]] over the same
+    * corpus share one pair. The key is the CANONICALIZED plan object,
+    * not its 32-bit semanticHash: canonical plans compare structurally
+    * (= semanticEquals), so two different corpora in one session can
+    * never collide into sharing stats.
+    */
+  def statsOf(docs: DataFrame): (DataFrame, DataFrame) =
+    statsCache.getOrBuild((docs.sparkSession, docs.queryExecution.analyzed.canonicalized)) {
+      val (f, t) = CorpusStats.build(docs, DocSchema.scoredFields)
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       (f.persist(lvl), t.persist(lvl))
     }
 
-  private val statsCache = Memo.cache[(SparkSession, String), (DataFrame, DataFrame)](
-    "r.stats", Memo.unpersist)
+  private val statsCache = Memo.cache[
+    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
+    (DataFrame, DataFrame)]("r.stats", Memo.unpersist)
 
   /** Release the memoized corpus and stats tables (see
     * [[graft.pipeline.Dedup.invalidateCaches]] for the policy), and with

@@ -6,24 +6,23 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Ingest-time BM25 corpus statistics (SURVEY §7: "corpus-stats
-  * maintained incrementally").
-  *
-  * [[Bm25.allStats]] computes the per-query stats row with one
-  * aggregate over the corpus — fine interactively, but at 100 TB a
-  * search shouldn't re-scan the corpus for statistics it didn't change.
-  * This module materializes the full statistics once per ingest:
+  * maintained incrementally"), the only statistics a search scores
+  * with: at 100 TB a search must not re-scan the corpus for statistics
+  * it didn't change. This module materializes the full statistics once
+  * per ingest:
   *
   *   - `fieldStats(field, n_docs, sum_dl)` — one row per scored field;
   *   - `termStats(field, term, df)` — document frequency for every
   *     vocabulary term of every field (the "posting-list head" without
-  *     the postings).
+  *     the postings), which is also the vocabulary fuzzy clauses draw
+  *     their typo variants from ([[Bm25.fuzzyAcceptSets]]).
   *
   * Both come from ONE scan (fields stacked as an array-of-structs, then
-  * exploded). [[statsRow]] reconstructs the exact stats row
-  * [[Bm25.bestFields]] reads on the driver — the spec asserts
-  * bit-equality with [[Bm25.allStats]], so a search can swap in the
-  * materialized table with zero scoring drift. Incremental maintenance
-  * is additive: df, n_docs, and sum_dl are all sums, so a new batch's
+  * exploded). [[statsRow]] reconstructs the stats row
+  * [[Bm25.bestFields]] reads on the driver — bit-equal to one aggregate
+  * over the whole corpus (CorpusStatsSpec), the row the DuckDB oracle's
+  * `Bm25.Sql.allStatsSelect` computes. Incremental maintenance is
+  * additive: df, n_docs, and sum_dl are all sums, so a new batch's
   * stats merge by addition (and removal subtracts) without rescanning
   * history.
   */
@@ -83,8 +82,8 @@ object CorpusStats {
   }
 
   /** Reconstruct the query's stats row (field names
-    * `s_<field>_{n_docs,avgdl,df_<i>}`, the one row [[Bm25.allStats]]
-    * aggregates) on the driver from the materialized tables, for
+    * `s_<field>_{n_docs,avgdl,df_<i>}`) on the driver from the
+    * materialized tables, for
     * [[Bm25.bestFields]] to read its idfs and avgdls from. The lookup
     * touches only |fields| + |fields|x|terms| rows — no corpus scan.
     */
@@ -98,8 +97,8 @@ object CorpusStats {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val values = fields.flatMap { f =>
       val (nDocs, sumDl) = fs.getOrElse(f, (0L, 0L))
-      // same arithmetic as Bm25.allStats: long sums cast to double, then
-      // divide — avgdl null when the field never appears
+      // same arithmetic as the oracle's aggregate: long sums cast to
+      // double, then divide — avgdl null when the field never appears
       val avgdl: Any =
         if (nDocs > 0) sumDl.toDouble / nDocs.toDouble else null
       Seq[Any](nDocs.toDouble, avgdl) ++

@@ -387,24 +387,12 @@ final class RassEngine(
   /** BM25 statistics for the scoring searches: the caller's materialized
     * tables when given (ingest maintains them incrementally,
     * [[graft.rass.ingest.IngestCommit]]); otherwise built ONCE from
-    * `docs` and kept persisted — an engine must never re-aggregate the
-    * corpus per ask() (at 100 TB that is a second full scan per query).
-    * The build is cached per (session, corpus plan), so many engine
-    * instances over the same corpus share one persisted pair instead of
-    * each stranding its own copy in executor storage. The key is the
-    * CANONICALIZED plan object, not its 32-bit semanticHash: canonical
-    * plans compare structurally (= semanticEquals), so two different
-    * corpora in one session can never collide into sharing stats.
+    * `docs` and kept persisted ([[Corpus.statsOf]]) — an engine must
+    * never re-aggregate the corpus per ask() (at 100 TB that is a second
+    * full scan per query).
     */
-  private lazy val effectiveStats: Option[(DataFrame, DataFrame)] =
-    stats.orElse {
-      val key = (docs.sparkSession, docs.queryExecution.analyzed.canonicalized)
-      Some(RassEngine.builtStatsCache.getOrBuild(key) {
-        val (f, t) = CorpusStats.build(docs, DocSchema.scoredFields)
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        (f.persist(lvl), t.persist(lvl))
-      })
-    }
+  private lazy val effectiveStats: (DataFrame, DataFrame) =
+    stats.getOrElse(Corpus.statsOf(docs))
 
   /** Fields the reference excludes from structured snippets
     * (`main.py:2904-2908`).
@@ -623,13 +611,4 @@ final class RassEngine(
     }
     Answer(queryText, intent, answer, hits, patient)
   }
-}
-
-object RassEngine {
-  /** Built-stats sharing across engine instances: keyed by the corpus
-    * plan's canonicalized form within a session (see `effectiveStats`).
-    */
-  private[rass] val builtStatsCache = graft.Memo.cache[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (DataFrame, DataFrame)]("r.builtStats", graft.Memo.unpersist)
 }

@@ -42,7 +42,7 @@ object RassQueries {
       Searches.q2Semantic(Corpus.corpus(s, dir), qv(s, dir), K)),
     "r03_hybrid" -> ((s, dir) =>
       Searches.q3Hybrid(Corpus.corpus(s, dir), "diabetes treatment", qv(s, dir), K,
-        stats = Some(Corpus.stats(s, dir)))),
+        stats = Corpus.stats(s, dir))),
     "r04_structured" -> ((s, dir) =>
       Searches.q4Structured(Corpus.corpus(s, dir), "blood pressure", K)),
     "r05_hybrid_structured" -> ((s, dir) =>
@@ -51,15 +51,15 @@ object RassQueries {
       Searches.q6Aggregate(Corpus.corpus(s, dir))),
     "r07_comparison" -> ((s, dir) =>
       Searches.q7Comparison(Corpus.corpus(s, dir), "metformin ibuprofen", K,
-        stats = Some(Corpus.stats(s, dir)))),
+        stats = Corpus.stats(s, dir))),
     "r08_temporal" -> ((s, dir) =>
       Searches.q8Temporal(Corpus.corpus(s, dir), "checkup", Now, K)),
     "r09_explanatory" -> ((s, dir) =>
       Searches.q9Explanatory(Corpus.corpus(s, dir), "note severity", K,
-        stats = Some(Corpus.stats(s, dir)))),
+        stats = Corpus.stats(s, dir))),
     "r10_multi_intent" -> ((s, dir) =>
       Searches.q10MultiIntent(Corpus.corpus(s, dir), "diabetes", qv(s, dir), Now, K,
-        stats = Some(Corpus.stats(s, dir)))),
+        stats = Corpus.stats(s, dir))),
     "r11_entity_specific" -> ((s, dir) =>
       Searches.q11EntitySpecific(Corpus.corpus(s, dir), "alice johnson", K)),
     "r12_document_fetch" -> ((s, dir) =>

@@ -28,9 +28,11 @@ import DocSchema._
   * computing a score expression inline, then TakeOrderedAndProject for
   * top-k — no join, no shuffle except the single top-k reduction; the
   * BM25 ones first read one small stats row on the driver (a lookup in
-  * the materialized corpus-stats tables, or one aggregate collected)
+  * the materialized corpus-stats tables they are given, [[CorpusStats]])
   * and score each field with one native `bm25_field` call whose query
-  * terms, accept sets and statistics are runtime parameters.
+  * terms, accept sets and statistics are runtime parameters. The stats
+  * are corpus-global: a patient or entity filter narrows the rows
+  * scored, never the idf or avgdl they are scored with.
   */
 object Searches {
 
@@ -65,31 +67,20 @@ object Searches {
     f2.map(docs.filter).getOrElse(docs)
   }
 
-  /** The query's BM25 stats on the driver: from the MATERIALIZED
-    * corpus-stats tables when provided (the 100 TB path — no per-query
-    * corpus re-aggregate; bit-equal to the direct aggregate,
-    * CorpusStatsSpec), else one inline aggregate over the (filtered)
-    * docs, collected.
+  /** The query's BM25 stats row on the driver, looked up in the
+    * materialized corpus-stats tables `stats` = (fieldStats, termStats):
+    * no per-query corpus re-aggregate.
     */
-  private def queryStats(docsTok: DataFrame, fields: Seq[String],
-      terms: Seq[String], tok: String => Column,
-      stats: Option[(DataFrame, DataFrame)]): Row = stats match {
-    case Some((fs, ts)) =>
-      Bm25.materializedStats(docsTok.sparkSession, fs, ts, fields, terms)
-    case None => Bm25.inlineStats(docsTok, fields, terms, tok)
-  }
+  private def queryStats(docs: DataFrame, stats: (DataFrame, DataFrame),
+      fields: Seq[String], terms: Seq[String]): Row =
+    Bm25.materializedStats(docs.sparkSession, stats._1, stats._2, fields, terms)
 
-  /** Fuzzy accept sets for the fuzzy-scored fields — only available on
-    * the materialized-stats path (the vocabulary IS the termStats
-    * table); without stats the fuzzy clauses fall back to the per-row
-    * bounded-Levenshtein scan inside [[Bm25.scoreFuzzy]].
+  /** Fuzzy accept sets for the fuzzy-scored fields: the vocabulary IS
+    * the termStats table.
     */
-  private def fuzzyAccept(stats: Option[(DataFrame, DataFrame)],
-      fields: Seq[(String, Double)],
-      terms: Seq[String]): Option[Map[(String, String), Seq[String]]] =
-    stats.map { case (fs, ts) =>
-      Bm25.fuzzyAcceptSets(fs, ts, fields.map(_._1), terms)
-    }
+  private def fuzzyAccept(stats: (DataFrame, DataFrame), fields: Seq[(String, Double)],
+      terms: Seq[String]): Map[(String, String), Seq[String]] =
+    Bm25.fuzzyAcceptSets(stats._1, stats._2, fields.map(_._1), terms)
 
   /** The window [now - 1y, now] as an `in_window` predicate on `field`:
     * the bounds reach the generated code as a reference object, so a
@@ -99,9 +90,9 @@ object Searches {
     call_function("in_window", col(field),
       lit(Array(nowMicros - 365L * 86400000000L, nowMicros)))
 
-  /** Project each scored field's token array once (`__tok_<f>`), so the
-    * BM25 stats aggregate and every per-term tf read a column reference
-    * instead of re-tokenizing — the dominant cost in multi-field scans.
+  /** Project each scored field's token array once (`__tok_<f>`), so
+    * every scoring call reads a column reference instead of
+    * re-tokenizing — the dominant cost in multi-field scans.
     */
   private def withTokenCols(docs: DataFrame,
       fields: Seq[String]): (DataFrame, String => Column) = {
@@ -146,22 +137,22 @@ object Searches {
 
   /** Q3 — hybrid_search (`main.py:1562-1615`), the default fallback:
     * fuzzy best_fields over text fields x1.5 + best_fields over keyword
-    * fields x1.0 + knn x2.0.
+    * fields x1.0 + knn x2.0. `stats` is the corpus's (fieldStats,
+    * termStats) pair ([[CorpusStats.build]]), as for q7, q9 and q10.
     */
   def q3Hybrid(docs: DataFrame, query: String, queryVec: Seq[Double],
       k: Int = DefaultK, patientId: Option[String] = None,
-      filter: Option[Column] = None,
-      stats: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+      filter: Option[Column] = None, stats: (DataFrame, DataFrame)): DataFrame = {
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
-    val st = queryStats(docsTok, fields, terms, tok, stats)
+    val st = queryStats(docs, stats, fields, terms)
     val qv = array(queryVec.map(lit): _*)
     val knn = coalesce(VectorOps.cosineFused(docs.sparkSession,
       col("embedding").cast("array<double>"), qv), lit(0.0))
-    val score = Bm25.bestFields(textFields, terms, st, 1.5, fuzzy = true, tok = tok,
-      accept = fuzzyAccept(stats, textFields, terms)) +
-      Bm25.bestFields(keywordFields, terms, st, 1.0, tok = tok) + knn * 2.0
+    val score = Bm25.fuzzyBestFields(textFields, terms, st,
+      fuzzyAccept(stats, textFields, terms), 1.5, tok) +
+      Bm25.bestFields(keywordFields, terms, st, 1.0, tok) + knn * 2.0
     topK(docsTok.withColumn("score", score), k)
   }
 
@@ -233,14 +224,13 @@ object Searches {
     */
   def q7Comparison(docs: DataFrame, query: String, k: Int = DefaultK,
       patientId: Option[String] = None, filter: Option[Column] = None,
-      stats: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+      stats: (DataFrame, DataFrame)): DataFrame = {
     val terms = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
       compareFields.map(_._1))
-    val st = queryStats(docsTok, compareFields.map(_._1), terms, tok, stats)
-    topK(docsTok.withColumn("score",
-      Bm25.bestFields(compareFields, terms, st, fuzzy = true, tok = tok,
-        accept = fuzzyAccept(stats, compareFields, terms))), k)
+    val st = queryStats(docs, stats, compareFields.map(_._1), terms)
+    topK(docsTok.withColumn("score", Bm25.fuzzyBestFields(compareFields, terms, st,
+      fuzzyAccept(stats, compareFields, terms), tok = tok)), k)
   }
 
   /** Q8 — temporal_search (`main.py:1866-1918`): any-term text match
@@ -274,14 +264,13 @@ object Searches {
     */
   def q9Explanatory(docs: DataFrame, query: String, k: Int = DefaultK,
       patientId: Option[String] = None, filter: Option[Column] = None,
-      stats: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+      stats: (DataFrame, DataFrame)): DataFrame = {
     val terms = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
       noteFields.map(_._1))
-    val st = queryStats(docsTok, noteFields.map(_._1), terms, tok, stats)
-    topK(docsTok.withColumn("score",
-      Bm25.bestFields(noteFields, terms, st, fuzzy = true, tok = tok,
-        accept = fuzzyAccept(stats, noteFields, terms))), k)
+    val st = queryStats(docs, stats, noteFields.map(_._1), terms)
+    topK(docsTok.withColumn("score", Bm25.fuzzyBestFields(noteFields, terms, st,
+      fuzzyAccept(stats, noteFields, terms), tok = tok)), k)
   }
 
   /** Q10 — multi_intent_search, INTENDED semantics (`main.py:1969-2027`
@@ -290,21 +279,20 @@ object Searches {
     */
   def q10MultiIntent(docs: DataFrame, query: String, queryVec: Seq[Double],
       nowMicros: Long, k: Int = DefaultK, patientId: Option[String] = None,
-      filter: Option[Column] = None,
-      stats: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+      filter: Option[Column] = None, stats: (DataFrame, DataFrame)): DataFrame = {
     graft.rass.expressions.InWindow.register(docs.sparkSession)
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
-    val st = queryStats(docsTok, fields, terms, tok, stats)
+    val st = queryStats(docs, stats, fields, terms)
     val qv = array(queryVec.map(lit): _*)
     val knn = coalesce(VectorOps.cosineFused(docs.sparkSession,
       col("embedding").cast("array<double>"), qv), lit(0.0))
     val dateBonus = dateFields.map(f =>
       when(withinYear(f, nowMicros), lit(0.5)).otherwise(lit(0.0))).reduce(_ + _)
-    val score = Bm25.bestFields(textFields, terms, st, 1.0, fuzzy = true, tok = tok,
-      accept = fuzzyAccept(stats, textFields, terms)) +
-      Bm25.bestFields(keywordFields, terms, st, 0.5, tok = tok) + knn * 1.5 + dateBonus
+    val score = Bm25.fuzzyBestFields(textFields, terms, st,
+      fuzzyAccept(stats, textFields, terms), 1.0, tok) +
+      Bm25.bestFields(keywordFields, terms, st, 0.5, tok) + knn * 1.5 + dateBonus
     topK(docsTok.withColumn("score", score), k)
   }
 

@@ -18,12 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `tokens`: the field's token array;
   *   - `present`: the field is non-null (a null field scores 0.0);
   *   - `accept`: `array<array<string>>`, one set per query term — the
-  *     exact term, its vocabulary typo variants, or (per-row fuzzy
-  *     scan) the term alone;
+  *     exact term alone, or (`fuzziness: AUTO`) the term's typo
+  *     variants found in the field's vocabulary; a term's tf counts
+  *     the tokens that are members of its set;
   *   - `params`: `array<double>`, the field's avgdl, then one idf per
-  *     term, then one edit distance per term: 0 counts tokens that are
-  *     members of the term's set, d > 0 counts tokens within Levenshtein
-  *     distance d of the set's one term (`fuzziness: AUTO`).
+  *     term.
   *
   * `accept` and `params` must be literals: they are read once into a
   * [[Bm25Kernel]] that the generated code holds as a reference object,
@@ -95,19 +94,17 @@ case class Bm25Field(tokens: Expression, present: Expression, accept: Expression
 /** A query's scoring state for one field, read once from the literal
   * `accept` and `params` of [[Bm25Field]].
   */
-final class Bm25Kernel private (sets: Array[Array[UTF8String]], dist: Array[Int],
+final class Bm25Kernel private (sets: Array[Array[UTF8String]],
     idf: Array[Double], avgdl: Option[Double], val nullIdf: Boolean) extends Serializable {
 
   import graft.rass.Bm25.{B, K1}
 
   private val nTerms = sets.length
-  // the terms scored by a per-token edit-distance scan
-  private val scanned = dist.indices.filter(dist(_) > 0).toArray
-  // every other term counts set membership: accepted token -> the
-  // terms whose set holds it (two query terms may share a variant)
+  // accepted token -> the terms whose set holds it (two query terms
+  // may share a variant)
   private val members: java.util.HashMap[UTF8String, Array[Int]] = {
     val m = new java.util.HashMap[UTF8String, Array[Int]]()
-    for (i <- 0 until nTerms if dist(i) == 0; v <- sets(i).distinct)
+    for (i <- 0 until nTerms; v <- sets(i).toSet)
       m.put(v, Option(m.get(v)).getOrElse(Array.empty[Int]) :+ i)
     m
   }
@@ -124,18 +121,10 @@ final class Bm25Kernel private (sets: Array[Array[UTF8String]], dist: Array[Int]
     var j = 0
     while (j < n) {
       if (!toks.isNullAt(j)) {
-        val tok = toks.getUTF8String(j)
-        val hit = members.get(tok)
+        val hit = members.get(toks.getUTF8String(j))
         if (hit != null) {
           var h = 0
           while (h < hit.length) { tf(hit(h)) += 1; h += 1 }
-        }
-        var s = 0
-        while (s < scanned.length) {
-          val i = scanned(s)
-          // bounded variant, as term_freq: -1 above the threshold
-          if (tok.levenshteinDistance(sets(i)(0), dist(i)) >= 0) tf(i) += 1
-          s += 1
         }
       }
       j += 1
@@ -159,9 +148,8 @@ final class Bm25Kernel private (sets: Array[Array[UTF8String]], dist: Array[Int]
 object Bm25Kernel {
   def apply(accept: ArrayData, params: ArrayData): Bm25Kernel = {
     val nTerms = accept.numElements()
-    require(params.numElements() == 1 + 2 * nTerms,
-      s"bm25_field params hold avgdl, $nTerms idfs and $nTerms distances; " +
-        s"got ${params.numElements()} values")
+    require(params.numElements() == 1 + nTerms,
+      s"bm25_field params hold avgdl and $nTerms idfs; got ${params.numElements()} values")
     val sets = Array.tabulate(nTerms) { i =>
       if (accept.isNullAt(i)) Array.empty[UTF8String]
       else {
@@ -170,14 +158,11 @@ object Bm25Kernel {
           .map(j => s.getUTF8String(j).clone()).toArray
       }
     }
-    val dist = Array.tabulate(nTerms)(i => params.getDouble(1 + nTerms + i).toInt)
-    sets.indices.filter(dist(_) > 0).foreach(i => require(sets(i).length == 1,
-      s"bm25_field: a scanned term's set holds the term alone, got ${sets(i).length}"))
     val nullIdf = (0 until nTerms).exists(i => params.isNullAt(1 + i))
     val idf = Array.tabulate(nTerms)(i =>
       if (params.isNullAt(1 + i)) 0.0 else params.getDouble(1 + i))
     val avgdl = if (params.isNullAt(0)) None else Some(params.getDouble(0))
-    new Bm25Kernel(sets, dist, idf, avgdl, nullIdf)
+    new Bm25Kernel(sets, idf, avgdl, nullIdf)
   }
 }
 

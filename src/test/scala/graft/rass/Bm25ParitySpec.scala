@@ -8,59 +8,18 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 
-/** `bm25_field` against the composed BM25 formula it replaced, bit for
-  * bit, on generated queries (ScalaCheck, fixed seed), in both the
-  * generated-code and the interpreted evaluation paths.
+/** `bm25_field` against the composed BM25 formula it replaced
+  * ([[Bm25Reference]]), bit for bit, on generated queries (ScalaCheck,
+  * fixed seed), in both the generated-code and the interpreted
+  * evaluation paths.
   */
 class Bm25ParitySpec extends SparkSpec {
-
-  /** The composed Column formula, kept here as the reference: per-term
-    * idf x saturation over `term_freq` counts, with the stats read from
-    * a joined one-row frame of `s_<field>_{n_docs,avgdl,df_<i>}`.
-    */
-  private object Reference {
-    import Bm25.{B, K1}
-
-    private def tf(toks: Column, term: String, fuzz: Int = 0): Column =
-      call_function("term_freq", toks, lit(term), lit(fuzz)).cast("double")
-
-    def scoreWith(field: String, terms: Seq[String], prefix: String,
-        tok: String => Column)(tfFor: (Column, String) => Column): Column = {
-      val toksCol = tok(field)
-      val dl = size(toksCol).cast("double")
-      val avgdl = col(s"${prefix}avgdl")
-      val lnorm = when(avgdl > 0, dl / avgdl).otherwise(lit(0.0))
-      val n = col(s"${prefix}n_docs")
-      val perTerm = terms.zipWithIndex.map { case (t, i) =>
-        val dfT = col(s"${prefix}df_$i")
-        val idf = (n - dfT + lit(0.5)) / (dfT + lit(0.5))
-        val tfT = tfFor(toksCol, t)
-        idf * (tfT * (K1 + 1)) / (tfT + lit(K1) * (lit(1.0) - B + lit(B) * lnorm))
-      }
-      val s = perTerm.reduceOption(_ + _).getOrElse(lit(0.0))
-      when(col(field).isNotNull, s).otherwise(lit(0.0))
-    }
-
-    def exact(f: String, terms: Seq[String], tok: String => Column): Column =
-      scoreWith(f, terms, s"s_${f}_", tok)((c, t) => tf(c, t))
-
-    def fuzzyScan(f: String, terms: Seq[String], tok: String => Column): Column =
-      scoreWith(f, terms, s"s_${f}_", tok)((c, t) => tf(c, t, Analyzer.autoFuzz(t)))
-
-    def fuzzyVocab(f: String, terms: Seq[String], accept: Map[(String, String), Seq[String]],
-        tok: String => Column): Column =
-      scoreWith(f, terms, s"s_${f}_", tok) { (c, t) =>
-        val vs = accept((f, t))
-        if (vs.isEmpty) lit(0.0) else vs.map(v => tf(c, v)).reduce(_ + _)
-      }
-  }
 
   private val vocab = Seq("a", "ab", "abc", "abd", "diabetes", "diabetez", "diabets",
     "diabetic", "asthma", "astma", "x1", "x2", "pain", "paint")
 
   private sealed trait Mode
   private case object Exact extends Mode
-  private case object FuzzyScan extends Mode
   private case object FuzzyVocab extends Mode
 
   /** One generated query: terms, mode, vocabulary accept sets, and the
@@ -74,7 +33,7 @@ class Bm25ParitySpec extends SparkSpec {
   private val genQuery: Gen[Query] = for {
     nTerms <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 4))
     terms <- Gen.listOfN(nTerms, Gen.oneOf(vocab))
-    mode <- Gen.oneOf(Exact, FuzzyScan, FuzzyVocab)
+    mode <- Gen.oneOf(Exact, FuzzyVocab)
     sets <- Gen.listOfN(nTerms, Gen.someOf(vocab))
     emptyAgg <- Gen.frequency(1 -> true, 12 -> false)
     n <- Gen.choose(1, 60)
@@ -131,13 +90,11 @@ class Bm25ParitySpec extends SparkSpec {
     val tok: String => Column = _ => col("toks")
     val st = statsRow(q)
     val ref = q.mode match {
-      case Exact => Reference.exact("f", q.terms, tok)
-      case FuzzyScan => Reference.fuzzyScan("f", q.terms, tok)
-      case FuzzyVocab => Reference.fuzzyVocab("f", q.terms, q.accept, tok)
+      case Exact => Bm25Reference.exact("f", q.terms, tok)
+      case FuzzyVocab => Bm25Reference.fuzzyVocab("f", q.terms, q.accept, tok)
     }
     val fused = q.mode match {
       case Exact => Bm25.score("f", q.terms, st, tok)
-      case FuzzyScan => Bm25.scoreFuzzy("f", q.terms, st, tok)
       case FuzzyVocab => Bm25.scoreFuzzyVocab("f", q.terms, st, q.accept, tok)
     }
     val statsDf = spark.createDataFrame(java.util.List.of(st), st.schema)
@@ -170,16 +127,18 @@ class Bm25ParitySpec extends SparkSpec {
     // the cases the generator must not leave to chance
     val pinned = Seq(
       Query(Nil, Exact, Map.empty, 5.0, 2.0, Nil),
-      Query(Nil, FuzzyScan, Map.empty, 5.0, null, Nil),
+      Query(Nil, FuzzyVocab, Map.empty, 5.0, null, Nil),
       Query(Nil, FuzzyVocab, Map.empty, 5.0, 2.0, Nil),
       Query(Seq("diabetes", "asthma"), Exact, Map.empty, 12.0, null, Seq[java.lang.Double](3.0, 1.0)),
-      Query(Seq("diabetes", "diabetes"), FuzzyScan, Map.empty, 12.0, 3.5, Seq[java.lang.Double](3.0, 3.0)),
+      Query(Seq("diabetes", "diabetes"), FuzzyVocab,
+        Map(("f", "diabetes") -> Seq("diabetes", "diabetez", "diabets")),
+        12.0, 3.5, Seq[java.lang.Double](3.0, 3.0)),
       Query(Seq("diabetes", "ab"), FuzzyVocab,
         Map(("f", "diabetes") -> Seq("diabetes", "diabetez", "diabets"), ("f", "ab") -> Nil),
         12.0, 0.0, Seq[java.lang.Double](4.0, 2.0)),
       Query(Seq("pain"), Exact, Map.empty, null, null, Seq[java.lang.Double](null)))
     val queries = pinned ++ generated
-    assert(queries.map(_.mode).toSet == Set(Exact, FuzzyScan, FuzzyVocab))
+    assert(queries.map(_.mode).toSet == Set(Exact, FuzzyVocab))
     assert(queries.exists(q => q.avgdl == null && q.nDocs != null))
     assert(queries.exists(_.terms.isEmpty))
     for (q <- queries) {

@@ -3,11 +3,6 @@ package graft.rass
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 import java.sql.Timestamp
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** The parquet chat store's cost and file-format contract: an append
@@ -18,34 +13,6 @@ import graft.SparkSpec
   * compacts to exactly what [[InMemoryChatStore]] holds.
   */
 class ChatStoreSpec extends SparkSpec {
-
-  /** Spark jobs `body` starts on this thread. Jobs are told apart by
-    * job group; the listener bus is asynchronous, so a fence job run
-    * after `body` is awaited before the count is read.
-    */
-  private def jobsRun(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"chat-store-spec-${System.nanoTime()}"
-    val counted = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => counted.incrementAndGet()
-          case g if g == group + "-fence" => fenced.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-      counted.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def table(prefix: String): String =
     Files.createTempDirectory(prefix).resolve("messages").toString
@@ -60,17 +27,17 @@ class ChatStoreSpec extends SparkSpec {
     val store = new ParquetChatStore(spark, path)
     var appended = 0
     for (target <- Seq(1, 33, 63)) {
-      val appendJobs = jobsRun {
+      val appendJobs = jobsDuring {
         while (appended < target) {
           appended += 1
           store.append(ChatMessage("c", if (appended % 2 == 1) "user" else "assistant",
             s"m$appended", at(appended * 1000L)))
         }
-      }
+      }.size
       assert(appendJobs == 0, s"appends up to $target parts ran $appendJobs Spark jobs")
       assert(parts(path).size == target)
       var h: Seq[ChatMessage] = Nil
-      val historyJobs = jobsRun { h = store.history("c") }
+      val historyJobs = jobsDuring { h = store.history("c") }.size
       assert(historyJobs == 1, s"history over $target parts ran $historyJobs Spark jobs")
       assert(h.map(_.content) == (math.max(1, target - 9) to target).map(i => s"m$i"))
     }

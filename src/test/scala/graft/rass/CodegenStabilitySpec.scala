@@ -3,7 +3,6 @@ package graft.rass
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-import org.apache.spark.metrics.source.CodegenMetrics
 
 import graft.SparkSpec
 
@@ -18,7 +17,7 @@ import graft.SparkSpec
 class CodegenStabilitySpec extends SparkSpec {
 
   private lazy val corpus = Corpus.corpus(spark, sfDir)
-  private lazy val stats = Some(Corpus.stats(spark, sfDir))
+  private lazy val stats = Corpus.stats(spark, sfDir)
   private val embedder = new DeterministicEmbedder()
   private def qv(q: String): Seq[Double] =
     embedder.embedBatch(Seq(q)).head.map(_.toDouble).toSeq
@@ -32,15 +31,6 @@ class CodegenStabilitySpec extends SparkSpec {
   private def generated(df: DataFrame): Seq[String] =
     codegenStringSeq(df.queryExecution.executedPlan).map(_._2).sorted
 
-  /** Janino compilations while `df` runs: 0 when every class its plan
-    * needs, whole-stage or not, is already in the codegen cache.
-    */
-  private def compiles(df: DataFrame): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    df.collect()
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
-
   /** `b` is the same search as `a` with another question or clock.
     * Building a DataFrame runs the driver-side stats and accept-set
     * lookups, so what is counted is the scoring plan's own run.
@@ -48,9 +38,10 @@ class CodegenStabilitySpec extends SparkSpec {
   private def assertSameCode(name: String, a: => DataFrame, b: => DataFrame,
       scored: Boolean = true): Unit = {
     val first = a
-    compiles(first)
+    compilesDuring(first.collect())
     val second = b
-    assert(compiles(second) == 0, s"$name: the second question compiled new classes")
+    assert(compilesDuring(second.collect()) == 0,
+      s"$name: the second question compiled new classes")
     val (ca, cb) = (generated(first), generated(second))
     assert(ca.nonEmpty, s"$name: no whole-stage codegen")
     assert(ca == cb, s"$name: the generated code depends on the question " +
@@ -64,20 +55,18 @@ class CodegenStabilitySpec extends SparkSpec {
   private val q2 = "asthma inhaler daily dose metformin"
 
   test("q3/q7/q9/q10: two questions with different terms share their generated code") {
-    for (st <- Seq(stats, None)) {
-      assertSameCode(s"q3 (stats ${st.isDefined})",
-        Searches.q3Hybrid(corpus, q1, qv(q1), stats = st),
-        Searches.q3Hybrid(corpus, q2, qv(q2), stats = st))
-      assertSameCode(s"q7 (stats ${st.isDefined})",
-        Searches.q7Comparison(corpus, q1, stats = st),
-        Searches.q7Comparison(corpus, q2, stats = st))
-      assertSameCode(s"q9 (stats ${st.isDefined})",
-        Searches.q9Explanatory(corpus, q1, stats = st),
-        Searches.q9Explanatory(corpus, q2, stats = st))
-      assertSameCode(s"q10 (stats ${st.isDefined})",
-        Searches.q10MultiIntent(corpus, q1, qv(q1), now1, stats = st),
-        Searches.q10MultiIntent(corpus, q2, qv(q2), now1, stats = st))
-    }
+    assertSameCode("q3",
+      Searches.q3Hybrid(corpus, q1, qv(q1), stats = stats),
+      Searches.q3Hybrid(corpus, q2, qv(q2), stats = stats))
+    assertSameCode("q7",
+      Searches.q7Comparison(corpus, q1, stats = stats),
+      Searches.q7Comparison(corpus, q2, stats = stats))
+    assertSameCode("q9",
+      Searches.q9Explanatory(corpus, q1, stats = stats),
+      Searches.q9Explanatory(corpus, q2, stats = stats))
+    assertSameCode("q10",
+      Searches.q10MultiIntent(corpus, q1, qv(q1), now1, stats = stats),
+      Searches.q10MultiIntent(corpus, q2, qv(q2), now1, stats = stats))
   }
 
   test("q8/q10: the clock is not compiled into the generated code") {
@@ -96,7 +85,6 @@ class CodegenStabilitySpec extends SparkSpec {
       "q1" -> Searches.q1ExactMatch(corpus, q1),
       "q2" -> Searches.q2Semantic(corpus, qv(q1)),
       "q3" -> Searches.q3Hybrid(corpus, q1, qv(q1), stats = stats),
-      "q3 inline" -> Searches.q3Hybrid(corpus, q1, qv(q1)),
       "q4" -> Searches.q4Structured(corpus, q1),
       "q5" -> Searches.q5HybridStructured(corpus, q1, qv(q1)),
       "q6" -> Searches.q6Aggregate(corpus),
@@ -104,7 +92,6 @@ class CodegenStabilitySpec extends SparkSpec {
       "q8" -> Searches.q8Temporal(corpus, q1, now1),
       "q9" -> Searches.q9Explanatory(corpus, q1, stats = stats),
       "q10" -> Searches.q10MultiIntent(corpus, q1, qv(q1), now1, stats = stats),
-      "q10 inline" -> Searches.q10MultiIntent(corpus, q1, qv(q1), now1),
       "q11" -> Searches.q11EntitySpecific(corpus, q1),
       "q12" -> Searches.q12DocumentFetch(corpus, pid))
     for ((name, df) <- plans) {

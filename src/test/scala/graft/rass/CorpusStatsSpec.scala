@@ -11,7 +11,7 @@ class CorpusStatsSpec extends SparkSpec {
     val (fieldStats, termStats) = CorpusStats.build(corpus, fields.distinct)
     val fromTable = CorpusStats.statsRow(fieldStats, termStats,
       fields.distinct, terms)
-    val direct = Bm25.allStats(corpus, fields.distinct, terms).head()
+    val direct = Bm25Reference.allStats(corpus, fields.distinct, terms).head()
     assert(fromTable.schema.fieldNames.sameElements(direct.schema.fieldNames))
     fromTable.schema.fieldNames.foreach { c =>
       val a = fromTable.getAs[Any](c)
@@ -59,12 +59,16 @@ class CorpusStatsSpec extends SparkSpec {
       assert(got == expected, s"$qt: got $got expected $expected")
     }
     assert(accept(("note", "metformin")).size >= 3, "typo variants must be admitted")
-    // and the two scoring paths agree to the bit on every row
-    val stats = Bm25.inlineStats(docs, Seq("note"), terms)
-    val both = docs.withColumn("slow",
-        Bm25.scoreFuzzy("note", terms, stats))
-      .withColumn("fast",
-        Bm25.scoreFuzzyVocab("note", terms, stats, accept))
+    // and the two scoring paths agree to the bit on every row: a per-row
+    // bounded-Levenshtein count (the composed term_freq formula) and the
+    // field scorer of fuzzyBestFields fed the accept sets
+    graft.rass.expressions.TermFrequency.register(spark)
+    graft.rass.expressions.Bm25Field.register(spark)
+    val stats = CorpusStats.statsRow(fieldStats, termStats, Seq("note"), terms)
+    val both = docs
+      .crossJoin(spark.createDataFrame(java.util.List.of(stats), stats.schema))
+      .withColumn("slow", Bm25Reference.fuzzyScan("note", terms, Bm25.inlineToks))
+      .withColumn("fast", Bm25.scoreFuzzyVocab("note", terms, stats, accept))
       .select($"doc_id", $"slow", $"fast").collect()
     both.foreach { r =>
       assert(r.getDouble(1) == r.getDouble(2),
@@ -78,9 +82,10 @@ class CorpusStatsSpec extends SparkSpec {
     val (fieldStats, termStats) = CorpusStats.build(docs, Seq("note"))
     assert(Bm25.fuzzyAcceptSets(fieldStats, termStats, Seq("note"), Nil).isEmpty)
     // and the scoring column degrades to 0 for null-term queries
+    graft.rass.expressions.Bm25Field.register(spark)
     val scored = docs
       .withColumn("s", Bm25.scoreFuzzyVocab("note", Nil,
-        Bm25.inlineStats(docs, Seq("note"), Nil), Map.empty))
+        CorpusStats.statsRow(fieldStats, termStats, Seq("note"), Nil), Map.empty))
       .select($"s").head()
     assert(scored.getDouble(0) == 0.0)
   }
@@ -89,8 +94,8 @@ class CorpusStatsSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "metformin daily", "headache")).toDF("doc_id", "note", "symptom")
     // stats materialized over note ONLY — requesting symptom too must be
-    // loud (the per-row fuzzy path would have scored it; silently
-    // returning empty accept sets is a relevance regression)
+    // loud (symptom's tokens would have matched; silently returning
+    // empty accept sets is a relevance regression)
     val (fieldStats, termStats) = CorpusStats.build(docs, Seq("note"))
     val e = intercept[IllegalArgumentException] {
       Bm25.fuzzyAcceptSets(fieldStats, termStats, Seq("note", "symptom"),
@@ -105,7 +110,7 @@ class CorpusStatsSpec extends SparkSpec {
     assert(accept(("note", "zzzzzzzzzz")) == Nil)
     intercept[IllegalStateException] {
       Bm25.scoreFuzzyVocab("symptom", Seq("metformin"),
-        Bm25.inlineStats(docs, Seq("symptom"), Seq("metformin")), accept)
+        CorpusStats.statsRow(fieldStats, termStats, Seq("symptom"), Seq("metformin")), accept)
     }
     // an EMPTY corpus covers nothing but is not a coverage failure —
     // every vocabulary is legitimately empty

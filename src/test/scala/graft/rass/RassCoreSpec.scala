@@ -108,7 +108,9 @@ class Bm25Spec extends SparkSpec {
       ("d3", "common words all over the place common words common words"),
       ("d4", "nothing relevant at all")).toDF("doc_id", "unstructuredText")
     val terms = Seq("diabetes")
-    val stats = Bm25.inlineStats(docs, Seq("unstructuredText"), terms)
+    val (fieldStats, termStats) = CorpusStats.build(docs, Seq("unstructuredText"))
+    val stats = CorpusStats.statsRow(fieldStats, termStats, Seq("unstructuredText"), terms)
+    graft.rass.expressions.Bm25Field.register(spark)
     val scored = docs
       .withColumn("score", Bm25.score("unstructuredText", terms, stats))
       .select("doc_id", "score").collect()

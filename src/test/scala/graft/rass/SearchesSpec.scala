@@ -43,13 +43,15 @@ class SearchesSpec extends SparkSpec {
   }
 
   test("q3 hybrid blends text and vector evidence") {
-    val hits = Searches.q3Hybrid(corpus, "diabetes treatment", queryVec, 10).collect()
+    val stats = CorpusStats.build(corpus, DocSchema.scoredFields)
+    val hits = Searches.q3Hybrid(corpus, "diabetes treatment", queryVec, 10,
+      stats = stats).collect()
     assert(hits.nonEmpty)
     val scores = hits.map(_.getDouble(1))
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
     // with no text evidence at all, the knn clause alone must drive the
     // ranking and surface the query's own chunk first
-    val knnOnly = Searches.q3Hybrid(corpus, "zzzz qqqq", queryVec, 5).collect()
+    val knnOnly = Searches.q3Hybrid(corpus, "zzzz qqqq", queryVec, 5, stats = stats).collect()
     assert(knnOnly.head.getString(0) == "d0_c0")
   }
 
@@ -111,5 +113,45 @@ class SearchesSpec extends SparkSpec {
     val hits = Searches.q12DocumentFetch(corpus, "p7", 5).collect()
     assert(hits.length == 1)
     assert(hits.head.getAs[String]("patientId") == "p7")
+  }
+
+  test("q3/q7/q9/q10: a patient or entity filter never changes a hit's score") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import graft.rass.query.{Entity, EntityFilters}
+    // BM25 stats are corpus-global, as the reference's index-global
+    // statistics: a filter narrows the rows scored, never their idf or
+    // avgdl. Every search runs with k = the corpus size, so every
+    // positive score is compared.
+    val stats = CorpusStats.build(corpus, DocSchema.scoredFields)
+    val all = corpus.count().toInt
+    val now = 1748736000000000L
+    def entity(text: String, label: String): Option[Column] =
+      EntityFilters.compile(Seq(Entity(text, label)))
+    val searches = Seq[(String, Option[Column], (Option[String], Option[Column]) => DataFrame)](
+      ("q3", entity("diabetes", "CONDITION"), (p, f) =>
+        Searches.q3Hybrid(corpus, "diabetes treatment", queryVec, all, p, f, stats)),
+      ("q7", entity("metformin", "MEDICATION"), (p, f) =>
+        Searches.q7Comparison(corpus, "metformin ibuprofen", all, p, f, stats)),
+      ("q9", entity("severity 1", "SEVERITY"), (p, f) =>
+        Searches.q9Explanatory(corpus, "note severity", all, p, f, stats)),
+      ("q10", entity("diabetes", "CONDITION"), (p, f) =>
+        Searches.q10MultiIntent(corpus, "diabetes", queryVec, now, all, p, f, stats)))
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    for ((name, entityFilter, search) <- searches) {
+      val unfiltered = search(None, None).collect()
+      assert(unfiltered.nonEmpty, s"$name: no unfiltered hits")
+      val want = unfiltered.map(r => r.getString(0) -> bits(r.getDouble(1))).toMap
+      val patient = unfiltered.head.getString(2)
+      for ((filter, hits) <- Seq(s"patient $patient" -> search(Some(patient), None),
+          "entity" -> search(None, entityFilter))) {
+        val got = hits.collect()
+        assert(got.nonEmpty, s"$name with the $filter filter: no hits")
+        got.foreach { r =>
+          assert(want.get(r.getString(0)).contains(bits(r.getDouble(1))),
+            s"$name with the $filter filter scores ${r.getString(0)} ${r.getDouble(1)}, " +
+              s"unfiltered ${want.get(r.getString(0)).map(java.lang.Double.longBitsToDouble)}")
+        }
+      }
+    }
   }
 }
