@@ -93,6 +93,9 @@ object Analyzer {
   def autoFuzz(term: String): Int =
     if (term.length < 3) 0 else if (term.length <= 5) 1 else 2
 
+  /** The largest distance [[autoFuzz]] allows any term. */
+  val MaxAutoFuzz = 2
+
   /** Does any token of the field match the term within AUTO edit
     * distance? Null-safe boolean.
     */

@@ -19,7 +19,8 @@ import graft.rass.expressions.Bm25Field
   * the query terms) are ONE small row on the driver, looked up in the
   * materialized corpus-stats tables ([[CorpusStats]]), from which the
   * driver computes each field's idf. A fuzzy clause's typo variants
-  * come from the same tables' vocabulary ([[fuzzyAcceptSets]]). Each
+  * come from the same tables' vocabulary ([[fuzzyAcceptSets]]); one
+  * lookup serves both ([[queryStats]]). Each
   * scored field is then one native `bm25_field` call in the scan's
   * projection, holding the query's accept sets and parameters as
   * reference objects: no join, no per-term expression tree, and one
@@ -43,7 +44,7 @@ object Bm25 {
   /** One field's BM25 score for the query: a single native
     * `bm25_field` call over the field's token array, fed by the driver-
     * side `stats` row (`s_<field>_{n_docs,avgdl,df_<i>}`, from
-    * [[materializedStats]]). Per term, `sets(i)` is the term's accept
+    * [[queryStats]]). Per term, `sets(i)` is the term's accept
     * set: its tf counts the tokens that are members. The idf is computed
     * here, on the driver, with the Column formula's arithmetic
     * `(n - df + 0.5) / (df + 0.5)`; a null field scores 0. The accept
@@ -83,13 +84,13 @@ object Bm25 {
     * Levenshtein scan admits — every token of every document row is by
     * construction a member of its field's vocabulary — but the
     * edit-distance work is VOCAB-sized (one pass over the persisted
-    * termStats table, |vocab| x |terms| bounded comparisons) instead of
-    * corpus-sized (row x token x term on every scoring scan). At 100 TB
-    * the vocabulary is millions of rows where the corpus is trillions
-    * of tokens; the resulting sets (typo variants actually present in
-    * the corpus) are a handful of strings, which the scan's
-    * `bm25_field` holds as a literal. Same trick as d04's vocab-join,
-    * applied to scoring.
+    * termStats table, [[CorpusStats.lookup]]) instead of corpus-sized
+    * (row x token x term on every scoring scan). At 100 TB the
+    * vocabulary is millions of rows where the corpus is trillions of
+    * tokens; the resulting sets (typo variants actually present in the
+    * corpus) are a handful of strings, which the scan's `bm25_field`
+    * holds as a literal. Same trick as d04's vocab-join, applied to
+    * scoring.
     *
     * The returned map is TOTAL over (requested field x distinct term):
     * a covered field with no in-distance variants maps to `Nil`
@@ -104,70 +105,46 @@ object Bm25 {
   def fuzzyAcceptSets(fieldStats: DataFrame, termStats: DataFrame,
       fields: Seq[String],
       terms: Seq[String]): Map[(String, String), Seq[String]] =
-    // a query normalized to zero terms ("???") must score 0 on the BM25
-    // clauses, not crash the vocabulary job on an empty OR-reduce
+    acceptSets(fieldStats, termStats, fields, terms,
+      CorpusStats.lookup(fieldStats, termStats, fields, terms))
+
+  private def acceptSets(fieldStats: DataFrame, termStats: DataFrame,
+      fields: Seq[String], terms: Seq[String],
+      found: => CorpusStats.Lookup): Map[(String, String), Seq[String]] =
+    // a query normalized to zero terms ("???") scores 0 on the BM25
+    // clauses and needs no vocabulary
     if (terms.isEmpty) Map.empty
-    else acceptCache.getOrBuild(
-      (termStats.sparkSession, fieldStats.queryExecution.analyzed.canonicalized,
-        termStats.queryExecution.analyzed.canonicalized,
-        fields.toList, terms.toList)) {
-      val covered = fieldStats.select(col("field")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val uncovered = fields.filterNot(covered)
-      if (covered.nonEmpty && uncovered.nonEmpty)
-        throw new IllegalArgumentException(
-          s"fuzzy accept sets requested for field(s) ${uncovered.mkString(", ")} " +
-            s"not covered by the materialized stats (covers: ${covered.mkString(", ")}); " +
-            "rebuild stats over these fields")
-      buildFuzzyAcceptSets(termStats, fields, terms)
+    else acceptCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) {
+      found.acceptSets(fields, terms)
     }
 
-  /** Accept-set lookups memoized per (session, fieldStats plan,
-    * termStats plan, fields, terms): a repeated query re-uses the
-    * collected sets instead of re-running the vocabulary job — the
-    * same keying discipline as [[Corpus.statsOf]] (canonicalized plans
-    * compare structurally, so two corpora never share an entry).
+  /** Memo key of a question's stats row or accept sets: (session,
+    * fieldStats plan, termStats plan, fields, terms). Canonicalized
+    * plans compare structurally, the keying discipline of
+    * [[Corpus.statsOf]], so two corpora never share an entry.
     * fieldStats is part of the key even though only the coverage
-    * VALIDATION reads it: keyed on termStats
-    * alone, a later call with the same vocabulary but a different,
-    * non-covering fieldStats would hit the cache and silently skip the
-    * coverage check that call was owed. Entries are dropped by
-    * [[Corpus.invalidateCaches]] alongside the stats tables they
-    * derive from.
+    * VALIDATION reads it: keyed on termStats alone, a later call with
+    * the same vocabulary but a different, non-covering fieldStats would
+    * hit the cache and silently skip the coverage check that call was
+    * owed. Entries are dropped by [[Corpus.invalidateCaches]] alongside
+    * the stats tables they derive from.
     */
-  private val acceptCache = graft.Memo.cache[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      List[String], List[String]), Map[(String, String), Seq[String]]]("r.bm25Accept")
+  private def memoKey(fieldStats: DataFrame, termStats: DataFrame,
+      fields: Seq[String], terms: Seq[String]): StatsKey =
+    (termStats.sparkSession, fieldStats.queryExecution.analyzed.canonicalized,
+      termStats.queryExecution.analyzed.canonicalized, fields.toList, terms.toList)
 
-  private def buildFuzzyAcceptSets(termStats: DataFrame, fields: Seq[String],
-      terms: Seq[String]): Map[(String, String), Seq[String]] = {
-    val conds = terms.distinct.map { t =>
-      val fz = Analyzer.autoFuzz(t)
-      // threshold levenshtein returns -1 above fz — same accept set as
-      // `levenshtein <= fz` with length-pruned O(len*fz) work
-      val hit = if (fz == 0) col("term") === t
-        else levenshtein(col("term"), lit(t), fz) >= 0
-      (t, hit)
-    }
-    val rows = termStats
-      .filter(col("field").isInCollection(fields) &&
-        conds.map(_._2).reduce(_ || _))
-      .select(col("field"), col("term"),
-        array_compact(array(conds.map { case (t, c) =>
-          when(c, lit(t))
-        }: _*)).as("qts"))
-      .select(col("field"), col("term"), explode(col("qts")).as("qt"))
-      .collect()
-    val matched = rows.groupBy(r => (r.getString(0), r.getString(2)))
-      .map { case (k, vs) => k -> vs.map(_.getString(1)).toSeq.sorted }
-    // total over (field x term): a no-variant pair carries an explicit
-    // Nil so a downstream lookup can tell "covered, nothing in
-    // distance" (score 0) from "never built for this field" (throw)
-    (for (f <- fields; t <- terms.distinct)
-      yield (f, t) -> matched.getOrElse((f, t), Nil)).toMap
-  }
+  private type StatsKey = (SparkSession,
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+    List[String], List[String])
+
+  /** Accept-set lookups memoized per [[memoKey]]: a repeated query
+    * re-uses the collected sets instead of re-running the vocabulary
+    * job.
+    */
+  private val acceptCache =
+    graft.Memo.cache[StatsKey, Map[(String, String), Seq[String]]]("r.bm25Accept")
 
   /** Fuzzy variant (`fuzziness: AUTO`): tf counts the tokens that are
     * members of the term's accept set ([[fuzzyAcceptSets]]) — the same
@@ -203,36 +180,35 @@ object Bm25 {
       tok: String => Column = inlineToks): Column =
     best(fields, clauseBoost)(scoreFuzzyVocab(_, terms, stats, accept, tok))
 
+  /** One field scores as itself: `greatest` takes two or more. */
   private def best(fields: Seq[(String, Double)], clauseBoost: Double)(
-      scoreOf: String => Column): Column =
-    greatest(fields.map { case (f, boost) => scoreOf(f) * boost }: _*) * clauseBoost
-
-  /** The query's stats reconstructed from the MATERIALIZED corpus
-    * statistics ([[CorpusStats.statsRow]]) instead of re-aggregating
-    * the corpus: the lookup touches |fields| + |fields|x|terms| rows of
-    * the (cached / ingest-maintained) stats tables — no second corpus
-    * scan per query. Stats are corpus-global, matching the reference's
-    * index-global OpenSearch statistics (filters never change scoring
-    * stats there either). Memoized like the accept sets: statsRow runs
-    * two small collect jobs, a fixed per-query latency a repeated query
-    * shouldn't re-pay.
-    */
-  def materializedStats(spark: SparkSession, fieldStats: DataFrame,
-      termStats: DataFrame, fields: Seq[String], terms: Seq[String]): Row = {
-    Bm25Field.register(spark)
-    statsRowCache.getOrBuild(
-      (spark, fieldStats.queryExecution.analyzed.canonicalized,
-        termStats.queryExecution.analyzed.canonicalized,
-        fields.toList, terms.toList)) {
-      CorpusStats.statsRow(fieldStats, termStats, fields, terms)
-    }
+      scoreOf: String => Column): Column = {
+    val boosted = fields.map { case (f, boost) => scoreOf(f) * boost }
+    (if (boosted.size == 1) boosted.head else greatest(boosted: _*)) * clauseBoost
   }
 
-  private val statsRowCache = graft.Memo.cache[
-    (SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      List[String], List[String]), Row]("r.bm25Params")
+  /** One question's BM25 parameters, read from the MATERIALIZED corpus
+    * statistics instead of re-aggregating the corpus: the stats row over
+    * `fields` and the accept sets over `fuzzyFields`
+    * ([[fuzzyAcceptSets]]). Stats are corpus-global, matching the
+    * reference's index-global OpenSearch statistics (filters never
+    * change scoring stats there either). Both are memoized per
+    * [[memoKey]], so a repeated question runs no job; a new one runs a
+    * single [[CorpusStats.lookup]] over both field lists, whose
+    * generated code is the same whatever the question.
+    */
+  def queryStats(fieldStats: DataFrame, termStats: DataFrame, fields: Seq[String],
+      fuzzyFields: Seq[String], terms: Seq[String]): (Row, Map[(String, String), Seq[String]]) = {
+    Bm25Field.register(termStats.sparkSession)
+    lazy val found = CorpusStats.lookup(fieldStats, termStats,
+      (fields ++ fuzzyFields).distinct, terms)
+    val row = statsRowCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) {
+      found.statsRow(fields, terms)
+    }
+    (row, acceptSets(fieldStats, termStats, fuzzyFields, terms, found))
+  }
+
+  private val statsRowCache = graft.Memo.cache[StatsKey, Row]("r.bm25Params")
 
   /** DuckDB oracle fragments mirroring the Column side bit-for-bit. */
   object Sql {

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.rass.expressions.TermFrequency
 
 /** Ingest-time BM25 corpus statistics (SURVEY §7: "corpus-stats
   * maintained incrementally"), the only statistics a search scores
@@ -18,13 +21,14 @@ import org.apache.spark.sql.types._
   *     their typo variants from ([[Bm25.fuzzyAcceptSets]]).
   *
   * Both come from ONE scan (fields stacked as an array-of-structs, then
-  * exploded). [[statsRow]] reconstructs the stats row
-  * [[Bm25.bestFields]] reads on the driver — bit-equal to one aggregate
-  * over the whole corpus (CorpusStatsSpec), the row the DuckDB oracle's
-  * `Bm25.Sql.allStatsSelect` computes. Incremental maintenance is
-  * additive: df, n_docs, and sum_dl are all sums, so a new batch's
-  * stats merge by addition (and removal subtracts) without rescanning
-  * history.
+  * exploded). A question reads them through [[lookup]]: fieldStats
+  * whole and termStats in one pass, from whose few rows the driver
+  * reconstructs the stats row [[Bm25.bestFields]] reads — bit-equal to
+  * one aggregate over the whole corpus (CorpusStatsSpec), the row the
+  * DuckDB oracle's `Bm25.Sql.allStatsSelect` computes. Incremental
+  * maintenance is additive: df, n_docs, and sum_dl are all sums, so a
+  * new batch's stats merge by addition (and removal subtracts) without
+  * rescanning history.
   */
 object CorpusStats {
 
@@ -81,34 +85,92 @@ object CorpusStats {
     (fieldStats, termStats)
   }
 
-  /** Reconstruct the query's stats row (field names
-    * `s_<field>_{n_docs,avgdl,df_<i>}`) on the driver from the
-    * materialized tables, for
-    * [[Bm25.bestFields]] to read its idfs and avgdls from. The lookup
-    * touches only |fields| + |fields|x|terms| rows — no corpus scan.
+  /** The rows of the materialized tables a question's BM25 statistics
+    * and fuzzy accept sets derive from: `fieldStats` whole (one row per
+    * scored field) and, in one pass over `termStats`, every row of
+    * `fields` whose term equals a query term or lies within its AUTO
+    * edit distance — the exact-term df rows and every term's typo
+    * variants. The fields and the terms reach the generated code as
+    * reference objects: a literal field array, and one set-valued
+    * `term_freq` per AUTO distance holding the terms of that distance
+    * (possibly none). So the lookup compiles the same classes for every
+    * question.
+    */
+  def lookup(fieldStats: DataFrame, termStats: DataFrame,
+      fields: Seq[String], terms: Seq[String]): Lookup = {
+    TermFrequency.register(termStats.sparkSession)
+    val perField = fieldStats.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val near = (0 to Analyzer.MaxAutoFuzz).map { fz =>
+      val atFz = terms.distinct.filter(Analyzer.autoFuzz(_) == fz)
+      call_function("term_freq", array(col("term")), lit(atFz.toArray), lit(fz)) > 0
+    }.reduce(_ || _)
+    val rows = if (terms.isEmpty) Nil else termStats
+      .filter(array_contains(lit(fields.toArray), col("field")) && near)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    Lookup(perField, rows)
+  }
+
+  /** The query's stats row ([[Lookup.statsRow]]) read from the
+    * materialized tables.
     */
   def statsRow(fieldStats: DataFrame, termStats: DataFrame,
-      fields: Seq[String], terms: Seq[String]): Row = {
-    val fs = fieldStats.filter(col("field").isInCollection(fields))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val ts = termStats
-      .filter(col("field").isInCollection(fields) &&
-        col("term").isInCollection(terms))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val values = fields.flatMap { f =>
-      val (nDocs, sumDl) = fs.getOrElse(f, (0L, 0L))
-      // same arithmetic as the oracle's aggregate: long sums cast to
-      // double, then divide — avgdl null when the field never appears
-      val avgdl: Any =
-        if (nDocs > 0) sumDl.toDouble / nDocs.toDouble else null
-      Seq[Any](nDocs.toDouble, avgdl) ++
-        terms.map(t => ts.getOrElse((f, t), 0L).toDouble)
+      fields: Seq[String], terms: Seq[String]): Row =
+    lookup(fieldStats, termStats, fields, terms).statsRow(fields, terms)
+
+  /** What [[lookup]] read: `(n_docs, sum_dl)` per field, and the
+    * `(field, term, df)` rows near the query terms.
+    */
+  final case class Lookup(fieldRows: Map[String, (Long, Long)],
+      termRows: Seq[(String, String, Long)]) {
+
+    /** The query's stats row (field names `s_<field>_{n_docs,avgdl,df_<i>}`)
+      * for [[Bm25.bestFields]] to read its idfs and avgdls from.
+      */
+    def statsRow(fields: Seq[String], terms: Seq[String]): Row = {
+      val df = termRows.map { case (f, t, n) => (f, t) -> n }.toMap
+      val values = fields.flatMap { f =>
+        val (nDocs, sumDl) = fieldRows.getOrElse(f, (0L, 0L))
+        // same arithmetic as the oracle's aggregate: long sums cast to
+        // double, then divide — avgdl null when the field never appears
+        val avgdl: Any =
+          if (nDocs > 0) sumDl.toDouble / nDocs.toDouble else null
+        Seq[Any](nDocs.toDouble, avgdl) ++
+          terms.map(t => df.getOrElse((f, t), 0L).toDouble)
+      }
+      val schema = StructType(fields.flatMap { f =>
+        Seq(StructField(s"s_${f}_n_docs", DoubleType),
+          StructField(s"s_${f}_avgdl", DoubleType)) ++
+          terms.indices.map(i => StructField(s"s_${f}_df_$i", DoubleType))
+      })
+      new GenericRowWithSchema(values.toArray, schema)
     }
-    val schema = StructType(fields.flatMap { f =>
-      Seq(StructField(s"s_${f}_n_docs", DoubleType),
-        StructField(s"s_${f}_avgdl", DoubleType)) ++
-        terms.indices.map(i => StructField(s"s_${f}_df_$i", DoubleType))
-    })
-    new GenericRowWithSchema(values.toArray, schema)
+
+    /** Per (field, distinct term), the sorted vocabulary terms of the
+      * field within the term's AUTO edit distance ([[Bm25.fuzzyAcceptSets]]).
+      * A field the stats never covered throws, unless they cover no
+      * field at all (an empty corpus).
+      */
+    def acceptSets(fields: Seq[String],
+        terms: Seq[String]): Map[(String, String), Seq[String]] = {
+      val uncovered = fields.filterNot(fieldRows.contains)
+      if (fieldRows.nonEmpty && uncovered.nonEmpty)
+        throw new IllegalArgumentException(
+          s"fuzzy accept sets requested for field(s) ${uncovered.mkString(", ")} " +
+            s"not covered by the materialized stats (covers: ${fieldRows.keys.mkString(", ")}); " +
+            "rebuild stats over these fields")
+      (for (f <- fields; t <- terms.distinct) yield (f, t) -> termRows.collect {
+        case (`f`, v, _) if withinAuto(v, t) => v
+      }.sorted).toMap
+    }
+  }
+
+  /** `v` within `t`'s AUTO edit distance: the threshold Levenshtein
+    * Spark's `levenshtein(v, t, fz) >= 0` computes, equality at fz 0.
+    */
+  private def withinAuto(v: String, t: String): Boolean = {
+    val fz = Analyzer.autoFuzz(t)
+    if (fz == 0) v == t
+    else UTF8String.fromString(v).levenshteinDistance(UTF8String.fromString(t), fz) >= 0
   }
 }

@@ -1,7 +1,6 @@
 package graft.rass
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import DocSchema._
@@ -26,13 +25,21 @@ import DocSchema._
   *
   * Scale shape of every operator: one scan of the (pruned) corpus
   * computing a score expression inline, then TakeOrderedAndProject for
-  * top-k — no join, no shuffle except the single top-k reduction; the
-  * BM25 ones first read one small stats row on the driver (a lookup in
-  * the materialized corpus-stats tables they are given, [[CorpusStats]])
-  * and score each field with one native `bm25_field` call whose query
+  * top-k — no join, no shuffle except the single top-k reduction (q6's
+  * per-field aggregates aside). The BM25 ones first read one small
+  * stats row and their accept sets on the driver: for a new question,
+  * one read of the materialized fieldStats and one pass over termStats
+  * ([[CorpusStats.lookup]]); a repeated one reads memoized values. They
+  * score each field with one native `bm25_field` call whose query
   * terms, accept sets and statistics are runtime parameters. The stats
   * are corpus-global: a patient or entity filter narrows the rows
   * scored, never the idf or avgdl they are scored with.
+  *
+  * The question reaches every per-question plan (q3/q7/q8/q9/q10 and
+  * the stats lookup) as literal values the generated code holds as
+  * reference objects, so a new question, or a new clock reading, runs
+  * the classes an earlier one compiled (`QuestionShapeSpec`,
+  * `CodegenStabilitySpec`).
   */
 object Searches {
 
@@ -66,21 +73,6 @@ object Searches {
     val f2 = Seq(f1, extra).flatten.reduceOption(_ && _)
     f2.map(docs.filter).getOrElse(docs)
   }
-
-  /** The query's BM25 stats row on the driver, looked up in the
-    * materialized corpus-stats tables `stats` = (fieldStats, termStats):
-    * no per-query corpus re-aggregate.
-    */
-  private def queryStats(docs: DataFrame, stats: (DataFrame, DataFrame),
-      fields: Seq[String], terms: Seq[String]): Row =
-    Bm25.materializedStats(docs.sparkSession, stats._1, stats._2, fields, terms)
-
-  /** Fuzzy accept sets for the fuzzy-scored fields: the vocabulary IS
-    * the termStats table.
-    */
-  private def fuzzyAccept(stats: (DataFrame, DataFrame), fields: Seq[(String, Double)],
-      terms: Seq[String]): Map[(String, String), Seq[String]] =
-    Bm25.fuzzyAcceptSets(stats._1, stats._2, fields.map(_._1), terms)
 
   /** The window [now - 1y, now] as an `in_window` predicate on `field`:
     * the bounds reach the generated code as a reference object, so a
@@ -146,12 +138,11 @@ object Searches {
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
-    val st = queryStats(docs, stats, fields, terms)
+    val (st, accept) = Bm25.queryStats(stats._1, stats._2, fields, textFields.map(_._1), terms)
     val qv = array(queryVec.map(lit): _*)
     val knn = coalesce(VectorOps.cosineFused(docs.sparkSession,
       col("embedding").cast("array<double>"), qv), lit(0.0))
-    val score = Bm25.fuzzyBestFields(textFields, terms, st,
-      fuzzyAccept(stats, textFields, terms), 1.5, tok) +
+    val score = Bm25.fuzzyBestFields(textFields, terms, st, accept, 1.5, tok) +
       Bm25.bestFields(keywordFields, terms, st, 1.0, tok) + knn * 2.0
     topK(docsTok.withColumn("score", score), k)
   }
@@ -226,30 +217,32 @@ object Searches {
       patientId: Option[String] = None, filter: Option[Column] = None,
       stats: (DataFrame, DataFrame)): DataFrame = {
     val terms = Analyzer.normalizeQuery(query)
-    val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
-      compareFields.map(_._1))
-    val st = queryStats(docs, stats, compareFields.map(_._1), terms)
-    topK(docsTok.withColumn("score", Bm25.fuzzyBestFields(compareFields, terms, st,
-      fuzzyAccept(stats, compareFields, terms), tok = tok)), k)
+    val fields = compareFields.map(_._1)
+    val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
+    val (st, accept) = Bm25.queryStats(stats._1, stats._2, fields, fields, terms)
+    topK(docsTok.withColumn("score",
+      Bm25.fuzzyBestFields(compareFields, terms, st, accept, tok = tok)), k)
   }
 
   /** Q8 — temporal_search (`main.py:1866-1918`): any-term text match
     * AND any date field within [now-1y, now]; ordered by
     * conditionOnsetDateTime DESC (overrides score). `now` is injected
-    * for determinism (SURVEY §7.4).
+    * for determinism (SURVEY §7.4). The text match is one set-valued
+    * `term_freq` call per field — the question's terms are one literal
+    * array, held by the generated code as a reference object — so each
+    * field is tokenized once per row and the plan's code is the same
+    * for every question.
     */
   def q8Temporal(docs: DataFrame, query: String, nowMicros: Long,
       k: Int = DefaultK, patientId: Option[String] = None,
       filter: Option[Column] = None): DataFrame = {
     graft.rass.expressions.TermFrequency.register(docs.sparkSession)
     graft.rass.expressions.InWindow.register(docs.sparkSession)
-    val terms = Analyzer.normalizeQuery(query)
+    val terms = lit(Analyzer.normalizeQuery(query).toArray)
     val allText = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), allText)
-    val textMatch = allText.map(f =>
-      terms.map(t => coalesce(
-        call_function("term_freq", tok(f), lit(t), lit(0)) > 0,
-        lit(false))).reduceOption(_ || _).getOrElse(lit(false)))
+    val textMatch = allText.map(f => coalesce(
+      call_function("term_freq", tok(f), terms, lit(0)) > 0, lit(false)))
       .reduce(_ || _)
     val dateOk = dateFields.map(withinYear(_, nowMicros)).reduce(_ || _)
     docsTok
@@ -266,11 +259,11 @@ object Searches {
       patientId: Option[String] = None, filter: Option[Column] = None,
       stats: (DataFrame, DataFrame)): DataFrame = {
     val terms = Analyzer.normalizeQuery(query)
-    val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
-      noteFields.map(_._1))
-    val st = queryStats(docs, stats, noteFields.map(_._1), terms)
-    topK(docsTok.withColumn("score", Bm25.fuzzyBestFields(noteFields, terms, st,
-      fuzzyAccept(stats, noteFields, terms), tok = tok)), k)
+    val fields = noteFields.map(_._1)
+    val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
+    val (st, accept) = Bm25.queryStats(stats._1, stats._2, fields, fields, terms)
+    topK(docsTok.withColumn("score",
+      Bm25.fuzzyBestFields(noteFields, terms, st, accept, tok = tok)), k)
   }
 
   /** Q10 — multi_intent_search, INTENDED semantics (`main.py:1969-2027`
@@ -284,14 +277,13 @@ object Searches {
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
-    val st = queryStats(docs, stats, fields, terms)
+    val (st, accept) = Bm25.queryStats(stats._1, stats._2, fields, textFields.map(_._1), terms)
     val qv = array(queryVec.map(lit): _*)
     val knn = coalesce(VectorOps.cosineFused(docs.sparkSession,
       col("embedding").cast("array<double>"), qv), lit(0.0))
     val dateBonus = dateFields.map(f =>
       when(withinYear(f, nowMicros), lit(0.5)).otherwise(lit(0.0))).reduce(_ + _)
-    val score = Bm25.fuzzyBestFields(textFields, terms, st,
-      fuzzyAccept(stats, textFields, terms), 1.0, tok) +
+    val score = Bm25.fuzzyBestFields(textFields, terms, st, accept, 1.0, tok) +
       Bm25.bestFields(keywordFields, terms, st, 0.5, tok) + knn * 1.5 + dateBonus
     topK(docsTok.withColumn("score", score), k)
   }
@@ -314,17 +306,15 @@ object Searches {
 
   /** Q12 — document_fetch_search (`main.py:2120-2150` + caller
     * `2804-2856`): requires a resolved patient; collapse to one row per
-    * patientId (window row_number, the Spark-native collapse), emit the
-    * file identity for the raw re-read.
+    * patientId and emit the file identity for the raw re-read. The
+    * filter leaves one patient, so the collapse — the row with the
+    * lowest doc_id — is an ordered limit of at most one row: no window,
+    * no shuffle.
     */
   def q12DocumentFetch(docs: DataFrame, patientId: String, k: Int = DefaultK,
-      filter: Option[Column] = None): DataFrame = {
-    val w = Window.partitionBy(col("patientId")).orderBy(col("doc_id"))
+      filter: Option[Column] = None): DataFrame =
     applyFilters(docs, Some(patientId), filter)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+      .orderBy(col("doc_id"))
       .select(col("patientId"), col("doc_id"), col("file_path"), col("file_type"))
-      .orderBy(col("patientId"))
-      .limit(k)
-  }
+      .limit(math.min(k, 1))
 }

@@ -53,8 +53,10 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** Janino compilations while `body` runs: 0 when every class it needs
-    * is already in the codegen cache.
+  /** Janino compilations while `body` runs: 0 when every class is
+    * cached for the compiling thread's class loader. Spark's codegen
+    * cache is JVM-wide and keyed by (class loader, source), so what
+    * survives in it depends on what else the JVM compiled.
     */
   def compilesDuring(body: => Any): Long = {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

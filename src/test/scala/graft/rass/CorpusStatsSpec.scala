@@ -138,6 +138,46 @@ class CorpusStatsSpec extends SparkSpec {
     assert(e.getMessage.contains("symptom"))
   }
 
+  test("a one-field best_fields clause scores as that field") {
+    import spark.implicits._
+    val docs = Seq((1L, "metformin daily"), (2L, "metfornin dose"), (3L, "aspirin"), (4L, null))
+      .toDF("doc_id", "note")
+    val terms = Seq("metformin", "dose")
+    val (fieldStats, termStats) = CorpusStats.build(docs, Seq("note"))
+    val (stats, accept) = Bm25.queryStats(fieldStats, termStats, Seq("note"), Seq("note"), terms)
+    val rows = docs.select($"doc_id",
+      Bm25.fuzzyBestFields(Seq("note" -> 2.0), terms, stats, accept, 1.5).as("fuzzy"),
+      (Bm25.scoreFuzzyVocab("note", terms, stats, accept) * 2.0 * 1.5).as("fuzzyField"),
+      Bm25.bestFields(Seq("note" -> 1.0), terms, stats).as("exact"),
+      (Bm25.score("note", terms, stats) * 1.0 * 1.0).as("exactField")).collect()
+    assert(rows.exists(_.getDouble(1) > 0))
+    rows.foreach { r =>
+      assert(r.getDouble(1) == r.getDouble(2), s"fuzzy, doc ${r.getLong(0)}")
+      assert(r.getDouble(3) == r.getDouble(4), s"exact, doc ${r.getLong(0)}")
+    }
+  }
+
+  test("a new question's stats row and accept sets come from one lookup") {
+    val (fieldStats, termStats) = Corpus.stats(spark, sfDir)
+    val fields = (DocSchema.textFields ++ DocSchema.keywordFields).map(_._1)
+    val fuzzy = DocSchema.textFields.map(_._1)
+    val terms = Seq("diabetez", "checkup", "bp", "zzz_absent_term")
+    fieldStats.count(); termStats.count()
+    var got: (org.apache.spark.sql.Row, Map[(String, String), Seq[String]]) = null
+    val fresh = jobsDuring { got = Bm25.queryStats(fieldStats, termStats, fields, fuzzy, terms) }
+    assert(fresh.size == 2, s"a new question ran ${fresh.size} jobs: ${fresh.mkString("; ")}")
+    assert(jobsDuring(Bm25.queryStats(fieldStats, termStats, fields, fuzzy, terms)).isEmpty,
+      "a repeated question ran jobs")
+    val (row, accept) = got
+    val separate = CorpusStats.statsRow(fieldStats, termStats, fields, terms)
+    assert(row.schema == separate.schema)
+    assert(row.toSeq == separate.toSeq)
+    assert(accept.keySet == (for (f <- fuzzy; t <- terms) yield (f, t)).toSet)
+    assert(accept.exists { case ((_, t), vs) => vs.exists(_ != t) }, "no typo variant admitted")
+    // a lookup over the fuzzy fields alone gives the same sets
+    assert(CorpusStats.lookup(fieldStats, termStats, fuzzy, terms).acceptSets(fuzzy, terms) == accept)
+  }
+
   test("stats merge additively across ingest batches") {
     import org.apache.spark.sql.functions._
     val corpus = Corpus.corpus(spark, sfDir)

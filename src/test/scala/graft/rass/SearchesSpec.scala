@@ -101,6 +101,28 @@ class SearchesSpec extends SparkSpec {
     assert(ids.subsetOf(inWindow))
   }
 
+  test("q8's one set-valued match per field returns the per-(field, term) disjunction's hits") {
+    val nowUs = 1748736000000000L
+    val fields = (DocSchema.textFields ++ DocSchema.keywordFields).map(_._1)
+    // the match q8 built before: one exact term_freq disjunct per
+    // (field, term)
+    def perTerm(query: String): Set[String] = {
+      val terms = Analyzer.normalizeQuery(query)
+      val textMatch = fields.flatMap(f => terms.map(t => coalesce(
+        call_function("term_freq", Analyzer.tokens(col(f)), lit(t), lit(0)) > 0, lit(false))))
+        .reduceOption(_ || _).getOrElse(lit(false))
+      val window = lit(Array(nowUs - 365L * 86400000000L, nowUs))
+      val dateOk = DocSchema.dateFields
+        .map(f => call_function("in_window", col(f), window)).reduce(_ || _)
+      corpus.filter(textMatch && dateOk).select("doc_id").collect().map(_.getString(0)).toSet
+    }
+    for (q <- Seq("checkup", "diabetes checkup", "asthma inhaler daily dose metformin", "???")) {
+      val k = 1000000
+      val hits = Searches.q8Temporal(corpus, q, nowUs, k).collect().map(_.getString(0)).toSet
+      assert(hits == perTerm(q), s"q8 '$q'")
+    }
+  }
+
   test("q11 entity search finds the patient by name via identity fields") {
     val hits = Searches.q11EntitySpecific(corpus, "alice johnson", 10).collect()
     assert(hits.nonEmpty)

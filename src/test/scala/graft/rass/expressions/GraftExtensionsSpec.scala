@@ -1,5 +1,7 @@
 package graft.rass.expressions
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
@@ -84,5 +86,32 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(tf("array('diabetes','diabetez')", "diabetes", 2) == 2L)
     assert(tf("array('', 'x')", "x", 0) == 1L)
     assert(tf("array(cast(null as string), 'x')", "x", 1) == 1L)
+  }
+
+  test("term_freq over a literal term set counts the tokens matching any term") {
+    TermFrequency.register(spark)
+    def tf(arr: String, terms: String, d: Int): Long =
+      spark.sql(s"SELECT term_freq($arr, $terms, $d) AS c").head().getLong(0)
+    assert(tf("array('a','b','a','c')", "array('a','c')", 0) == 3L)
+    assert(tf("array('a','b')", "array('a','a')", 0) == 1L)
+    assert(tf("array('a','b')", "cast(array() as array<string>)", 0) == 0L)
+    assert(tf("array('diabetes','diabetez','asthma')", "array('diabetes','astma')", 1) == 3L)
+    assert(tf("array(cast(null as string), 'x')", "array('x','y')", 0) == 1L)
+    // a set of one term counts as the scalar form, generated (a Range
+    // keeps the tokens non-foldable) and interpreted
+    val toks = Seq("diabetes", "diabetez", "diab", "x", "")
+    val toksSql = toks.map(t => s"'$t'").mkString("if(id >= 0, array(", ",", "), null)")
+    for (d <- 0 to 2; t <- Seq("diabetes", "x", "")) {
+      val r = spark.range(1).selectExpr(s"term_freq($toksSql, '$t', $d)",
+        s"term_freq($toksSql, array('$t'), $d)").head()
+      assert(r.getLong(0) == r.getLong(1), s"'$t' within $d")
+      val interpreted = TermFrequency(Literal.create(toks, ArrayType(StringType)),
+        Literal.create(Seq(t), ArrayType(StringType)), Literal(d)).eval()
+      assert(interpreted == r.getLong(0), s"'$t' within $d, interpreted")
+    }
+    // the terms must be a literal: the kernel holds them as one object
+    for (terms <- Seq("c", "array(c)")) intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql(s"SELECT term_freq(array('a'), $terms, 0) FROM VALUES ('a') AS v(c)").collect()
+    }
   }
 }
