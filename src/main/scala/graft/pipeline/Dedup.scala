@@ -730,7 +730,7 @@ object Dedup {
   private def signSig(spark: SparkSession, dir: String): DataFrame =
     signSigCache.getOrBuild((spark, dir)) {
       import spark.implicits._
-      graft.rass.expressions.DotProduct.register(spark)
+      graft.rass.expressions.GraftExtensions.register(spark)
       val e = Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       val sigCol = (0 until NumPlanes).map { h =>
@@ -779,7 +779,7 @@ object Dedup {
       threshold: Double): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
-    graft.rass.expressions.CosineSimilarity.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     cand
       .join(e.select($"vec_id".as("a_id"), $"v".as("av")), "a_id")
       .join(e.select($"vec_id".as("b_id"), $"v".as("bv2")), "b_id")
@@ -825,7 +825,7 @@ object Dedup {
       "signature packs into one 64-bit word")
     val spark = e.sparkSession
     import spark.implicits._
-    graft.rass.expressions.DotProduct.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val sigCol = (0 until numPlanes).map { h =>
       when(call_function("dot_product", $"v", typedLit(planeSigns(h, dim))) >= 0,
         lit(1L << h)).otherwise(lit(0L))

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.StagedDir
+
 /** Shared plumbing for every durable fingerprint-guarded artifact —
   * the ONE implementation of the read-through-memo / staged-publish /
   * rebuild-and-swap sequence, and the only caller of
@@ -67,7 +69,7 @@ private[graft] final class DurableArtifact(
     memo.getOrBuild((spark, dir)) {
       val fp = currentFingerprint(spark, dir)
       ArtifactStore.findValid(spark, path(dir), fp)
-        .flatMap(p => ArtifactStore.consistentParquet(spark, p))
+        .flatMap(p => StagedDir.snapshot(spark, p))
         .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         .getOrElse {
           val fresh = build(spark, dir)
@@ -81,7 +83,7 @@ private[graft] final class DurableArtifact(
           // the materialization; the parquet is the truth. Fallback to
           // the fresh frame only if a concurrent republish races the
           // re-read (then its own memo swap supersedes this handle).
-          ArtifactStore.consistentParquet(spark, path(dir))
+          StagedDir.snapshot(spark, path(dir))
             .map(_.persist(
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
             .getOrElse(fresh)
@@ -99,7 +101,7 @@ private[graft] final class DurableArtifact(
     // pre-build fingerprint (the TOCTOU window). Fallback to the fresh
     // frame only if a concurrent republish races the re-read (its own
     // memo swap then supersedes this handle).
-    val served = ArtifactStore.consistentParquet(spark, path(dir))
+    val served = StagedDir.snapshot(spark, path(dir))
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       .getOrElse(fresh)
     memo.replace((spark, dir), served)

@@ -78,7 +78,7 @@ object Similarity {
     * travels through a join.
     */
   private def cosineCol(spark: SparkSession, av: Column, bv: Column): Column = {
-    graft.rass.expressions.CosineSimilarity.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     call_function("cosine_sim", av, bv)
   }
 
@@ -597,7 +597,7 @@ object Similarity {
     * the trained-IVF geometry, the probe depth, and the split
     * thresholds the screen's test/train sides derive from.
     */
-  private val semContamArtifact = new DurableArtifact(
+  private[pipeline] val semContamArtifact = new DurableArtifact(
     "s.semContam", "s15_contam",
     (spark, dir) => ArtifactStore.md5Hex(
       s"v$SemContamArtifactVersion|$s07FingerprintParams|" +

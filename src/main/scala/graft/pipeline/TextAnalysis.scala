@@ -444,14 +444,14 @@ object TextAnalysis {
       grams.filter($"b" >= ValMax)
         .groupBy((if (shards == 1) lit(0L) else shardOf).as("s")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.rass.expressions.BloomMightContain.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val sweeps = (0 until shards).map { s =>
       val inShard = if (shards == 1) lit(true) else shardOf === s
       val test = grams.filter($"b" >= ValMax && inShard)
       // the sketch is built over xxhash64(g) LONGS (putLong), because
       // the codegen membership probe below evaluates
       // mightContainLong(xxhash64(g)) — Spark's own runtime-filter
-      // convention; see BloomMightContain. Keys changed from raw
+      // convention; see GraftExtensions. Keys changed from raw
       // strings, which only moves WHICH ~1% of grams false-positive —
       // the exact confirm join keeps the output sketch-independent.
       val bf = test.select(xxhash64($"g").as("h")).stat.bloomFilter("h",

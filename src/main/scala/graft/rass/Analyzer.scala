@@ -54,7 +54,7 @@ object Analyzer {
     * codegen [[graft.rass.expressions.PhraseCount]] expression (greedy
     * non-overlapping count, bit-identical to the replace-trick).
     * Callers must have registered the function
-    * (`PhraseCount.register(spark)`).
+    * (`GraftExtensions.register(spark)`).
     */
   def phraseCountTok(toks: Column, phrase: Seq[String]): Column = {
     if (phrase.isEmpty) return lit(0L)

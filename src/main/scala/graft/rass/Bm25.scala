@@ -3,7 +3,7 @@ package graft.rass
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.rass.expressions.Bm25Field
+import graft.rass.expressions.GraftExtensions
 
 /** Deterministic BM25-family scoring over document columns.
   *
@@ -199,7 +199,7 @@ object Bm25 {
     */
   def queryStats(fieldStats: DataFrame, termStats: DataFrame, fields: Seq[String],
       fuzzyFields: Seq[String], terms: Seq[String]): (Row, Map[(String, String), Seq[String]]) = {
-    Bm25Field.register(termStats.sparkSession)
+    GraftExtensions.register(termStats.sparkSession)
     lazy val found = CorpusStats.lookup(fieldStats, termStats,
       (fields ++ fuzzyFields).distinct, terms)
     val row = statsRowCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) {

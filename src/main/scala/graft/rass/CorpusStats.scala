@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rass.expressions.TermFrequency
+import graft.rass.expressions.GraftExtensions
 
 /** Ingest-time BM25 corpus statistics (SURVEY §7: "corpus-stats
   * maintained incrementally"), the only statistics a search scores
@@ -98,7 +98,7 @@ object CorpusStats {
     */
   def lookup(fieldStats: DataFrame, termStats: DataFrame,
       fields: Seq[String], terms: Seq[String]): Lookup = {
-    TermFrequency.register(termStats.sparkSession)
+    GraftExtensions.register(termStats.sparkSession)
     val perField = fieldStats.collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val near = (0 to Analyzer.MaxAutoFuzz).map { fz =>

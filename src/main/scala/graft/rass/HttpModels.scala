@@ -69,6 +69,25 @@ private[rass] object HttpJson {
     throw new RuntimeException(
       s"$url failed after ${maxRetries + 1} attempts", lastErr)
   }
+
+  /** One BlueHive-style completion (reference `app/main.py:283-312`):
+    * POST `{"prompt","systemMessage"}` and read the answer at
+    * `choices[0].message.content`. None when the call fails, so the
+    * caller falls back to its rule implementation — but not on an
+    * interrupt: [[post]] restores the flag before wrapping an
+    * InterruptedException, and a task kill must propagate.
+    */
+  def complete(client: HttpClient, url: String, prompt: String,
+      systemMessage: String, maxRetries: Int): Option[String] =
+    try {
+      val body = mapper.createObjectNode()
+      body.put("prompt", prompt)
+      body.put("systemMessage", systemMessage)
+      val resp = mapper.readTree(post(client, url, mapper.writeValueAsString(body), maxRetries))
+      Some(resp.path("choices").path(0).path("message").path("content").asText(""))
+    } catch {
+      case e: Exception if !Thread.currentThread().isInterrupted => None
+    }
 }
 
 /** Ollama-style embedding endpoint (reference `app/main.py:225-263`):

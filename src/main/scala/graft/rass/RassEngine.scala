@@ -1,13 +1,13 @@
 package graft.rass
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.StagedDir
 
 import query._
 import ingest.DocumentFetch
@@ -86,7 +86,9 @@ final class InMemoryChatStore extends ChatStore {
 /** Durable messages table as parquet (the Spark-native stand-in for the
   * reference's Postgres `Message` table); both operations survive
   * process restarts, so a new engine on the same path continues the
-  * conversation (SURVEY §7.1 P6).
+  * conversation (SURVEY §7.1 P6). The table is a [[graft.StagedDir]]:
+  * its swap, crash recovery, `_old` probe and snapshot scan are the
+  * ones the ingest commit and the artifact store use.
   *
   *   - `append` writes ONE parquet part per message on the driver,
   *     through the same `OutputWriter` a Spark write task uses (so the
@@ -94,24 +96,21 @@ final class InMemoryChatStore extends ChatStore {
   *     written under a hidden `_append-` name and renamed into place,
   *     so readers only ever see whole parts; a part left hidden by a
   *     killed append is deleted by the next append's recovery.
-  *   - `history` is ONE Spark job: the chatId-filtered last-n scan. The
-  *     schema is given and the scan's file index is the store's own
-  *     race-checked listing, so no schema-inference or listing job runs
-  *     however many parts the table holds.
+  *   - `history` is ONE Spark job: the chatId-filtered last-n scan over
+  *     the StagedDir snapshot with the message schema given, so no
+  *     schema-inference or listing job runs however many parts the
+  *     table holds.
   *
   * Parts accumulate one per message; once their count passes
   * `compactAfterFiles`, the table is rewritten into a few
-  * chatId-clustered, createdAt-sorted files and promoted with the same
-  * staged double-rename as [[ingest.IngestCommit]] (a crash at any
-  * point leaves the old or the new table recoverable). Single writer
-  * per path, the same contract as the ingest commit path.
+  * chatId-clustered, createdAt-sorted files, staged and swapped in.
+  * Single writer per path, the same contract as the ingest commit path.
   */
 final class ParquetChatStore(spark: SparkSession, path: String,
     compactAfterFiles: Int = 64) extends ChatStore {
   import ParquetChatStore._
 
-  private def fs = new HPath(path).getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
+  private def fs = StagedDir.fs(spark, path)
 
   private lazy val toRow = Encoder.createSerializer()
 
@@ -139,24 +138,20 @@ final class ParquetChatStore(spark: SparkSession, path: String,
       throw new java.io.IOException(s"could not publish chat part $hidden")
   }
 
-  /** Crash recovery, same contract as IngestCommit: a kill between a
-    * compaction's two renames leaves the table at `_old` — restore it;
-    * a leftover staging is an unpromoted rewrite of data still fully
-    * present in the live table — discard it; a hidden part is an
-    * append killed before its rename — discard it too.
+  /** StagedDir's crash recovery (a table left at `_old` is restored, a
+    * leftover compaction staging is discarded), then the parts a kill
+    * left hidden before their rename are deleted.
     *
     * Destructive (deletes staging, renames), so it runs ONLY on the
     * append path, which the single-WRITER-per-path contract already
     * serializes. history() must never call it: a second store instance
     * on the same path (the documented restart/continuation pattern)
     * reading while the writer compacts would otherwise delete the
-    * writer's in-progress `_staging` mid-rewrite.
+    * writer's in-progress staging mid-rewrite.
     */
   private def recover(): Unit = {
-    val (target, retired) = (new HPath(path), new HPath(path + "_old"))
-    if (!fs.exists(target) && fs.exists(retired)) fs.rename(retired, target)
-    val staging = new HPath(path + "_staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
+    StagedDir.recover(fs, Seq(path))
+    val target = new HPath(path)
     if (fs.exists(target))
       fs.listStatus(target).filter(_.getPath.getName.startsWith(HiddenPrefix))
         .foreach(s => fs.delete(s.getPath, false))
@@ -164,47 +159,14 @@ final class ParquetChatStore(spark: SparkSession, path: String,
 
   private def maybeCompact(): Unit = {
     val dir = new HPath(path)
-    val parts = liveParts(dir)
+    val parts = StagedDir.parts(fs, dir)
     if (parts.length > compactAfterFiles) {
-      scan(dir, parts)
+      StagedDir.scan(spark, dir, parts, Schema)
         .repartitionByRange(col("chatId"), col("createdAt"))
         .sortWithinPartitions(col("chatId"), col("createdAt"))
-        .write.mode("overwrite").parquet(path + "_staging")
-      ingest.IngestCommit.swapIn(fs, path)
+        .write.mode("overwrite").parquet(StagedDir.staging(path))
+      StagedDir.swapIn(fs, path)
     }
-  }
-
-  /** The committed parts under `dir`, snapshotted OURSELVES: Spark's
-    * file-index listing (InMemoryFileIndex/HadoopFSUtils) tolerates a
-    * path vanishing mid-list — it logs "Was it deleted very recently?"
-    * and SKIPS it — so a compaction rename racing it could silently
-    * serve HALF a conversation. A plain fs.listStatus is stat-per-entry
-    * and silently TRUNCATES under the same race, so this goes through
-    * listComplete, which cross-checks the stat count against the raw
-    * name enumeration and throws the FileNotFound that pathGone retries
-    * instead of returning a partial listing.
-    */
-  private def liveParts(dir: HPath): Array[FileStatus] =
-    graft.pipeline.ArtifactStore.listComplete(fs, dir).filter { s =>
-      val name = s.getPath.getName
-      name.endsWith(".parquet") && !name.startsWith(HiddenPrefix)
-    }
-
-  /** A scan of exactly `parts`: the message schema is given and the
-    * file index serves `parts` as the listing of `dir`, so building the
-    * frame lists nothing and infers nothing — the scan's own job is the
-    * only one.
-    */
-  private def scan(dir: HPath, parts: Array[FileStatus]): DataFrame = {
-    val snapshot = new FileStatusCache {
-      override def getLeafFiles(p: HPath) = Some(parts)
-      override def putLeafFiles(p: HPath, files: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(spark, Seq(dir), Map.empty, Some(Schema),
-      snapshot, Some(PartitionSpec.emptySpec), None)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), Schema,
-      None, new ParquetFileFormat(), Map.empty)(spark))
   }
 
   override def history(chatId: String, n: Int = 10): Seq[ChatMessage] = synchronized {
@@ -214,41 +176,22 @@ final class ParquetChatStore(spark: SparkSession, path: String,
     // repair (rename/delete) to the writer so a reader instance can
     // never destroy a concurrent compaction's staging directory
     def attempt(): Seq[ChatMessage] = {
-      val dir =
-        if (!fs.exists(new HPath(path)) && fs.exists(new HPath(path + "_old")))
-          new HPath(path + "_old")
-        else new HPath(path)
-      val parts = liveParts(dir)
-      // RawLocalFileSystem can win its exists() probe and then lose the
-      // File.length() call to the rename — java.io.File.length() reports
-      // a MISSING file as 0, so the race materializes as a zero-length
-      // FileStatus, not an exception. A committed parquet part is never
-      // 0 bytes (writers rename in complete files), so zero length IS
-      // the race — reclassify it as the FileNotFound it really is (the
-      // file index would otherwise plan no splits for it and the scan
-      // would serve a partial conversation).
-      if (parts.exists(_.getLen == 0L))
-        throw new java.io.FileNotFoundException(
-          s"zero-length parquet part under $dir (rename race)")
-      if (parts.isEmpty) Seq.empty
-      else {
-        // last-n pushed into the scan (TakeOrderedAndProject after the
-        // chatId filter) — only n rows reach the driver however long the
-        // chat history grows, mirroring the reference's `take: 10` desc
-        // query (`main.py:2786-2791`). An exchange's user+assistant rows
-        // share a timestamp (ask() stamps both with one clock read), so
-        // the role breaks the tie on BOTH the cutoff (assistant first in
-        // desc order keeps an exchange's halves together) and the final
-        // ascending render (user line before its answer).
-        val roleRank = when(col("role") === "user", 0).otherwise(1)
-        scan(dir, parts).as[ChatMessage]
-          .filter(col("chatId") === chatId)
-          .orderBy(col("createdAt").desc, roleRank.desc)
-          .limit(n)
-          .collect()
-          .sortBy(m => (m.createdAt.getTime, if (m.role == "user") 0 else 1))
-          .toSeq
-      }
+      // last-n pushed into the scan (TakeOrderedAndProject after the
+      // chatId filter) — only n rows reach the driver however long the
+      // chat history grows, mirroring the reference's `take: 10` desc
+      // query (`main.py:2786-2791`). An exchange's user+assistant rows
+      // share a timestamp (ask() stamps both with one clock read), so
+      // the role breaks the tie on BOTH the cutoff (assistant first in
+      // desc order keeps an exchange's halves together) and the final
+      // ascending render (user line before its answer).
+      val roleRank = when(col("role") === "user", 0).otherwise(1)
+      StagedDir.read(spark, StagedDir.live(fs, path), Some(Schema)).as[ChatMessage]
+        .filter(col("chatId") === chatId)
+        .orderBy(col("createdAt").desc, roleRank.desc)
+        .limit(n)
+        .collect()
+        .sortBy(m => (m.createdAt.getTime, if (m.role == "user") 0 else 1))
+        .toSeq
     }
     try attempt()
     catch {
@@ -258,20 +201,21 @@ final class ParquetChatStore(spark: SparkSession, path: String,
       //     re-resolves, fails the same way, and returns empty;
       //   - a concurrent writer's recover()/compaction renamed the
       //     table between our listing and the scan (scan-time
-      //     FileNotFound buried in a SparkException): the data MOVED,
-      //     it didn't vanish — the retry re-resolves the live path and
-      //     serves it. Only if the second attempt ALSO finds nothing is
-      //     the table treated as absent.
-      case t: Throwable if ParquetChatStore.pathGone(t) =>
+      //     FileNotFound buried in a SparkException), or mid-listing
+      //     (the snapshot refuses a truncated or empty listing): the
+      //     data MOVED, it didn't vanish — the retry re-resolves the
+      //     live path and serves it. Only if the second attempt ALSO
+      //     finds nothing is the table treated as absent.
+      case t: Throwable if StagedDir.pathGone(t) =>
         try attempt()
-        catch { case t2: Throwable if ParquetChatStore.pathGone(t2) => Seq.empty }
+        catch { case t2: Throwable if StagedDir.pathGone(t2) => Seq.empty }
     }
   }
 }
 
 object ParquetChatStore {
-  /** Name prefix of a part still being written; Spark's own listings
-    * skip `_`-prefixed files too.
+  /** Name prefix of a part still being written; the snapshot listing
+    * skips `_`-prefixed files, as Spark's own listings do.
     */
   private val HiddenPrefix = "_append-"
 
@@ -279,72 +223,6 @@ object ParquetChatStore {
 
   /** The table's schema, exactly what `Seq(m).toDF()` writes. */
   private val Schema: StructType = Encoder.schema
-
-  /** Disambiguates FileUtil.list's File.list()==null misreports: the
-    * rename race either leaves the path absent or puts it back whole
-    * (a fresh enumeration succeeds); a real EACCES leaves it present
-    * and unlistable on every retry. Unparseable path strings are not
-    * "gone".
-    */
-  private def goneOrListable(path: String): Boolean =
-    try {
-      java.nio.file.Files.notExists(java.nio.file.Paths.get(path)) ||
-        new java.io.File(path).list() != null
-    } catch { case _: java.nio.file.InvalidPathException => false }
-
-  /** Does this failure (anywhere in its cause chain) mean the path we
-    * resolved is no longer there — as opposed to corrupt data, a bad
-    * schema, or any other real error that must propagate?
-    */
-  private[graft] def pathGone(t: Throwable): Boolean =
-    if (t == null) false
-    else t match {
-      case _: java.io.FileNotFoundException => true
-      // Hadoop's vectored-read path (RawLocalFileSystem.readVectored)
-      // surfaces a rename-during-read as NIO's NoSuchFileException —
-      // NOT a java.io.FileNotFoundException — wrapped in a
-      // FAILED_READ_FILE.NO_HINT SparkException whose message carries
-      // no recognizable error class. Matching the NIO type in the
-      // cause chain is the only reliable signal.
-      case _: java.nio.file.NoSuchFileException => true
-      // Hadoop's FileUtil.list throws NIO AccessDeniedException
-      // whenever File.list() returns null — which a directory
-      // VANISHING mid-list (the compaction rename winning the race
-      // during the scan's file listing) also produces, misreported as
-      // "Permission denied". Probe the named path: it is the rename
-      // race when the path is absent by probe time OR back and
-      // LISTABLE (the flip-back can land before the probe) — a genuine
-      // permissions problem leaves the path present and still
-      // unlistable on every retry, and propagates. A path string the
-      // local FS can't even parse is likewise not "gone".
-      case e: java.nio.file.AccessDeniedException
-        if e.getFile != null && ParquetChatStore.goneOrListable(e.getFile) => true
-      // Hadoop's FileUtil.list has a second misreport shape for the
-      // same File.list()==null condition: a bare IOException "Invalid
-      // directory or I/O error occurred for dir: <path>". Same rule as
-      // AccessDenied above.
-      case e: java.io.IOException
-        if e.getMessage != null &&
-          e.getMessage.startsWith("Invalid directory or I/O error occurred for dir: ") &&
-          ParquetChatStore.goneOrListable(e.getMessage.stripPrefix(
-            "Invalid directory or I/O error occurred for dir: ")) => true
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getMessage.contains("PATH_NOT_FOUND") ||
-          e.getMessage.contains("Path does not exist") ||
-          // a rename can land between path resolution and file listing:
-          // the dir exists at probe time, lists zero files at plan time
-          // ("was not found. Was it deleted very recently?"), and schema
-          // inference fails. A genuinely empty table degrades to empty
-          // history through the same retry, which is the right answer
-          // for a chat read.
-          e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => true
-      // scan-time error classes: FAILED_READ_FILE.FILE_NOT_EXIST (the
-      // listed file was renamed away before the task opened it)
-      case e if e.getMessage != null &&
-        (e.getMessage.contains("FILE_NOT_FOUND") ||
-          e.getMessage.contains("FILE_NOT_EXIST")) => true
-      case e => pathGone(e.getCause)
-    }
 }
 
 /** The ask() orchestration (reference `app/main.py:2750-2964`):

@@ -101,7 +101,7 @@ object Searches {
     */
   def q1ExactMatch(docs: DataFrame, query: String, k: Int = DefaultK,
       patientId: Option[String] = None, filter: Option[Column] = None): DataFrame = {
-    graft.rass.expressions.PhraseCount.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     val phrase = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
       (textFields ++ keywordFields).map(_._1))
@@ -153,7 +153,7 @@ object Searches {
     */
   def q4Structured(docs: DataFrame, query: String, k: Int = DefaultK,
       patientId: Option[String] = None, filter: Option[Column] = None): DataFrame = {
-    graft.rass.expressions.PhraseCount.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     val phrase = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(
       applyFilters(docs.filter(col("doc_type") === "structured"), patientId, filter),
@@ -172,7 +172,7 @@ object Searches {
   def q5HybridStructured(docs: DataFrame, query: String, queryVec: Seq[Double],
       k: Int = DefaultK, patientId: Option[String] = None,
       filter: Option[Column] = None): DataFrame = {
-    graft.rass.expressions.PhraseCount.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     val phrase = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(
       applyFilters(docs.filter(col("doc_type") === "structured"), patientId, filter),
@@ -236,8 +236,7 @@ object Searches {
   def q8Temporal(docs: DataFrame, query: String, nowMicros: Long,
       k: Int = DefaultK, patientId: Option[String] = None,
       filter: Option[Column] = None): DataFrame = {
-    graft.rass.expressions.TermFrequency.register(docs.sparkSession)
-    graft.rass.expressions.InWindow.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     val terms = lit(Analyzer.normalizeQuery(query).toArray)
     val allText = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), allText)
@@ -273,7 +272,7 @@ object Searches {
   def q10MultiIntent(docs: DataFrame, query: String, queryVec: Seq[Double],
       nowMicros: Long, k: Int = DefaultK, patientId: Option[String] = None,
       filter: Option[Column] = None, stats: (DataFrame, DataFrame)): DataFrame = {
-    graft.rass.expressions.InWindow.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     val terms = Analyzer.normalizeQuery(query)
     val fields = (textFields ++ keywordFields).map(_._1)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter), fields)
@@ -294,7 +293,7 @@ object Searches {
     */
   def q11EntitySpecific(docs: DataFrame, query: String, k: Int = DefaultK,
       patientId: Option[String] = None, filter: Option[Column] = None): DataFrame = {
-    graft.rass.expressions.PhraseCount.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     val phrase = Analyzer.normalizeQuery(query)
     val (docsTok, tok) = withTokenCols(applyFilters(docs, patientId, filter),
       entityFields.map(_._1))

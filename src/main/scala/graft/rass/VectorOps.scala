@@ -39,7 +39,7 @@ object VectorOps {
     */
   def cosineFused(spark: org.apache.spark.sql.SparkSession,
       a: Column, b: Column): Column = {
-    graft.rass.expressions.CosineSimilarity.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     call_function("cosine_sim", a, b)
   }
 }

@@ -165,11 +165,3 @@ object Bm25Kernel {
     new Bm25Kernel(sets, idf, avgdl, nullIdf)
   }
 }
-
-object Bm25Field {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bm25_field",
-      { exprs: Seq[Expression] => Bm25Field(exprs.head, exprs(1), exprs(2), exprs(3)) },
-      "scala_udf")
-}

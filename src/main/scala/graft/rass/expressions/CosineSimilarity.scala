@@ -87,14 +87,3 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "cosine_sim"
 }
-
-object CosineSimilarity {
-  /** Register `cosine_sim` in the session's function registry so it is
-    * callable via `call_function` / SQL. Idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      { exprs: Seq[Expression] => CosineSimilarity(exprs.head, exprs(1)) },
-      "scala_udf")
-}

@@ -77,12 +77,3 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "dot_product"
 }
-
-object DotProduct {
-  /** Register `dot_product` in the session's function registry. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      { exprs: Seq[Expression] => DotProduct(exprs.head, exprs(1)) },
-      "scala_udf")
-}

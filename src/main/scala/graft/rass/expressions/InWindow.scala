@@ -55,11 +55,3 @@ case class InWindow(ts: Expression, window: Expression)
 
   override def prettyName: String = "in_window"
 }
-
-object InWindow {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "in_window",
-      { exprs: Seq[Expression] => InWindow(exprs.head, exprs(1)) },
-      "scala_udf")
-}

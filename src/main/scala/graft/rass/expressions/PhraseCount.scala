@@ -108,11 +108,3 @@ case class PhraseCount(tokens: Expression, phrase: Expression, prefixLast: Expre
 
   override def prettyName: String = "phrase_count"
 }
-
-object PhraseCount {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phrase_count",
-      { exprs: Seq[Expression] => PhraseCount(exprs.head, exprs(1), exprs(2)) },
-      "scala_udf")
-}

@@ -100,11 +100,3 @@ object TermSet {
     case null => Array.empty
   })
 }
-
-object TermFrequency {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "term_freq",
-      { exprs: Seq[Expression] => TermFrequency(exprs.head, exprs(1), exprs(2)) },
-      "scala_udf")
-}

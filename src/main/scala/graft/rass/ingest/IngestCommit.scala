@@ -1,7 +1,9 @@
 package graft.rass.ingest
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.StagedDir
 import graft.rass.{CorpusStats, DocSchema, Embedder}
 
 /** Crash-safe commit of one parsed ingest batch into the document
@@ -17,114 +19,67 @@ import graft.rass.{CorpusStats, DocSchema, Embedder}
   * the property that lets a search at 100 TB read its stats row
   * without any corpus scan.
   *
-  * All three tables stage fully before the first swap; a replay after a
-  * crash at any point either finishes a half-promoted set or discards
-  * the stagings and recomputes (the upsert keyed on doc_id makes the
-  * replay itself harmless).
+  * The three tables are [[graft.StagedDir]]s, committed under the
+  * document table's path lock: all three stage fully before the first
+  * swap, the document table swapping first, so StagedDir's recovery
+  * either finishes a half-promoted set or discards the stagings and
+  * lets the replay recompute (the upsert keyed on doc_id makes the
+  * replay itself harmless). The document table is written by
+  * [[IndexWriter.write]] (user partitions, patient clustering) and read
+  * with its known schema; the stats tables are read as snapshots, so a
+  * commit runs no schema-inference job.
   */
 object IngestCommit {
-
-  private type HPath = org.apache.hadoop.fs.Path
 
   def statsFieldsPath(tablePath: String): String = tablePath + "_stats_fields"
   def statsTermsPath(tablePath: String): String = tablePath + "_stats_terms"
 
-  /** One monitor per table path: commits to the SAME table serialize
-    * within this driver (the staging/_old paths are fixed per table, so
-    * two interleaved commits would delete each other's stagings).
-    * Cross-driver exclusion is the deployment's job — exactly one
-    * writer owns a table, the same contract Structured Streaming's
-    * checkpoint directory already imposes on the auto-ingest path.
-    */
-  private val commitLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
   def commit(spark: SparkSession, tablePath: String, parsed: DataFrame,
       embedder: Embedder): Unit =
-    commitLocks.getOrElseUpdate(tablePath, new Object).synchronized {
+    StagedDir.locked(tablePath) {
       commitLocked(spark, tablePath, parsed, embedder)
     }
 
   private def commitLocked(spark: SparkSession, tablePath: String,
       parsed: DataFrame, embedder: Embedder): Unit = {
-    // the path's OWN filesystem, not the default one — tablePath may
-    // live on a different scheme (s3a://, hdfs://) than fs.defaultFS
-    val fs = new HPath(tablePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // crash recovery 1: a kill between the two renames of a swap
-    // leaves the previous table at _old — restore before reading
+    val fs = StagedDir.fs(spark, tablePath)
     val tables = Seq(tablePath, statsFieldsPath(tablePath),
       statsTermsPath(tablePath))
-    tables.foreach { p =>
-      val (target, retired) = (new HPath(p), new HPath(p + "_old"))
-      if (!fs.exists(target) && fs.exists(retired))
-        fs.rename(retired, target)
-    }
-    // crash recovery 2: stagings are fully written before the FIRST
-    // swap, so a leftover staging whose doc-table staging is already
-    // gone means the crash hit after the doc table was promoted —
-    // finish promoting it (else the replay's merge, computed against
-    // the already-new doc table, would be a no-op over stale stats).
-    // Any other leftover staging predates the swaps; discard it and
-    // let the replay recompute.
-    val docStagingLeft = fs.exists(new HPath(tablePath + "_staging"))
-    tables.foreach { p =>
-      val staging = new HPath(p + "_staging")
-      if (fs.exists(staging)) {
-        val complete = fs.exists(new HPath(p + "_staging/_SUCCESS"))
-        if (!docStagingLeft && complete) swapIn(fs, p)
-        else fs.delete(staging, true)
-      }
-    }
+    StagedDir.recover(fs, tables)
 
     val docs = IndexWriter.withEmbeddings(parsed, embedder)
     val existing =
-      if (fs.exists(new HPath(tablePath)))
-        Some(spark.read.parquet(tablePath)) else None
+      if (fs.exists(new Path(tablePath)))
+        Some(IndexWriter.read(spark, tablePath)) else None
     val merged = IndexWriter.upsert(existing, docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // stage EVERYTHING first (Spark refuses to overwrite a path it
       // is reading in the same plan, and `existing`'s resolved file
       // list dies the moment the doc table is swapped), THEN swap
-      merged.write.mode("overwrite").parquet(tablePath + "_staging")
+      IndexWriter.write(merged, StagedDir.staging(tablePath))
 
       val batchIds = parsed.select("doc_id").distinct()
       val (newFields, newTerms) = existing match {
-        case Some(e) if tables.tail.forall(p => fs.exists(new HPath(p))) =>
+        case Some(e) if tables.tail.forall(p => fs.exists(new Path(p))) =>
           // upsert winners for batch ids are always the batch rows,
           // so: new corpus = existing − replaced + batch winners
           val replaced = e.join(batchIds, Seq("doc_id"), "left_semi")
           val added = merged.join(batchIds, Seq("doc_id"), "left_semi")
           CorpusStats.merge(
-            (spark.read.parquet(statsFieldsPath(tablePath)),
-              spark.read.parquet(statsTermsPath(tablePath))),
+            (StagedDir.read(spark, statsFieldsPath(tablePath)),
+              StagedDir.read(spark, statsTermsPath(tablePath))),
             added, replaced, DocSchema.scoredFields)
         case _ => // first batch, or stats not yet materialized
           CorpusStats.build(merged, DocSchema.scoredFields)
       }
       newFields.write.mode("overwrite")
-        .parquet(statsFieldsPath(tablePath) + "_staging")
+        .parquet(StagedDir.staging(statsFieldsPath(tablePath)))
       newTerms.write.mode("overwrite")
-        .parquet(statsTermsPath(tablePath) + "_staging")
+        .parquet(StagedDir.staging(statsTermsPath(tablePath)))
 
-      tables.foreach { p => swapIn(fs, p) }
+      tables.foreach(StagedDir.swapIn(fs, _))
     } finally merged.unpersist()
     ()
-  }
-
-  /** Promote `<p>_staging` to `p`, retiring the old table via `_old` so
-    * a crash at any point leaves either the old or the new table
-    * recoverable (worst case it sits at _old until the next batch).
-    * Shared with [[graft.rass.ParquetChatStore]]'s compaction and the
-    * d06 cluster artifact ([[graft.pipeline.Dedup]]).
-    */
-  private[graft] def swapIn(fs: org.apache.hadoop.fs.FileSystem, p: String): Unit = {
-    val (staging, target, retired) =
-      (new HPath(p + "_staging"), new HPath(p), new HPath(p + "_old"))
-    fs.delete(retired, true)
-    if (fs.exists(target)) fs.rename(target, retired)
-    fs.rename(staging, target)
-    fs.delete(retired, true)
   }
 }

@@ -38,26 +38,10 @@ final class HttpIntent(
 
   @transient private lazy val client = HttpClient.newHttpClient()
 
-  override def classify(query: String): Intent = {
-    val raw =
-      try {
-        val m = HttpJson.mapper
-        val body = m.createObjectNode()
-        body.put("prompt", HttpIntent.promptFor(query))
-        body.put("systemMessage", HttpIntent.SystemMessage)
-        val resp = m.readTree(HttpJson.post(client, endpoint,
-          m.writeValueAsString(body), maxRetries))
-        resp.path("choices").path(0).path("message").path("content").asText("")
-      } catch {
-        case e: Exception =>
-          // HttpJson.post restores the interrupt flag before wrapping
-          // an InterruptedException — a task kill must propagate, not
-          // degrade to the fallback classifier
-          if (Thread.currentThread().isInterrupted) throw e
-          return fallback.classify(query)
-      }
-    HttpIntent.parseLabel(raw).getOrElse(fallback.classify(query))
-  }
+  override def classify(query: String): Intent =
+    HttpJson.complete(client, endpoint, HttpIntent.promptFor(query),
+      HttpIntent.SystemMessage, maxRetries)
+      .flatMap(HttpIntent.parseLabel).getOrElse(fallback.classify(query))
 }
 
 object HttpIntent {

@@ -43,26 +43,10 @@ final class HttpNer(
 
   @transient private lazy val client = HttpClient.newHttpClient()
 
-  override def extract(query: String): Seq[Entity] = {
-    val raw =
-      try {
-        val m = HttpJson.mapper
-        val body = m.createObjectNode()
-        body.put("prompt", HttpNer.promptFor(query))
-        body.put("systemMessage", HttpNer.SystemMessage)
-        val resp = m.readTree(HttpJson.post(client, endpoint,
-          m.writeValueAsString(body), maxRetries))
-        resp.path("choices").path(0).path("message").path("content").asText("")
-      } catch {
-        case e: Exception =>
-          // HttpJson.post restores the interrupt flag before wrapping
-          // an InterruptedException — a task kill must propagate, not
-          // degrade to the fallback extractor
-          if (Thread.currentThread().isInterrupted) throw e
-          return fallback.extract(query)
-      }
-    HttpNer.parseEntities(raw).getOrElse(fallback.extract(query))
-  }
+  override def extract(query: String): Seq[Entity] =
+    HttpJson.complete(client, endpoint, HttpNer.promptFor(query),
+      HttpNer.SystemMessage, maxRetries)
+      .flatMap(HttpNer.parseEntities).getOrElse(fallback.extract(query))
 }
 
 object HttpNer {

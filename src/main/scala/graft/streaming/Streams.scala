@@ -243,7 +243,7 @@ object Streams {
     */
   def semanticDecontamGuard(vecs: DataFrame, centsRow: DataFrame,
       trainVecs: DataFrame): DataFrame = {
-    graft.rass.expressions.CosineSimilarity.register(vecs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(vecs.sparkSession)
     val probes = slice(array_sort(transform(col("cents"), c =>
       struct((-call_function("cosine_sim", col("v"), c.getField("cv")))
         .as("nc"), c.getField("cid").as("cid")))),
@@ -368,7 +368,7 @@ object Streams {
     * sketch — no state store, no watermark, no shuffle, append mode.
     */
   def vocabNoveltyGuard(docs: DataFrame, vocabBloom: Array[Byte]): DataFrame = {
-    graft.rass.expressions.BloomMightContain.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         array_distinct(graft.pipeline.TextAnalysis.toks(col("text"))).as("ts"))
@@ -402,7 +402,7 @@ object Streams {
     * sketch — no state store, no watermark, no shuffle, append mode.
     */
   def audioDupGuard(docs: DataFrame, landmarkBloom: Array[Byte]): DataFrame = {
-    graft.rass.expressions.BloomMightContain.register(docs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(docs.sparkSession)
     // keepShort: EVERY arriving payload yields a profile row — a clip
     // shorter than one landmark window carries no landmarks and reads
     // clean (n_landmarks = 0), it does not silently vanish from the
@@ -504,7 +504,7 @@ object Streams {
     * index's assign table and s09's profile is its monitoring view.
     */
   def ivfIngestAssign(vecs: DataFrame, centsRow: DataFrame): DataFrame = {
-    graft.rass.expressions.CosineSimilarity.register(vecs.sparkSession)
+    graft.rass.expressions.GraftExtensions.register(vecs.sparkSession)
     val best = aggregate(col("cents"),
       struct(lit(-2.0).as("s"), lit(-1L).as("cell")),
       (acc, c) => {
@@ -707,9 +707,4 @@ object AutoIngest {
       .trigger(Trigger.AvailableNow())
       .start()
   }
-
-  def statsFieldsPath(tablePath: String): String =
-    IngestCommit.statsFieldsPath(tablePath)
-  def statsTermsPath(tablePath: String): String =
-    IngestCommit.statsTermsPath(tablePath)
 }

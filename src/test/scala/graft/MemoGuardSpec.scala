@@ -6,15 +6,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scans over src/main/scala: a `TrieMap` declared outside
   * Memo.scala is a session cache bypassing the registry, unless it is
-  * one of the named non-cache maps; and an `ArtifactStore.findValid` or
+  * one of the named non-cache maps; an `ArtifactStore.findValid` or
   * `ArtifactStore.publish` call outside DurableArtifact.scala is a
-  * durable read-through written by hand beside the shared one.
+  * durable read-through written by hand beside the shared one; and a
+  * `"_staging"`/`"_old"` suffix or a `swapIn`/`listComplete` definition
+  * outside StagedDir.scala is another copy of the staged-directory
+  * protocol.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
-  private val NonCacheMaps = Set("ArtifactStore.locks",
-    "ArtifactStore.publishEventCounts", "IngestCommit.commitLocks",
-    "DurableArtifact.salts", "Dedup.lastPropagationRounds")
+  private val NonCacheMaps = Set("StagedDir.locks",
+    "ArtifactStore.publishEventCounts", "DurableArtifact.salts",
+    "Dedup.lastPropagationRounds")
 
   private val Decl =
     """(?:val|var|def)\s+(\w+)\s*(?::[^=]*)?=\s*(?:new\s+)?(?:scala\.collection\.concurrent\.)?TrieMap\b""".r
@@ -79,5 +82,30 @@ class MemoGuardSpec extends AnyFunSuite {
     assert(storeCalls("ArtifactStore.findValid(spark, p, fp)") == 1)
     assert(storeCalls("ArtifactStore\n  .publish (spark, p, fp) { s => }") == 1)
     assert(storeCalls("// ArtifactStore.publish(spark, p, fp)\n/** [[ArtifactStore.findValid]] */") == 0)
+  }
+
+  /** The staged-directory protocol's pieces: its suffix literals (also
+    * at the end of an interpolation) and the definitions of its swap
+    * and race-checked listing.
+    */
+  private val ProtocolPiece = """(?<!\w)_(?:staging|old)"|\bdef\s+(?:swapIn|listComplete)\b""".r
+
+  private def protocolPieces(code: String): Int =
+    ProtocolPiece.findAllMatchIn(stripped(code)).size
+
+  test("the staging/_old suffixes, swapIn and listComplete live only in StagedDir") {
+    val owners = mainSources.filter(kv => protocolPieces(kv._2) > 0).map(_._1)
+    assert(owners == Seq("StagedDir"),
+      s"a copy of the staged-directory protocol outside StagedDir: $owners")
+  }
+
+  test("the protocol scan catches a planted copy") {
+    assert(protocolPieces("""fs.rename(new Path(p + "_old"), target)""") == 1)
+    assert(protocolPieces("""write.parquet(s"${path}_staging")""") == 1)
+    assert(protocolPieces("private[graft] def swapIn(fs: FileSystem, p: String): Unit = ()") == 1)
+    assert(protocolPieces("def listComplete(fs: FileSystem, d: Path) = fs.listStatus(d)") == 1)
+    assert(protocolPieces("""// p + "_old"
+      |/** [[StagedDir.swapIn]] */
+      |StagedDir.swapIn(fs, StagedDir.staging(p)); df.as("t_old")""".stripMargin) == 0)
   }
 }

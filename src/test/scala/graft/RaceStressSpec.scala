@@ -7,7 +7,7 @@ import graft.rass.{ChatMessage, ParquetChatStore}
   * regressions; the silent-truncation listing bug this spec pinned
   * (RawLocalFileSystem.listStatus swallowing per-child FileNotFound
   * when the directory renames mid-stat, fixed by
-  * [[graft.pipeline.ArtifactStore.listComplete]]) reproduced roughly
+  * [[graft.StagedDir.listComplete]]) reproduced roughly
   * once per ~900 reads — below that test's resolution — so this one
   * hammers 300 reads against a continuous flip. Every read must return
   * the whole conversation or degrade to empty; a subset is the bug.

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 
-import graft.SparkSpec
+import graft.{SparkSpec, StagedDir}
 
 /** Direct contract tests for the shared artifact mechanics — the
   * consumer specs (d06, IVF, p09 contamination) prove their artifacts
@@ -40,7 +40,7 @@ class ArtifactStoreSpec extends SparkSpec {
       // a healthy published dir reads back whole
       Seq(1L, 2L, 3L).toDF("v").repartition(2)
         .write.mode("overwrite").parquet(path)
-      val got = ArtifactStore.consistentParquet(spark, path)
+      val got = StagedDir.snapshot(spark, path)
       assert(got.isDefined)
       assert(got.get.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
       // a zero-length part is the mid-republish stat race, not data —
@@ -48,16 +48,16 @@ class ArtifactStoreSpec extends SparkSpec {
       // the part really holds
       val zero = new Path(path + "/part-99999-race.snappy.parquet")
       fs.create(zero).close()
-      assert(ArtifactStore.consistentParquet(spark, path).isEmpty,
+      assert(StagedDir.snapshot(spark, path).isEmpty,
         "zero-length part must invalidate the snapshot")
       fs.delete(zero, true)
       // a vanished dir is "not published", not a crash
-      assert(ArtifactStore.consistentParquet(spark,
+      assert(StagedDir.snapshot(spark,
         path + s"_never_${System.nanoTime()}").isEmpty)
       // an empty dir (no parts yet) is likewise not a readable artifact
       val bare = freshPath("bare")
       fs.mkdirs(new Path(bare))
-      try assert(ArtifactStore.consistentParquet(spark, bare).isEmpty)
+      try assert(StagedDir.snapshot(spark, bare).isEmpty)
       finally wipe(bare)
     } finally wipe(path)
   }
@@ -88,11 +88,11 @@ class ArtifactStoreSpec extends SparkSpec {
       // swap lands mid-materialization, or returns a COMPLETE payload.
       // What it must never do is silently return a subset or a mix.
       try (1 to 25).foreach { _ =>
-        ArtifactStore.consistentParquet(spark, path).foreach { df =>
+        StagedDir.snapshot(spark, path).foreach { df =>
           val got =
             try Some(df.collect().map(_.getLong(0)).toSet)
             catch {
-              case t: Throwable if graft.rass.ParquetChatStore.pathGone(t) =>
+              case t: Throwable if StagedDir.pathGone(t) =>
                 None // loud refusal mid-swap: allowed
             }
           got.foreach(g => assert(payloads.contains(g),
@@ -102,7 +102,7 @@ class ArtifactStoreSpec extends SparkSpec {
       assert(writerFailure.isEmpty,
         s"concurrent publisher died: ${writerFailure.map(_.toString)}")
       // settled state reads back whole
-      val settled = ArtifactStore.consistentParquet(spark, path)
+      val settled = StagedDir.snapshot(spark, path)
       assert(settled.isDefined &&
         payloads.contains(settled.get.collect().map(_.getLong(0)).toSet))
     } finally wipe(path)
@@ -174,5 +174,30 @@ class ArtifactStoreSpec extends SparkSpec {
     val a = ArtifactStore.sourceListing(spark, sfDir + "/documents.parquet")
     val b = ArtifactStore.sourceListing(spark, sfDir + "/documents.parquet")
     assert(a == b && a != "absent" && a.nonEmpty)
+  }
+
+  test("a snapshot's schema is the one spark.read.parquet infers, for every artifact and stats table") {
+    val artifacts = Seq(Dedup.clusterArtifact, Dedup.corpusBandArtifact,
+      Dedup.detectorPairsArtifact, Multimodal.mediaClusterArtifact,
+      Multimodal.mediaDetectorPairsArtifact, Similarity.semClusterArtifact,
+      Similarity.semDropArtifact, Similarity.semContamArtifact, TextAnalysis.contamArtifact)
+    val dirs = artifacts.map { a => a.read(spark, sfDir); a.path(sfDir) }
+    // the two BM25 stats tables as the ingest commit writes them
+    val tab = java.nio.file.Files.createTempDirectory("snapstats").resolve("tab").toString
+    val bundle = {
+      val src = scala.io.Source.fromInputStream(getClass.getResourceAsStream("/fixtures/bundle.json"))
+      try src.mkString finally src.close()
+    }
+    import spark.implicits._
+    graft.rass.ingest.IngestCommit.commit(spark, tab,
+      graft.rass.ingest.FhirBundleParser.parseBundles(Seq(("/f/b.json", bundle)).toDS(), "u1"),
+      new graft.rass.DeterministicEmbedder(8))
+    val stats = Seq(graft.rass.ingest.IngestCommit.statsFieldsPath(tab),
+      graft.rass.ingest.IngestCommit.statsTermsPath(tab))
+    for (dir <- dirs ++ stats) {
+      val inferred = spark.read.parquet(dir).schema
+      assert(StagedDir.read(spark, dir).schema == inferred,
+        s"$dir: snapshot ${StagedDir.read(spark, dir).schema.treeString} vs inferred ${inferred.treeString}")
+    }
   }
 }

@@ -84,7 +84,7 @@ class DedupSpec extends SparkSpec {
   test("d05 sign-LSH pairs are a subset of brute-force cosine pairs") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.rass.expressions.CosineSimilarity.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val e = graft.Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val brute = e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")

@@ -120,8 +120,7 @@ class Bm25ParitySpec extends SparkSpec {
   }
 
   test("bm25_field equals the composed formula bit for bit, generated and interpreted") {
-    graft.rass.expressions.TermFrequency.register(spark)
-    graft.rass.expressions.Bm25Field.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val params = Gen.Parameters.default.withSize(8)
     val generated = (0 until 36).flatMap(i => genQuery(params, Seed(20261018L + i)))
     // the cases the generator must not leave to chance
@@ -155,7 +154,7 @@ class Bm25ParitySpec extends SparkSpec {
   }
 
   test("bm25_field rejects a non-literal accept set") {
-    graft.rass.expressions.Bm25Field.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val e = intercept[Exception] {
       docs.select(call_function("bm25_field", Analyzer.tokens(col("f")),
         col("f").isNotNull, array(array(col("f"))), array(lit(1.0)))).collect()
@@ -164,7 +163,7 @@ class Bm25ParitySpec extends SparkSpec {
   }
 
   test("in_window equals BETWEEN on timestamp literals, null and bounds included") {
-    graft.rass.expressions.InWindow.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val lo = 1717200000000000L
     val hi = lo + 365L * 86400000000L
     val ts = Seq[java.lang.Long](null, lo - 1, lo, lo + 1, hi - 1, hi, hi + 1, 0L)

@@ -1,7 +1,6 @@
 package graft.rass
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 import graft.SparkSpec
@@ -25,29 +24,29 @@ class CodegenStabilitySpec extends SparkSpec {
   private val now1 = 1748736000000000L
   private val now2 = now1 + 86400000000L * 37 + 1234567L
 
-  /** Generated source of every whole-stage codegen subtree of the
-    * executed (AQE-final) plan, in a fixed order.
-    */
-  private def generated(df: DataFrame): Seq[String] =
-    codegenStringSeq(df.queryExecution.executedPlan).map(_._2).sorted
-
   /** `b` is the same search as `a` with another question or clock.
     * Building a DataFrame runs the driver-side stats and accept-set
-    * lookups, so what is counted is the scoring plan's own run.
+    * lookups, so what is counted and read is the scoring plan's own
+    * run: its compiles, and the generated code of every plan it
+    * executes (whole-stage classes and the predicates of Filters
+    * outside them).
     */
   private def assertSameCode(name: String, a: => DataFrame, b: => DataFrame,
       scored: Boolean = true): Unit = {
     val first = a
-    compilesDuring(first.collect())
+    val ca = generated(plansDuring(first.collect()))
     val second = b
-    assert(compilesDuring(second.collect()) == 0,
-      s"$name: the second question compiled new classes")
-    val (ca, cb) = (generated(first), generated(second))
-    assert(ca.nonEmpty, s"$name: no whole-stage codegen")
-    assert(ca == cb, s"$name: the generated code depends on the question " +
-      s"(${ca.size} vs ${cb.size} classes, first difference at " +
-      s"${ca.zip(cb).indexWhere { case (x, y) => x != y }})")
-    if (scored) assert(ca.exists(_.contains("Bm25Kernel")),
+    var compiles = 0L
+    val cb = generated(plansDuring { compiles = compilesDuring(second.collect()) })
+    assert(ca.flatten.nonEmpty, s"$name: no generated code")
+    assert(ca.size == cb.size, s"$name: ${ca.size} vs ${cb.size} plans")
+    ca.zip(cb).zipWithIndex.foreach { case ((x, y), i) =>
+      assert(x == y, s"$name: plan $i's generated code depends on the question " +
+        s"(${x.size} vs ${y.size} sources, first difference at " +
+        s"${x.zip(y).indexWhere { case (s, t) => s != t }})")
+    }
+    assert(compiles == 0, s"$name: the second question compiled new classes")
+    if (scored) assert(ca.flatten.exists(_.contains("Bm25Kernel")),
       s"$name: BM25 scoring runs outside whole-stage codegen")
   }
 

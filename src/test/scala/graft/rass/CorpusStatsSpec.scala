@@ -62,8 +62,7 @@ class CorpusStatsSpec extends SparkSpec {
     // and the two scoring paths agree to the bit on every row: a per-row
     // bounded-Levenshtein count (the composed term_freq formula) and the
     // field scorer of fuzzyBestFields fed the accept sets
-    graft.rass.expressions.TermFrequency.register(spark)
-    graft.rass.expressions.Bm25Field.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val stats = CorpusStats.statsRow(fieldStats, termStats, Seq("note"), terms)
     val both = docs
       .crossJoin(spark.createDataFrame(java.util.List.of(stats), stats.schema))
@@ -82,7 +81,7 @@ class CorpusStatsSpec extends SparkSpec {
     val (fieldStats, termStats) = CorpusStats.build(docs, Seq("note"))
     assert(Bm25.fuzzyAcceptSets(fieldStats, termStats, Seq("note"), Nil).isEmpty)
     // and the scoring column degrades to 0 for null-term queries
-    graft.rass.expressions.Bm25Field.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val scored = docs
       .withColumn("s", Bm25.scoreFuzzyVocab("note", Nil,
         CorpusStats.statsRow(fieldStats, termStats, Seq("note"), Nil), Map.empty))

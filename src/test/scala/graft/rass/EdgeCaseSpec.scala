@@ -26,7 +26,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("cosine_sim nulls on mismatched dimensions instead of scoring a prefix") {
     import spark.implicits._
-    expressions.CosineSimilarity.register(spark)
+    expressions.GraftExtensions.register(spark)
     val df = Seq((Array(1.0, 0.0, 0.0), Array(1.0, 0.0))).toDF("a", "b")
     val r = df.select(call_function("cosine_sim", $"a", $"b").as("c")).head()
     assert(r.isNullAt(0))

@@ -1,18 +1,10 @@
 package graft.rass
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Attribute, BindReferences, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
-import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -30,57 +22,6 @@ class QuestionShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     s
   }
   private val now = 1748736000000000L
-
-  /** The executed plan of every query `body` runs on this session, in
-    * completion order. The listener bus is asynchronous, so `body` is
-    * bracketed by two fence queries, and only what completes between
-    * them is kept.
-    */
-  private def plansDuring(body: => Any): Seq[SparkPlan] = {
-    val fence = s"fence-${System.nanoTime()}"
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
-    @volatile var open = false
-    val closed = new CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.analyzed.output.map(_.name) match {
-          case Seq(`fence`) => if (open) closed.countDown() else open = true
-          case _ => if (open) plans.add(qe.executedPlan)
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      spark.range(1).toDF(fence).collect()
-      body
-      spark.range(1).toDF(fence).collect()
-      assert(closed.await(60, TimeUnit.SECONDS), "fence query never reached the listener")
-      plans.asScala.toSeq
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  /** The Java source a predicate compiles to outside whole-stage
-    * codegen (`GeneratePredicate`'s body: state, helper functions and
-    * the evaluation).
-    */
-  private def predicateCode(cond: Expression, input: Seq[Attribute]): String = {
-    val ctx = new CodegenContext
-    val ev = BindReferences.bindReference(cond, input).genCode(ctx)
-    s"${ctx.declareMutableStates()}\n${ctx.declareAddedFunctions()}\n${ev.code}"
-  }
-
-  /** Generated source of each plan: every whole-stage codegen subtree,
-    * and the predicate of every Filter left outside them.
-    */
-  private def generated(plans: Seq[SparkPlan]): Seq[Seq[String]] = plans.map { p =>
-    def stage(n: SparkPlan): Seq[SparkPlan] = n match {
-      case _: InputAdapter => Nil
-      case _ => n +: n.children.flatMap(stage)
-    }
-    val staged = collect(p) { case w: WholeStageCodegenExec => w }.flatMap(w => stage(w.child)).toSet
-    codegenStringSeq(p).map(_._2) ++
-      collect(p) { case f: FilterExec if !staged(f) => predicateCode(f.condition, f.child.output) }
-  }
 
   private def assertSameCode(name: String, a: Seq[Seq[String]], b: Seq[Seq[String]]): Unit = {
     assert(a.flatten.nonEmpty, s"$name: no generated code")

@@ -110,7 +110,7 @@ class Bm25Spec extends SparkSpec {
     val terms = Seq("diabetes")
     val (fieldStats, termStats) = CorpusStats.build(docs, Seq("unstructuredText"))
     val stats = CorpusStats.statsRow(fieldStats, termStats, Seq("unstructuredText"), terms)
-    graft.rass.expressions.Bm25Field.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val scored = docs
       .withColumn("score", Bm25.score("unstructuredText", terms, stats))
       .select("doc_id", "score").collect()

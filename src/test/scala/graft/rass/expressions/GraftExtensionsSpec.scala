@@ -11,13 +11,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("extension class installs cosine_sim into a SparkSessionExtensions") {
     // exercised against a fresh extensions object — building a whole new
     // SparkSession is not possible here (getOrCreate reuses the shared
-    // test session, which would silently skip the extension hook)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw; registration shape checked below
+    // test session, which would silently skip the extension hook) —
+    // that records the name of every function injected into it
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    new GraftExtensions().apply(ext)
+    assert(injected.sorted.toSeq == Seq("bloom_might_contain", "bm25_field", "cosine_sim",
+      "dot_product", "in_window", "phrase_count", "term_freq"))
   }
 
   test("cosine_sim is callable from plain SQL once registered") {
-    CosineSimilarity.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) AS c")
       .head().getDouble(0)
@@ -36,7 +45,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("phrase_count matches the replace-trick formula on adversarial inputs") {
     import org.apache.spark.sql.functions._
     import graft.rass.Analyzer
-    PhraseCount.register(spark)
+    GraftExtensions.register(spark)
     // overlapping repeats, adjacent matches, punctuation, prefix cases
     val docs = Seq(
       "a b a b", "a a a", "aa a a", "b a b a b", "diabetes mellitus type 2",
@@ -70,7 +79,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("dot_product is callable from plain SQL once registered") {
-    DotProduct.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
       .head().getDouble(0)
@@ -78,7 +87,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("term_freq counts exact and fuzzy matches like the lambda form") {
-    TermFrequency.register(spark)
+    GraftExtensions.register(spark)
     def tf(arr: String, term: String, d: Int): Long =
       spark.sql(s"SELECT term_freq($arr, '$term', $d) AS c").head().getLong(0)
     assert(tf("array('a','b','a')", "a", 0) == 2L)
@@ -89,7 +98,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("term_freq over a literal term set counts the tokens matching any term") {
-    TermFrequency.register(spark)
+    GraftExtensions.register(spark)
     def tf(arr: String, terms: String, d: Int): Long =
       spark.sql(s"SELECT term_freq($arr, $terms, $d) AS c").head().getLong(0)
     assert(tf("array('a','b','a','c')", "array('a','c')", 0) == 3L)

@@ -103,4 +103,66 @@ class IngestCommitSpec extends SparkSpec {
     assert(!fs.exists(hp(tab + "_staging")))
     statsMatchRebuild(tab)
   }
+
+  /** The parquet files directly under `dir`. */
+  private def parquetFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+
+  test("a commit writes IndexWriter's layout: user partitions, disjoint patient ranges") {
+    import org.apache.spark.sql.functions._
+    val tab = java.nio.file.Files.createTempDirectory("layout").resolve("tab").toString
+    // eight patients' copies of the fixture, so the range layout has
+    // several patients to spread over files
+    val base = parsed(bundleJson, "/f/b.json")
+    val batch = (0 until 8).map { i =>
+      base.withColumn("doc_id", concat(col("doc_id"), lit(s"-$i")))
+        .withColumn("patientId", lit(s"pat$i"))
+    }.reduce(_ unionByName _)
+    // AQE sizes range partitions by volume; shrink its floors so this
+    // small batch still spreads over several files (IngestSpec's setting)
+    val keys = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "1kb"))
+    try IngestCommit.commit(spark, tab, batch, emb)
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+
+    assert(parquetFiles(tab).isEmpty, "the table was written flat")
+    assert(new java.io.File(tab).list().filter(_.startsWith("user_id=")).toSeq == Seq("user_id=u1"))
+    val files = parquetFiles(tab + "/user_id=u1")
+    assert(files.size > 1, s"one file holds every patient: $files")
+    val ranges = files.map { f =>
+      val r = spark.read.parquet(f.getPath).agg(min("patientId"), max("patientId")).head()
+      (r.getString(0), r.getString(1))
+    }.sortBy(_._1)
+    ranges.sliding(2).foreach {
+      case Seq((_, hi), (lo2, _)) => assert(hi < lo2, s"overlapping file ranges: $ranges")
+      case _ =>
+    }
+    assert(spark.read.parquet(tab).count() == batch.count())
+    statsMatchRebuild(tab)
+  }
+
+  test("a flat table from an earlier commit is read, and rewritten partitioned, by the next") {
+    val tab = java.nio.file.Files.createTempDirectory("flat").resolve("tab").toString
+    // the earlier commit's shape: the upserted batch written flat, its
+    // stats materialized beside it
+    val first = IndexWriter.upsert(None,
+      IndexWriter.withEmbeddings(parsed(bundleJson, "/f/b.json"), emb)).persist()
+    first.write.parquet(tab)
+    val (f1, t1) = CorpusStats.build(first, DocSchema.scoredFields)
+    f1.write.parquet(IngestCommit.statsFieldsPath(tab))
+    t1.write.parquet(IngestCommit.statsTermsPath(tab))
+    val n1 = first.count()
+    first.unpersist()
+    assert(parquetFiles(tab).nonEmpty)
+
+    IngestCommit.commit(spark, tab,
+      parsed(bundleJson.replace("thirst", "hunger"), "/f/b.json"), emb)
+    assert(parquetFiles(tab).isEmpty, "the next commit left the table flat")
+    assert(parquetFiles(tab + "/user_id=u1").nonEmpty)
+    assert(spark.read.parquet(tab).count() == n1, "read, then upserted")
+    statsMatchRebuild(tab)
+  }
 }

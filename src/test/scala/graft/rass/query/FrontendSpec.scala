@@ -480,14 +480,14 @@ class EngineSpec extends SparkSpec {
   test("pathGone classifies scan-time FileNotFound but not real errors") {
     // the scan-time shape: SparkException wrapping a FileNotFoundException
     // (what a rename between exists-probe and scan actually throws) —
-    // the planning-time PATH_NOT_FOUND AnalysisException is covered by
-    // the recovery tests above
+    // the listing-time FileNotFound of a missing or truncated snapshot
+    // is covered by the recovery tests above
     val scanTime = new RuntimeException("task failed",
       new java.io.FileNotFoundException(
         "File file:/tmp/messages/part-0000.parquet does not exist"))
-    assert(ParquetChatStore.pathGone(scanTime))
-    assert(!ParquetChatStore.pathGone(new RuntimeException("parquet footer corrupt")))
-    assert(!ParquetChatStore.pathGone(null))
+    assert(graft.StagedDir.pathGone(scanTime))
+    assert(!graft.StagedDir.pathGone(new RuntimeException("parquet footer corrupt")))
+    assert(!graft.StagedDir.pathGone(null))
     // Hadoop's FileUtil.list misreports a vanished directory as NIO
     // AccessDenied (File.list() == null); gone-by-probe-time means the
     // rename race, while a still-present path is a REAL permissions
@@ -495,31 +495,31 @@ class EngineSpec extends SparkSpec {
     val vanished = new RuntimeException("task failed",
       new java.nio.file.AccessDeniedException("/tmp/definitely-gone-" +
         System.nanoTime()))
-    assert(ParquetChatStore.pathGone(vanished))
+    assert(graft.StagedDir.pathGone(vanished))
     // flip-back race: the dir is back AND listable by probe time —
     // a fresh enumeration succeeding is what distinguishes the race
     // from a real EACCES, so this classifies as gone/retryable
     val present = java.nio.file.Files.createTempDirectory("perm").toString
-    assert(ParquetChatStore.pathGone(
+    assert(graft.StagedDir.pathGone(
       new java.nio.file.AccessDeniedException(present)))
     // a genuinely unlistable-but-present path (a regular FILE gives
     // File.list() == null while existing) is a REAL error: propagate
     val presentFile = java.nio.file.Files.createTempFile("perm", ".dat").toString
-    assert(!ParquetChatStore.pathGone(
+    assert(!graft.StagedDir.pathGone(
       new java.nio.file.AccessDeniedException(presentFile)))
     // a path string the local FS can't even parse (NUL byte) is not
     // "definitely absent" — Paths.get throws InvalidPathException, and
     // the guard must classify the error as real, not the rename race
-    assert(!ParquetChatStore.pathGone(
+    assert(!graft.StagedDir.pathGone(
       new java.nio.file.AccessDeniedException("/tmp/bad\u0000path")))
     // FileUtil.list's OTHER misreport shape for File.list()==null: a
     // bare IOException naming the dir - rename race only if the dir is
     // gone by probe time; the same message over a still-present dir is
     // a real I/O fault
-    assert(ParquetChatStore.pathGone(new java.io.IOException(
+    assert(graft.StagedDir.pathGone(new java.io.IOException(
       "Invalid directory or I/O error occurred for dir: " +
         s"/tmp/definitely-gone-${System.nanoTime()}")))
-    assert(!ParquetChatStore.pathGone(new java.io.IOException(
+    assert(!graft.StagedDir.pathGone(new java.io.IOException(
       s"Invalid directory or I/O error occurred for dir: $presentFile")))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.rass.DeterministicEmbedder
+import graft.rass.ingest.IngestCommit
 
 class StreamsSpec extends SparkSpec {
 
@@ -234,7 +235,7 @@ class StreamsSpec extends SparkSpec {
     val got = spark.table("ivf_add").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // batch argmax with the identical ordering (cos desc, cid asc)
-    graft.rass.expressions.CosineSimilarity.register(spark)
+    graft.rass.expressions.GraftExtensions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"vec_id")
       .orderBy(call_function("cosine_sim", $"v", $"cv").desc, $"cid")
@@ -1065,8 +1066,8 @@ class StreamsSpec extends SparkSpec {
     def statsMatchRebuild(): Unit = {
       val docs = spark.read.parquet(table)
       val (wantF, wantT) = CorpusStats.build(docs, DocSchema.scoredFields)
-      val gotF = spark.read.parquet(AutoIngest.statsFieldsPath(table))
-      val gotT = spark.read.parquet(AutoIngest.statsTermsPath(table))
+      val gotF = spark.read.parquet(IngestCommit.statsFieldsPath(table))
+      val gotT = spark.read.parquet(IngestCommit.statsTermsPath(table))
       def fm(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => r.getAs[String]("field") ->
           ((r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl")))).toMap
