@@ -34,7 +34,7 @@ object RangedPrefix {
 
   private val cache = Memo.tagged[(SparkSession, String,
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame](
-    "rp:", Memo.unpersist)(_._2)
+    "rp:")(_._2)
 
   // working-column names no reasonable base schema carries; runningSum
   // rejects a base that does rather than silently clobbering it
@@ -63,9 +63,8 @@ object RangedPrefix {
       s"base must not carry the helper's working columns ($PidCol, $OffsetCol)")
     val parted = cache.getOrBuild(
         (spark, cacheKey, b.queryExecution.analyzed.canonicalized)) {
-      b.repartitionByRange(orderCols: _*)
-        .withColumn(PidCol, spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      _(b.repartitionByRange(orderCols: _*)
+        .withColumn(PidCol, spark_partition_id()))
     }
     val parts = parted.groupBy(col(PidCol))
       .agg(coalesce(sum(value), lit(0L)).cast("long").as("t"))

@@ -51,15 +51,14 @@ object Dedup {
     * ingest, not re-derived from raw text per query.
     */
   private def shingleRows(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrBuild((spark, dir)) {
+    shingleCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
-      Tables.documents(spark, dir)
+      pins(Tables.documents(spark, dir)
         .select($"doc_id", toks($"text").as("t"))
         .filter(size($"t") >= 3)
         .select($"doc_id", explode(array_distinct(
           transform(sequence(lit(1), size($"t") - 2),
-            i => array_join(slice($"t", i, lit(3)), " ")))).as("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            i => array_join(slice($"t", i, lit(3)), " ")))).as("shingle")))
     }
 
   private val shingleCache = Memo.frames("d.shingles")
@@ -124,14 +123,13 @@ object Dedup {
     * b-side, and the per-doc sizes).
     */
   private def cappedShingles(spark: SparkSession, dir: String): DataFrame =
-    cappedShingleCache.getOrBuild((spark, dir)) {
+    cappedShingleCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
       val sh = shingleRows(spark, dir)
       val keep = sh.groupBy($"shingle").agg(count(lit(1)).as("df_"))
         .filter($"df_" <= ShingleDfCap).select($"shingle")
-      sh.join(keep, Seq("shingle"), "left_semi")
-        .select($"doc_id", $"shingle")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins(sh.join(keep, Seq("shingle"), "left_semi")
+        .select($"doc_id", $"shingle"))
     }
 
   private val cappedShingleCache = Memo.frames("d.cappedShingles")
@@ -206,13 +204,12 @@ object Dedup {
     * fires — verified in the physical plan).
     */
   private def minhashSig(spark: SparkSession, dir: String): DataFrame =
-    sigCache.getOrBuild((spark, dir)) {
+    sigCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
       val sh = shingleRows(spark, dir)
       val minCols = (0 until NumHashes).map(i =>
         min(md5(concat(lit(s"$i|"), $"shingle"))).as(s"h$i"))
-      sh.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins(sh.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*))
     }
 
   private val sigCache = Memo.frames("d.minhashSig")
@@ -228,11 +225,10 @@ object Dedup {
     * persisted table emulates.
     */
   private def shingleSizes(spark: SparkSession, dir: String): DataFrame =
-    sizesCache.getOrBuild((spark, dir)) {
+    sizesCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
-      shingleRows(spark, dir).groupBy($"doc_id")
-        .agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins(shingleRows(spark, dir).groupBy($"doc_id")
+        .agg(count(lit(1)).as("n")))
     }
 
   private val sizesCache = Memo.frames("d.sizes")
@@ -428,11 +424,10 @@ object Dedup {
     */
   private[graft] val corpusBandArtifact = new DurableArtifact(
     "d.corpusBands", "d08_corpus_bands",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$CorpusBandsVersion|minhash=${NumHashes}x$Bands|" +
-        s"delta=$DeltaMod/$DeltaRem|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
-    (spark, dir) => bandRows(spark, dir).filter(!isBatchDoc)
+    (_, _) => s"v$CorpusBandsVersion|minhash=${NumHashes}x$Bands|" +
+      s"delta=$DeltaMod/$DeltaRem",
+    Seq("documents.parquet"),
+    (spark, dir, _) => bandRows(spark, dir).filter(!isBatchDoc)
       .select(col("doc_id").as("c_id"), col("band"), col("bucket")))
 
   private[graft] def corpusBandTable(spark: SparkSession,
@@ -593,10 +588,7 @@ object Dedup {
     * per side.
     */
   private def simhashDf(spark: SparkSession, dir: String): DataFrame =
-    simhashCache.getOrBuild((spark, dir)) {
-      buildSimhash(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    simhashCache.getOrBuild((spark, dir))(_(buildSimhash(spark, dir)))
 
   private val simhashCache = Memo.frames("d.simhashSig")
 
@@ -728,7 +720,7 @@ object Dedup {
     * [[minhashSig]] (the band self-join reads it twice).
     */
   private def signSig(spark: SparkSession, dir: String): DataFrame =
-    signSigCache.getOrBuild((spark, dir)) {
+    signSigCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
       graft.rass.expressions.GraftExtensions.register(spark)
       val e = Tables.embeddings(spark, dir)
@@ -737,8 +729,7 @@ object Dedup {
         when(call_function("dot_product", $"v", typedLit(planeSigns(h))) >= 0,
           lit(1L << h)).otherwise(lit(0L))
       }.reduce(_ + _)
-      e.select($"vec_id", sigCol.as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins(e.select($"vec_id", sigCol.as("sig")))
     }
 
   private val signSigCache = Memo.frames("d.signSig")
@@ -862,10 +853,9 @@ object Dedup {
     * consumes the STORED pairs, it doesn't re-derive them from text.
     */
   private def dupPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrBuild((spark, dir)) {
+    pairsCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
-      d03MinhashLshPairs(spark, dir).select($"a_id", $"b_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins(d03MinhashLshPairs(spark, dir).select($"a_id", $"b_id"))
     }
 
   private val pairsCache = Memo.frames("d.pairs")
@@ -900,10 +890,8 @@ object Dedup {
     */
   private[pipeline] val clusterArtifact = new DurableArtifact(
     "d.clusters", "d06_clusters",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$ClusterArtifactVersion|minhash=${NumHashes}x$Bands|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
-    buildClusterLabels)
+    (_, _) => s"v$ClusterArtifactVersion|minhash=${NumHashes}x$Bands",
+    Seq("documents.parquet"), buildClusterLabels)
 
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     clusterArtifact.read(spark, dir)
@@ -1167,24 +1155,23 @@ object Dedup {
     */
   private[pipeline] val detectorPairsArtifact = new DurableArtifact(
     "d.detectorPairs", "d11_pairs",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$D11ArtifactVersion|cap=$ShingleDfCap|" +
-        s"j>=$JaccardCutNum/$JaccardCutDen|" +
-        s"mh=$NumHashes/$Bands|sim=$SimBits/$SimBands/ham<=$HammingCap|" +
-        s"slsh=$NumPlanes/$SignBands/tau=$SignLshTau|" +
-        s"${Similarity.s07FingerprintParams}|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet") + "|" +
-        ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet")),
-    buildDetectorPairs)
+    (_, _) => s"v$D11ArtifactVersion|cap=$ShingleDfCap|" +
+      s"j>=$JaccardCutNum/$JaccardCutDen|" +
+      s"mh=$NumHashes/$Bands|sim=$SimBits/$SimBands/ham<=$HammingCap|" +
+      s"slsh=$NumPlanes/$SignBands/tau=$SignLshTau|" +
+      Similarity.s07FingerprintParams,
+    Seq("documents.parquet", "embeddings.parquet"),
+    (spark, dir, _) => buildDetectorPairs(spark, dir))
 
   /** Distributed connected components over the stored d03 pairs;
-    * returns the converged, persisted (id, label) table.
+    * returns the converged, pinned (id, label) table.
     *
     * Each round's edge table is pinned behind a [[LogicalRDD]] leaf
-    * ([[pin]]) before the previous round is released. Without the
-    * lineage break, round i+1's plan DEPENDS on round i's cached plan,
-    * and Spark's non-cascading `unpersist` (SPARK-24596) responds by
-    * clearing and lazily re-registering every dependent cache entry —
+    * (`pin` in [[propagateLabels]]) before the previous round is
+    * released. Without the lineage break, round i+1's plan DEPENDS on
+    * round i's cached plan, and Spark's non-cascading `unpersist`
+    * (SPARK-24596) responds by clearing and lazily re-registering every
+    * dependent cache entry —
     * so releasing round i silently dropped round i+1's just-built
     * blocks and every subsequent action recomputed the ENTIRE
     * contraction chain from the pair table (quadratic total work, and
@@ -1204,8 +1191,9 @@ object Dedup {
     */
   private val LoopRowsPerPartition = 1000000L
 
-  private def buildClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    propagateLabels(spark, dupPairs(spark, dir), "d06")
+  private def buildClusterLabels(spark: SparkSession, dir: String,
+      pins: Memo.Pins): DataFrame =
+    propagateLabels(spark, dupPairs(spark, dir), "d06", pins)
 
   /** Distributed connected components over ANY (a_id, b_id) pair
     * frame — the engine behind d06, factored so the other dup families
@@ -1241,24 +1229,29 @@ object Dedup {
     * different roots satisfies the first clause alone while splitting
     * a component (the round-16 soundness fix). The final (id, label)
     * table is exactly min-label propagation's.
+    *
+    * Every table the loop caches is pinned through `pins`, so the
+    * caller's memo build releases the rounds (and the returned table,
+    * once it has published a copy) on return or on a throw.
     */
   private[graft] def propagateLabels(spark: SparkSession, pairsIn: DataFrame,
-      tag: String): DataFrame = {
+      tag: String, pins: Memo.Pins): DataFrame = {
     import spark.implicits._
-    // persist BEFORE the sizing count(): the caller's pair-finding plan
+    // A small iteration table behind a lineage-breaking LogicalRDD
+    // leaf: its plan references no upstream cache entry, so releasing
+    // an earlier round can never clear it (see [[buildClusterLabels]]),
+    // and it IS the cached plan, so its release frees its actual
+    // blocks. The Row round-trip costs one deserialization pass over a
+    // dup-volume-sized table.
+    def pin(df: DataFrame): DataFrame =
+      pins(spark.createDataFrame(df.rdd, df.schema))
+    // pin BEFORE the sizing count(): the caller's pair-finding plan
     // (s07's cell self-join + cosine, m05's frame self-join) is the
     // expensive stage, and without this it runs twice — once for the
-    // count, again when round 1 materializes `edges`. Skipped when the
-    // caller already hands in a persisted memo (d06's dupPairs) — a
-    // second cache layer over it would only re-serialize the pair list.
-    val ownCache = pairsIn.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
-    val pairs = {
-      val p = pairsIn.toDF("a_id", "b_id")
-      if (ownCache)
-        p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else p
-    }
+    // count, again when round 1 materializes `edges`. A caller's memo
+    // (d06's dupPairs) is already cached, so the pin takes no ownership
+    // and adds no second cache layer.
+    val pairs = pins(pairsIn).toDF("a_id", "b_id")
     val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.max(2, math.min(maxParts,
       (2 * pairs.count() / LoopRowsPerPartition + 1).toInt))
@@ -1355,7 +1348,7 @@ object Dedup {
         .head()
       lastEdges = probe.getLong(0)
       converged = probe.getLong(1) == 0L
-      cur.unpersist()
+      pins.release(cur)
       cur = e2
       iter += 1
     }
@@ -1364,13 +1357,10 @@ object Dedup {
     // diverge from the oracle's transitive closure) — fail loudly;
     // log²-convergence puts any real input orders of magnitude under
     // the cap, so hitting it means a bug, not a big graph
-    if (!converged) {
-      if (ownCache) pairs.unpersist()
-      cur.unpersist()
+    if (!converged)
       throw new IllegalStateException(
         s"$tag star contraction did not converge in $MaxCcIterations " +
           s"alternations ($lastEdges edges in flight)")
-    }
     // stars → labels: children labelled by their root, roots by
     // themselves — the same (id, label) table min-label propagation
     // produced, covering every node of the input pair list
@@ -1378,10 +1368,16 @@ object Dedup {
       .unionAll(cur.select($"p".as("id"), $"p".as("label")))
       .distinct())
     labels.count()
-    cur.unpersist()
-    if (ownCache) pairs.unpersist()
     labels
   }
+
+  /** [[propagateLabels]] in a scope of its own, for a caller outside a
+    * memo build: the tables it pinned are released on return, so the
+    * returned table reads through its lineage.
+    */
+  private[graft] def propagateLabels(spark: SparkSession, pairsIn: DataFrame,
+      tag: String): DataFrame =
+    Memo.scoped(propagateLabels(spark, pairsIn, tag, _))
 
   /** Rounds (alternations) the most recent [[propagateLabels]] run
     * took, per tag — the observability behind the round-15 engine
@@ -1394,27 +1390,12 @@ object Dedup {
   private[graft] val lastPropagationRounds =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  /** Persist a small iteration table behind a lineage-breaking
-    * [[org.apache.spark.sql.execution.LogicalRDD]] leaf: the returned
-    * frame's logical plan references no upstream cache entry, so
-    * releasing earlier iterations can never clear it (see
-    * [[buildClusterLabels]]), and it IS the persisted plan, so
-    * `unpersist()` frees its actual blocks. The Row round-trip costs
-    * one deserialization pass over a dup-volume-sized table.
-    */
-  private def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.createDataFrame(df.rdd, df.schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
   /** d06-the-query REBUILDS the artifact: the propagation loop is what
     * the query benchmarks (a cache read would measure nothing), and the
     * fresh table atomically replaces the stored one — on DISK (the
     * parquet publish consumers in any later session read) and in the
-    * session memo (the hot handle). The retired in-memory table is
-    * unpersisted after the swap so the cache never holds a dropped
-    * copy.
+    * session memo (the hot handle), whose rebuild releases the
+    * retired in-memory table so the cache never holds a dropped copy.
     */
   def d06NeardupClusters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1521,9 +1502,8 @@ object Dedup {
     */
   private[graft] def corpusLineHashes(spark: SparkSession,
       dir: String): DataFrame =
-    lineSegCache.getOrBuild((spark, dir)) {
-      val df = lineHashes(Tables.documents(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lineSegCache.getOrBuild((spark, dir)) { pins =>
+      val df = pins(lineHashes(Tables.documents(spark, dir)))
       df.count() // materialize: consumers read the rows, not the scan
       df
     }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.StagedDir
+import graft.{Memo, StagedDir}
 
 /** Shared plumbing for every durable fingerprint-guarded artifact —
   * the ONE implementation of the read-through-memo / staged-publish /
@@ -26,33 +26,38 @@ import graft.StagedDir
   *   - [[rebuildAndPublish]] is the OWNING QUERY's path: the
   *     propagation loop is what that query benchmarks, so it always
   *     rebuilds, atomically republishes (ArtifactStore's staged swap
-  *     under the per-path monitor), and swaps the session memo,
-  *     unpersisting the retired table.
+  *     under the per-path monitor), and rebuilds the session memo
+  *     entry ([[graft.Memo.Cache.rebuild]] releases the retired table
+  *     before the new one is pinned).
   *   - The fingerprint is captured BEFORE the build reads any source
-  *     data (the ArtifactStore write-side TOCTOU rule), and must hash
-  *     every parameter the clustering semantics depend on plus the
-  *     source listing(s).
+  *     data (the ArtifactStore write-side TOCTOU rule). `params` must
+  *     name every parameter the artifact's semantics depend on;
+  *     `sources` are the tables under the corpus dir whose listings it
+  *     also hashes.
   */
 private[graft] final class DurableArtifact(
     name: String,
     val suffix: String,
-    fingerprint: (SparkSession, String) => String,
-    build: (SparkSession, String) => DataFrame) {
+    params: (SparkSession, String) => String,
+    sources: Seq[String],
+    build: (SparkSession, String, Memo.Pins) => DataFrame) {
 
-  private val memo = graft.Memo.frames(name)
+  private val memo = Memo.frames(name)
 
   def path(dir: String): String =
     s"${ArtifactStore.artifactRoot}/${ArtifactStore.md5Hex(dir)}_$suffix"
 
-  /** The artifact's CURRENT expected fingerprint: the declared function
-    * plus any test salt ([[DurableArtifact.salts]]). Exposed so a
+  /** The artifact's CURRENT expected fingerprint: the md5 of `params`
+    * joined by `|` with the file listing of each source table under
+    * `dir`, plus any test salt ([[DurableArtifact.salts]]). Exposed so a
     * DOWNSTREAM artifact whose content derives from this one can CHAIN
-    * it into its own fingerprint (the m10-chains-d11 staleness rule —
-    * a version/threshold bump upstream must invalidate the whole
-    * derived cone, not just the artifact whose constant moved).
+    * it into its own params (the m10-chains-d11 staleness rule — a
+    * version/threshold bump upstream must invalidate the whole derived
+    * cone, not just the artifact whose constant moved).
     */
   def currentFingerprint(spark: SparkSession, dir: String): String = {
-    val base = fingerprint(spark, dir)
+    val base = ArtifactStore.md5Hex((params(spark, dir) +:
+      sources.map(t => ArtifactStore.sourceListing(spark, s"$dir/$t"))).mkString("|"))
     DurableArtifact.salts.get(suffix)
       .map(s => ArtifactStore.md5Hex(s"$base|salt=$s"))
       .getOrElse(base)
@@ -66,53 +71,37 @@ private[graft] final class DurableArtifact(
       currentFingerprint(spark, dir)).isDefined
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrBuild((spark, dir)) {
+    memo.getOrBuild((spark, dir)) { pins =>
       val fp = currentFingerprint(spark, dir)
       ArtifactStore.findValid(spark, path(dir), fp)
         .flatMap(p => StagedDir.snapshot(spark, p))
-        .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        .getOrElse {
-          val fresh = build(spark, dir)
-          write(spark, dir, fp, fresh)
-          // serve the JUST-PUBLISHED store, not the raw build plan: a
-          // build that does not persist its result would otherwise
-          // re-execute the whole DAG on every consumer action AND
-          // re-read sources that may no longer match the stamped
-          // pre-build fingerprint (the TOCTOU window the pre-build
-          // capture exists to close). The publish above already paid
-          // the materialization; the parquet is the truth. Fallback to
-          // the fresh frame only if a concurrent republish races the
-          // re-read (then its own memo swap supersedes this handle).
-          StagedDir.snapshot(spark, path(dir))
-            .map(_.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            .getOrElse(fresh)
-        }
+        .map(pins(_))
+        .getOrElse(publish(spark, dir, fp, pins))
     }
 
-  def rebuildAndPublish(spark: SparkSession, dir: String): DataFrame = {
-    val fp = currentFingerprint(spark, dir) // pre-build capture (TOCTOU rule)
-    val fresh = build(spark, dir)
-    write(spark, dir, fp, fresh)
-    // memoize the JUST-PUBLISHED parquet handle, not the raw build
-    // plan — the same rule read()'s cold path applies: an unpersisted
-    // build plan re-executes the whole DAG on every later consumer
-    // action AND re-reads sources that may no longer match the stamped
-    // pre-build fingerprint (the TOCTOU window). Fallback to the fresh
-    // frame only if a concurrent republish races the re-read (its own
-    // memo swap then supersedes this handle).
-    val served = StagedDir.snapshot(spark, path(dir))
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      .getOrElse(fresh)
-    memo.replace((spark, dir), served)
-    served
-  }
+  def rebuildAndPublish(spark: SparkSession, dir: String): DataFrame =
+    memo.rebuild((spark, dir)) { pins =>
+      publish(spark, dir, currentFingerprint(spark, dir), pins) // pre-build capture (TOCTOU rule)
+    }
 
-  private def write(spark: SparkSession, dir: String, fp: String,
-      labels: DataFrame): Unit =
+  /** Build, publish under `fp`, and serve the JUST-PUBLISHED store, not
+    * the raw build plan: a build plan would re-execute the whole DAG on
+    * every consumer action AND re-read sources that may no longer match
+    * the stamped pre-build fingerprint (the TOCTOU window the pre-build
+    * capture exists to close). The publish already paid the
+    * materialization; the parquet is the truth, and the build's own
+    * pinned tables are released when the memo build returns. Falls back
+    * to the fresh frame only if a concurrent republish races the re-read
+    * (then its own memo swap supersedes this handle).
+    */
+  private def publish(spark: SparkSession, dir: String, fp: String,
+      pins: Memo.Pins): DataFrame = {
+    val fresh = build(spark, dir, pins)
     ArtifactStore.publish(spark, path(dir), fp) { staging =>
-      labels.write.mode("overwrite").parquet(staging)
+      fresh.write.mode("overwrite").parquet(staging)
     }
+    StagedDir.snapshot(spark, path(dir)).map(pins(_)).getOrElse(fresh)
+  }
 }
 
 private[pipeline] object DurableArtifact {

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Embedding-quality profiling for vector pipelines: norm distribution
   * and degenerate-vector detection per label partition.
@@ -206,74 +206,71 @@ object EmbeddingStats {
     * n_vectors = max per-dim count, n²·10¹²·trace as exact BigInt).
     */
   private def pc1Core(spark: SparkSession, dir: String)
-      : (Long, Int, Array[Double], Long, Long, BigInt) = {
+      : (Long, Int, Array[Double], Long, Long, BigInt) = Memo.scoped { pins =>
     import spark.implicits._
-    // persisted for the FOUR passes (moments + 3 iterations), released
-    // before returning: every result is driver state with no lineage
-    // into `e`, so the unpersist cannot force a recompute later
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // exact per-dim micro moments in ONE pass — count, Σxm, Σxm²
-      // per dimension; d = number of dim groups, n = any dim's count
-      // (the corpus is fixed-width; the oracle's unnest sees the same)
-      val moments = e.select(posexplode($"v").as(Seq("dim", "x")))
-        .select($"dim", floor($"x" * 1000000L).cast("long").as("xm"))
-        .groupBy($"dim")
-        .agg(count(lit(1)).as("c"), sum($"xm").as("s"),
-          sum($"xm" * $"xm").as("ss"))
-        .collect().map(r => r.getAs[Int]("dim") ->
-          (r.getAs[Long]("c"), r.getAs[Long]("s"), r.getAs[Long]("ss")))
-        .toMap
-      val d = moments.size
-      val n = moments(0)._1
-      // v07's exact trace identity, per dim over the SAME micro grid:
-      // n_j·Σxm² − (Σxm)² accumulated as BigInt (the oracle's
-      // DECIMAL(38,0) twin)
-      val trace = (0 until d).map { j =>
-        val (c, s, ss) = moments(j)
-        BigInt(c) * BigInt(ss) - BigInt(s) * BigInt(s)
-      }.sum
-      val nVectors = (0 until d).map(moments(_)._1).max
-      val mu = (0 until d).map(j => moments(j)._2.toDouble / 1000000.0 / n.toDouble)
-      var vv = Array.fill(d)(1.0)
-      var lambdaMicro = 0L
-      for (_ <- 1 to PowerIters) {
-        // mu and the current v ride in as ONE broadcast row of arrays
-        // rather than inlined literals — the iteration state is data,
-        // not plan text (the centroidsAsRow idiom), so the plan is
-        // byte-identical across iterations and a long-running deployment
-        // (many more iterations, cached plans) never re-analyzes or
-        // re-compiles it. At this corpus size the per-call cost is
-        // driver-side job overhead either way (~0.5 s/pass; measured
-        // equal to the inlined-literal form). Unrolled element_at keeps
-        // the arithmetic inside WholeStageCodegen.
-        val muv = spark.createDataFrame(Seq((mu.toSeq, vv.toSeq)))
-          .toDF("mu", "pv")
-        def cen(j: Int) = element_at($"v", j + 1) - element_at($"mu", j + 1)
-        val sCol = (0 until d).map(j =>
-          cen(j) * element_at($"pv", j + 1)).reduce(_ + _)
-        val terms = array((0 until d).map(j =>
-          round(($"s" * cen(j)) * PowerQuant).cast("long")): _*)
-        val w = e.crossJoin(broadcast(muv))
-          .select($"v", $"mu", sCol.as("s"))
-          .select(posexplode(terms).as(Seq("dim", "t")))
-          .groupBy($"dim").agg(sum($"t").as("w"))
-          .collect().map(r => r.getAs[Int]("dim") -> r.getAs[Long]("w")).toMap
-        val warr = (0 until d).map(w(_)).toArray
-        // exact integer norm^2 (BigInt: w ~ n*Q overflows Long when
-        // squared), ONE double conversion — same value as the oracle's
-        // SUM(w::HUGEINT * w): the promotion must happen BEFORE the
-        // multiply, or DuckDB's checked int64 product overflows once
-        // |w| exceeds ~3.04e9
-        val norm = math.sqrt(warr.map(x => BigInt(x) * BigInt(x)).sum.toDouble)
-        vv = warr.map(_.toDouble / norm)
-        lambdaMicro =
-          math.floor(norm / PowerQuant.toDouble / n.toDouble * 1000000.0).toLong
-      }
-      (n, d, vv, lambdaMicro, nVectors, trace)
-    } finally e.unpersist()
+    // pinned for the FOUR passes (moments + 3 iterations), released
+    // when the scope ends: every result is driver state with no lineage
+    // into `e`, so the release cannot force a recompute later
+    val e = pins(Tables.embeddings(spark, dir)
+      .select($"vec_id", $"embedding".cast("array<double>").as("v")))
+    // exact per-dim micro moments in ONE pass — count, Σxm, Σxm²
+    // per dimension; d = number of dim groups, n = any dim's count
+    // (the corpus is fixed-width; the oracle's unnest sees the same)
+    val moments = e.select(posexplode($"v").as(Seq("dim", "x")))
+      .select($"dim", floor($"x" * 1000000L).cast("long").as("xm"))
+      .groupBy($"dim")
+      .agg(count(lit(1)).as("c"), sum($"xm").as("s"),
+        sum($"xm" * $"xm").as("ss"))
+      .collect().map(r => r.getAs[Int]("dim") ->
+        (r.getAs[Long]("c"), r.getAs[Long]("s"), r.getAs[Long]("ss")))
+      .toMap
+    val d = moments.size
+    val n = moments(0)._1
+    // v07's exact trace identity, per dim over the SAME micro grid:
+    // n_j·Σxm² − (Σxm)² accumulated as BigInt (the oracle's
+    // DECIMAL(38,0) twin)
+    val trace = (0 until d).map { j =>
+      val (c, s, ss) = moments(j)
+      BigInt(c) * BigInt(ss) - BigInt(s) * BigInt(s)
+    }.sum
+    val nVectors = (0 until d).map(moments(_)._1).max
+    val mu = (0 until d).map(j => moments(j)._2.toDouble / 1000000.0 / n.toDouble)
+    var vv = Array.fill(d)(1.0)
+    var lambdaMicro = 0L
+    for (_ <- 1 to PowerIters) {
+      // mu and the current v ride in as ONE broadcast row of arrays
+      // rather than inlined literals — the iteration state is data,
+      // not plan text (the centroidsAsRow idiom), so the plan is
+      // byte-identical across iterations and a long-running deployment
+      // (many more iterations, cached plans) never re-analyzes or
+      // re-compiles it. At this corpus size the per-call cost is
+      // driver-side job overhead either way (~0.5 s/pass; measured
+      // equal to the inlined-literal form). Unrolled element_at keeps
+      // the arithmetic inside WholeStageCodegen.
+      val muv = spark.createDataFrame(Seq((mu.toSeq, vv.toSeq)))
+        .toDF("mu", "pv")
+      def cen(j: Int) = element_at($"v", j + 1) - element_at($"mu", j + 1)
+      val sCol = (0 until d).map(j =>
+        cen(j) * element_at($"pv", j + 1)).reduce(_ + _)
+      val terms = array((0 until d).map(j =>
+        round(($"s" * cen(j)) * PowerQuant).cast("long")): _*)
+      val w = e.crossJoin(broadcast(muv))
+        .select($"v", $"mu", sCol.as("s"))
+        .select(posexplode(terms).as(Seq("dim", "t")))
+        .groupBy($"dim").agg(sum($"t").as("w"))
+        .collect().map(r => r.getAs[Int]("dim") -> r.getAs[Long]("w")).toMap
+      val warr = (0 until d).map(w(_)).toArray
+      // exact integer norm^2 (BigInt: w ~ n*Q overflows Long when
+      // squared), ONE double conversion — same value as the oracle's
+      // SUM(w::HUGEINT * w): the promotion must happen BEFORE the
+      // multiply, or DuckDB's checked int64 product overflows once
+      // |w| exceeds ~3.04e9
+      val norm = math.sqrt(warr.map(x => BigInt(x) * BigInt(x)).sum.toDouble)
+      vv = warr.map(_.toDouble / norm)
+      lambdaMicro =
+        math.floor(norm / PowerQuant.toDouble / n.toDouble * 1000000.0).toLong
+    }
+    (n, d, vv, lambdaMicro, nVectors, trace)
   }
 
   def v05Pc1Profile(spark: SparkSession, dir: String): DataFrame = {

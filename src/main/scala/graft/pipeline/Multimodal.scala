@@ -268,12 +268,12 @@ object Multimodal {
   }
 
   private def buildMediaClusterLabels(spark: SparkSession,
-      dir: String): DataFrame = {
+      dir: String, pins: Memo.Pins): DataFrame = {
     import spark.implicits._
     val dup = m05Pairs(spark, dir)
       .filter(mediaDup($"n_shared_frames", $"n_frames_a", $"n_frames_b"))
       .select($"doc_a", $"doc_b")
-    graft.pipeline.Dedup.propagateLabels(spark, dup, "m06")
+    graft.pipeline.Dedup.propagateLabels(spark, dup, "m06", pins)
   }
 
   /** Bump when the clustering semantics OR the stored schema change.
@@ -291,12 +291,10 @@ object Multimodal {
     */
   private[pipeline] val mediaClusterArtifact = new DurableArtifact(
     "m.clusters", "m06_clusters",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$MediaClusterArtifactVersion|frames=${FrameLen}x$FrameStep|" +
-        s"contain=$ContainNum/$ContainDen|" +
-        s"mod=$MediaModalities:$ImageMod/$AudioMod/$VideoMod|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
-    buildMediaClusterLabels)
+    (_, _) => s"v$MediaClusterArtifactVersion|frames=${FrameLen}x$FrameStep|" +
+      s"contain=$ContainNum/$ContainDen|" +
+      s"mod=$MediaModalities:$ImageMod/$AudioMod/$VideoMod",
+    Seq("documents.parquet"), buildMediaClusterLabels)
 
   private[graft] def mediaClusterLabels(spark: SparkSession,
       dir: String): DataFrame = mediaClusterArtifact.read(spark, dir)
@@ -493,9 +491,8 @@ object Multimodal {
     * videoFrames' empty-payload exclusion).
     */
   private def imagePhash(spark: SparkSession, dir: String): DataFrame =
-    phashCache.getOrBuild((spark, dir)) {
-      val df = imagePhashPlan(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    phashCache.getOrBuild((spark, dir)) { pins =>
+      val df = pins(imagePhashPlan(spark, dir))
       df.count() // materialize: consumers read the table, not the scan
       df
     }
@@ -682,10 +679,7 @@ object Multimodal {
     * cappedShingles policy, same reason).
     */
   private def audioLandmarks(spark: SparkSession, dir: String): DataFrame =
-    landmarkCache.getOrBuild((spark, dir)) {
-      audioWindows(mediaTable(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    landmarkCache.getOrBuild((spark, dir))(_(audioWindows(mediaTable(spark, dir))))
 
   private val landmarkCache = Memo.frames("m.landmarks")
 
@@ -833,15 +827,14 @@ object Multimodal {
     */
   private[pipeline] val mediaDetectorPairsArtifact = new DurableArtifact(
     "m.detectorPairs", "m10_pairs",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$M10ArtifactVersion|cont=$ContainNum/$ContainDen|" +
-        s"mod=$MediaModalities:$ImageMod/$AudioMod/$VideoMod|" +
-        s"frame=$FrameLen/$FrameStep|" +
-        s"ph=$PhBits/$PhBands/$PhBandBits/ham<=$PhHammingCap|" +
-        s"au=$AuWinLen/$AuAnchor/$AuDfCap/$AuMinVotes/" +
-        s"$AuHashBase/$AuHashMod|" +
-        Dedup.detectorPairsArtifact.currentFingerprint(spark, dir)),
-    buildMediaDetectorPairs)
+    (spark, dir) => s"v$M10ArtifactVersion|cont=$ContainNum/$ContainDen|" +
+      s"mod=$MediaModalities:$ImageMod/$AudioMod/$VideoMod|" +
+      s"frame=$FrameLen/$FrameStep|" +
+      s"ph=$PhBits/$PhBands/$PhBandBits/ham<=$PhHammingCap|" +
+      s"au=$AuWinLen/$AuAnchor/$AuDfCap/$AuMinVotes/" +
+      s"$AuHashBase/$AuHashMod|" +
+      Dedup.detectorPairsArtifact.currentFingerprint(spark, dir),
+    Nil, (spark, dir, _) => buildMediaDetectorPairs(spark, dir))
 
   // ---------------------------------------------------------------- registry
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one-command release orchestrator: walks the release's artifact
   * DAG in dependency order, rebuilding ONLY stale fingerprints (every
   * step is the existing `findValid`-or-rebuild read path — a valid
-  * stored artifact costs one fingerprint compare and zero jobs), then
-  * returns the three tables a release ships:
+  * stored artifact is read, not rebuilt: ReleaseSpec sees no publish
+  * event for it), then returns the three tables a release ships:
   *
   *   corpus listings               (inputs — fingerprint material only)
   *     ├── d06 cluster drop list   (lexical dedup)
@@ -30,7 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[ArtifactStore.publishEvents]].
   *
   * Scale shape: inherited entirely from the artifacts and manifests it
-  * composes — the walk itself is driver-side fingerprint compares.
+  * composes. A disk-warm walk rebuilds nothing, but reading the stored
+  * tables and materializing the manifests still runs jobs (dozens per
+  * warm release, e2ebench's `release.warm_jobs`).
   */
 object Release {
 

@@ -147,7 +147,7 @@ object Similarity {
   private[pipeline] val TrainedVariant = "kmeans"
 
   private val indexCache = Memo.cache[(SparkSession, String, String, Int),
-    (DataFrame, DataFrame)]("s.ivf", Memo.unpersist)
+    (DataFrame, DataFrame)]("s.ivf")
 
   /** k ~ sqrt(n): the retrain lever [[s06CellProfile]]'s doc prescribes
     * when the max cell share drifts. C(occ,2) candidate work per cell
@@ -170,26 +170,23 @@ object Similarity {
   private val countCache = Memo.cache[(SparkSession, String), Long]("s.counts")
 
   private[pipeline] def corpusCount(spark: SparkSession, dir: String): Long =
-    countCache.getOrBuild((spark, dir)) {
-      vectors(spark, dir).count()
-    }
+    countCache.getOrBuild((spark, dir))(_ => vectors(spark, dir).count())
 
   private[pipeline] def corpusCells(spark: SparkSession, dir: String): Int =
     recommendedCells(corpusCount(spark, dir))
 
   private[pipeline] def ivfIndex(spark: SparkSession, dir: String,
       variant: String, cells: Int = NumCentroids): (DataFrame, DataFrame) =
-    indexCache.getOrBuild((spark, dir, variant, cells)) {
+    indexCache.getOrBuild((spark, dir, variant, cells)) { pins =>
       import spark.implicits._
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val e = vectors(spark, dir)
-      val cents = (variant match {
+      val cents = pins(variant match {
         case TrainedVariant => kmeansCentroids(spark, e, cells, KmeansIters)
         case _ => e.filter($"vec_id" < cells)
           .select($"vec_id".as("cid"), $"v".as("cv"))
-      }).persist(lvl)
+      })
       cents.count() // materialize: consumers read the artifact, not the Lloyd lineage
-      (cents, cellAssign(spark, e, cents).persist(lvl))
+      (cents, pins(cellAssign(spark, e, cents)))
     }
 
   /** The exact brute-force top-k table, memoized per (session, dir):
@@ -202,9 +199,8 @@ object Similarity {
   private val exactCache = Memo.frames("s.topk")
 
   private def exactTopK(spark: SparkSession, dir: String): DataFrame =
-    exactCache.getOrBuild((spark, dir)) {
-      val df = s01KnnBruteForce(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    exactCache.getOrBuild((spark, dir)) { pins =>
+      val df = pins(s01KnnBruteForce(spark, dir))
       df.count() // materialize: consumers read the artifact, not the scan
       df
     }
@@ -460,10 +456,10 @@ object Similarity {
   }
 
   private def buildSemClusterLabels(spark: SparkSession,
-      dir: String): DataFrame = {
+      dir: String, pins: Memo.Pins): DataFrame = {
     import spark.implicits._
     graft.pipeline.Dedup.propagateLabels(spark,
-      s07Pairs(spark, dir).select($"a_id", $"b_id"), "s14")
+      s07Pairs(spark, dir).select($"a_id", $"b_id"), "s14", pins)
   }
 
   /** Bump when the clustering semantics OR the stored schema change. */
@@ -475,10 +471,8 @@ object Similarity {
     */
   private[pipeline] val semClusterArtifact = new DurableArtifact(
     "s.semClusters", "s14_clusters",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$SemClusterArtifactVersion|$s07FingerprintParams|" +
-        ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet")),
-    buildSemClusterLabels)
+    (_, _) => s"v$SemClusterArtifactVersion|$s07FingerprintParams",
+    Seq("embeddings.parquet"), buildSemClusterLabels)
 
   private[pipeline] def semClusterLabels(spark: SparkSession,
       dir: String): DataFrame = semClusterArtifact.read(spark, dir)
@@ -561,12 +555,10 @@ object Similarity {
   // staleness class chaining exists to eliminate).
   private[pipeline] val semDropArtifact = new DurableArtifact(
     "s.semDrops", "s21_drops",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$SemDropArtifactVersion|" +
-        s"s14=${semClusterArtifact.currentFingerprint(spark, dir)}|" +
-        s"keep=max-mean-qll|${TextAnalysis.pplFingerprintParams}|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
-    buildSemDropList)
+    (spark, dir) => s"v$SemDropArtifactVersion|" +
+      s"s14=${semClusterArtifact.currentFingerprint(spark, dir)}|" +
+      s"keep=max-mean-qll|${TextAnalysis.pplFingerprintParams}",
+    Seq("documents.parquet"), (spark, dir, _) => buildSemDropList(spark, dir))
 
   private def buildSemDropList(spark: SparkSession,
       dir: String): DataFrame = {
@@ -599,12 +591,11 @@ object Similarity {
     */
   private[pipeline] val semContamArtifact = new DurableArtifact(
     "s.semContam", "s15_contam",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$SemContamArtifactVersion|$s07FingerprintParams|" +
-        s"probe=$NProbe|train=${graft.pipeline.TextAnalysis.TrainMax}|" +
-        s"val=${graft.pipeline.TextAnalysis.ValMax}|" +
-        ArtifactStore.sourceListing(spark, dir + "/embeddings.parquet")),
-    (spark, dir) => {
+    (_, _) => s"v$SemContamArtifactVersion|$s07FingerprintParams|" +
+      s"probe=$NProbe|train=${graft.pipeline.TextAnalysis.TrainMax}|" +
+      s"val=${graft.pipeline.TextAnalysis.ValMax}",
+    Seq("embeddings.parquet"),
+    (spark, dir, _) => {
       import spark.implicits._
       s15SemanticDecontam(spark, dir)
         .filter($"contaminated" === 1L)
@@ -869,27 +860,26 @@ object Similarity {
     */
   private[graft] def pqIndexAt(spark: SparkSession, dir: String,
       nCodes: Int): (DataFrame, DataFrame) =
-    pqCache.getOrBuild((spark, dir, nCodes)) {
+    pqCache.getOrBuild((spark, dir, nCodes)) { pins =>
       import spark.implicits._
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val sv = subVectors(spark, dir).persist(lvl)
-      val cents = trainPqCodebook(spark, sv, nCodes).persist(lvl)
+      // sv is released when the build returns: the value holds only
+      // the codebook and the codes
+      val sv = pins(subVectors(spark, dir))
+      val cents = pins(trainPqCodebook(spark, sv, nCodes))
       cents.count() // materialize: consumers read the codebook, not the lineage
-      val codes = sv.join(broadcast(cents), "sub")
+      val codes = pins(sv.join(broadcast(cents), "sub")
         .select($"vec_id", $"sub", $"cid", sqDist($"x", $"cv").as("dist"))
         .groupBy($"vec_id", $"sub")
         .agg(max_by(struct($"cid".as("code"), $"dist"),
           struct((-$"dist").as("nd"), (-$"cid").as("nc"))).as("best"))
         .select($"vec_id", $"sub", $"best.code".as("code"),
-          $"best.dist".as("dist"))
-        .persist(lvl)
+          $"best.dist".as("dist")))
       codes.count()
-      sv.unpersist()
       (cents, codes)
     }
 
   private val pqCache = Memo.cache[(SparkSession, String, Int),
-    (DataFrame, DataFrame)]("s.pq", Memo.unpersist)
+    (DataFrame, DataFrame)]("s.pq")
 
   private def trainPqCodebook(spark: SparkSession, sv: DataFrame,
       nCodes: Int): DataFrame = {
@@ -1484,12 +1474,11 @@ object Similarity {
 
   private def baseCentroids(spark: SparkSession, dir: String,
       nBase: Long): DataFrame =
-    baseCentCache.getOrBuild((spark, dir)) {
+    baseCentCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
       val base = vectors(spark, dir).filter($"vec_id" < nBase)
-      val df = kmeansCentroids(spark, base, recommendedCells(nBase),
-        KmeansIters)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val df = pins(kmeansCentroids(spark, base, recommendedCells(nBase),
+        KmeansIters))
       df.count() // materialize: consumers read the artifact, not the Lloyd lineage
       df
     }

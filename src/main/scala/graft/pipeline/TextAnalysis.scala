@@ -314,14 +314,13 @@ object TextAnalysis {
       .otherwise(array().cast("array<string>"))
 
   private def contamGrams(spark: SparkSession, dir: String): DataFrame =
-    gramCache.getOrBuild((spark, dir)) {
+    gramCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
       // explode drops empty arrays, so short docs contribute no rows —
       // same accept set as the pre-refactor size filter
-      Tables.documents(spark, dir)
+      pins(Tables.documents(spark, dir)
         .select($"doc_id", SplitBucket.as("b"), toks($"text").as("t"))
-        .select($"doc_id", $"b", explode(gramHashes($"t")).as("g"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select($"doc_id", $"b", explode(gramHashes($"t")).as("g")))
     }
 
   private val gramCache = Memo.frames("p.grams")
@@ -359,10 +358,9 @@ object TextAnalysis {
     */
   private[pipeline] val contamArtifact = new DurableArtifact(
     "p.contam", "p09_contam",
-    (spark, dir) => ArtifactStore.md5Hex(
-      s"v$ContamArtifactVersion|n=$ContamN|train=$TrainMax|val=$ValMax|" +
-        ArtifactStore.sourceListing(spark, dir + "/documents.parquet")),
-    (spark, dir) => p09Contamination(spark, dir)
+    (_, _) => s"v$ContamArtifactVersion|n=$ContamN|train=$TrainMax|val=$ValMax",
+    Seq("documents.parquet"),
+    (spark, dir, _) => p09Contamination(spark, dir)
       .filter(col("contaminated") === 1L).select(col("doc_id")))
 
   def p09Contamination(spark: SparkSession, dir: String): DataFrame = {
@@ -738,64 +736,55 @@ object TextAnalysis {
     * caller trains the same [[BpeMerges]] rules with the same fold
     * semantics (a persist changes when a state is recomputed, never
     * its rows). `materialize` fills a persisted layer; specs replace it
-    * to inject a failure.
+    * to inject a failure. Every cached table is pinned in one
+    * [[Memo.scoped]] scope, so a throw releases them all.
     */
   private[graft] def trainBpe(spark: SparkSession, dir: String,
       merges: Int = BpeMerges,
       persistEvery: Int = BpePersistInterval,
       materialize: DataFrame => Unit = _.count())
-      : Seq[(Int, String, String, Long)] = {
+      : Seq[(Int, String, String, Long)] = Memo.scoped { pins =>
     import spark.implicits._
     // the one corpus-scale job: word frequencies; state = chars joined
-    // by ' ' (corpus is ASCII words, asserted by MultimodalSpec)
-    val seed = Tables.documents(spark, dir)
+    // by ' ' (corpus is ASCII words, asserted by MultimodalSpec).
+    // Vocab-sized from here on: pin the seed so the 8 chained merge
+    // plans don't each re-run the corpus aggregation
+    val seed = pins(Tables.documents(spark, dir)
       .select(explode(toks($"text")).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("f"))
-      .select(concat_ws(" ", split($"w", "")).as("s"), $"f")
-      // vocab-sized from here on: persist the seed so the 8 chained
-      // merge plans don't each re-run the corpus aggregation
-      .persist()
+      .select(concat_ws(" ", split($"w", "")).as("s"), $"f"))
     var state = seed
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     // The lazy fold chain is O(merges²) in recomputed fold passes, so
-    // every persistEvery-th post-merge state persists and is
+    // every persistEvery-th post-merge state is pinned and
     // materialized (count) BEFORE the previous layer is released —
     // releasing first would let the new layer's fill recompute from
     // the seed through the full chain. See [[BpePersistInterval]] for
-    // the measured crossover behind the default period. A layer is
-    // tracked BEFORE it is materialized, so a throwing count still
-    // releases it (and the layer it was about to replace).
-    var layers = List.empty[DataFrame]
-    try {
-      for (k <- 1 to merges) {
-        val sy = split($"s", " ")
-        // single-symbol states contribute no pairs; the guard matters
-        // because Spark's sequence(1, 0) DESCENDS ([1, 0]) where the
-        // oracle's range(1, 1) is empty
-        val pairs = when(size(sy) >= 2,
-          transform(sequence(lit(1), size(sy) - 1),
-            i => struct(element_at(sy, i).as("a"),
-              element_at(sy, i + 1).as("b"))))
-          .otherwise(array())
-        val top = state
-          .select(explode(pairs).as("p"), $"f")
-          .groupBy($"p.a", $"p.b").agg(sum($"f").as("cnt"))
-          .orderBy($"cnt".desc, $"a", $"b").limit(1)
-          .head()
-        val (a, b) = (top.getAs[String]("a"), top.getAs[String]("b"))
-        rules += ((k, a, b, top.getAs[Long]("cnt")))
-        state = state.select(foldMerge($"s", a, b).as("s"), $"f")
-        if (persistEvery > 0 && k % persistEvery == 0 && k < merges) {
-          state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          layers = state :: layers
-          materialize(state)
-          layers.tail.foreach(_.unpersist())
-          layers = List(state)
-        }
+    // the measured crossover behind the default period.
+    var layer = Option.empty[DataFrame]
+    for (k <- 1 to merges) {
+      val sy = split($"s", " ")
+      // single-symbol states contribute no pairs; the guard matters
+      // because Spark's sequence(1, 0) DESCENDS ([1, 0]) where the
+      // oracle's range(1, 1) is empty
+      val pairs = when(size(sy) >= 2,
+        transform(sequence(lit(1), size(sy) - 1),
+          i => struct(element_at(sy, i).as("a"),
+            element_at(sy, i + 1).as("b"))))
+        .otherwise(array())
+      val top = state
+        .select(explode(pairs).as("p"), $"f")
+        .groupBy($"p.a", $"p.b").agg(sum($"f").as("cnt"))
+        .orderBy($"cnt".desc, $"a", $"b").limit(1)
+        .head()
+      val (a, b) = (top.getAs[String]("a"), top.getAs[String]("b"))
+      rules += ((k, a, b, top.getAs[Long]("cnt")))
+      state = state.select(foldMerge($"s", a, b).as("s"), $"f")
+      if (persistEvery > 0 && k % persistEvery == 0 && k < merges) {
+        materialize(pins(state))
+        layer.foreach(pins.release)
+        layer = Some(state)
       }
-    } finally {
-      seed.unpersist()
-      layers.foreach(_.unpersist())
     }
     rules.toSeq
   }
@@ -807,7 +796,7 @@ object TextAnalysis {
     */
   private def bpeRules(spark: SparkSession,
       dir: String): Seq[(Int, String, String, Long)] =
-    bpeRulesCache.getOrBuild((spark, dir))(trainBpe(spark, dir))
+    bpeRulesCache.getOrBuild((spark, dir))(_ => trainBpe(spark, dir))
 
   private val bpeRulesCache = Memo.cache[(SparkSession, String),
     Seq[(Int, String, String, Long)]]("p.bpe")
@@ -942,10 +931,7 @@ object TextAnalysis {
     * consumer.
     */
   private def dupSpanIndex(spark: SparkSession, dir: String): DataFrame =
-    dupSpanCache.getOrBuild((spark, dir)) {
-      dupSpansPlan(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    dupSpanCache.getOrBuild((spark, dir))(_(dupSpansPlan(spark, dir)))
 
   private val dupSpanCache = Memo.frames("p.spans")
 
@@ -1334,14 +1320,13 @@ object TextAnalysis {
     * novelty is measured against exactly that freeze).
     */
   private[graft] def trainVocab(spark: SparkSession, dir: String): DataFrame =
-    trainVocabCache.getOrBuild((spark, dir)) {
+    trainVocabCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
-      Tables.documents(spark, dir)
+      pins(Tables.documents(spark, dir)
         .select(toks($"text").as("t"), SplitBucket.as("b"))
         .filter($"b" < TrainMax)
         .select(explode(array_distinct($"t")).as("tok"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
     }
 
   private val trainVocabCache = Memo.frames("p.vocab")
@@ -1690,7 +1675,7 @@ object TextAnalysis {
     * un-memoized: it IS the benchmark of the fingerprint pass.
     */
   private def winnowFpIndex(spark: SparkSession, dir: String): DataFrame =
-    winnowFpCache.getOrBuild((spark, dir)) {
+    winnowFpCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
       // distinct HASHES per doc: the packed sel dedupes (hash, pos)
       // pairs, so the same hash selected at two positions must collapse
@@ -1706,9 +1691,8 @@ object TextAnalysis {
       // same round-16 plan change as Dedup.cappedShingles
       val keep = fps.groupBy($"fp").agg(count(lit(1)).as("df_"))
         .filter($"df_" <= FpDfCap).select($"fp")
-      fps.join(keep, Seq("fp"), "left_semi")
-        .select($"doc_id", $"fp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins(fps.join(keep, Seq("fp"), "left_semi")
+        .select($"doc_id", $"fp"))
     }
 
   private val winnowFpCache = Memo.frames("p.winnow")
@@ -1825,7 +1809,7 @@ object TextAnalysis {
     * stage each pay it once without this.
     */
   private[pipeline] def pplScored(spark: SparkSession,
-      dir: String): DataFrame = pplCache.getOrBuild((spark, dir)) {
+      dir: String): DataFrame = pplCache.getOrBuild((spark, dir)) { pins =>
     import spark.implicits._
     val tk = Tables.documents(spark, dir)
       .select($"doc_id", toks($"text").as("t"), SplitBucket.as("b"))
@@ -1839,17 +1823,17 @@ object TextAnalysis {
     // c12 feeds BOTH the scoring join and c1's rollup — two plan
     // consumers, which re-execute the train extraction without reuse
     // (the dsirModel-measured non-firing). c12 is bigram-vocab-sized
-    // (not stats-row), so the fix is the pqIndex pattern: persist it
-    // for the build, materialize the scored artifact, release below.
-    val c12 = train.groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (not stats-row), so the fix is the pqIndex pattern: pin it for
+    // the build and materialize the scored artifact; the build's return
+    // releases it.
+    val c12 = pins(train.groupBy($"w1", $"w2").agg(count(lit(1)).as("c12")))
     val c1 = c12.groupBy($"w1").agg(sum($"c12").as("c1"))
     val vocab = tk.filter($"b" < TrainMax)
       .select(explode($"t").as("tok"))
       .agg(count_distinct($"tok").as("v"))
     val occ = pairs.groupBy($"doc_id", $"w1", $"w2")
       .agg(count(lit(1)).as("k"))
-    val scored = occ
+    val scored = pins(occ
       .join(c12, Seq("w1", "w2"), "left")
       .join(c1, Seq("w1"), "left")
       .crossJoin(broadcast(vocab))
@@ -1862,10 +1846,8 @@ object TextAnalysis {
       .withColumn("ppl_bucket",
         when($"sum_qll" >= lit(PplHeadMin) * $"n_bigrams", "head")
           .when($"sum_qll" < lit(PplTailMax) * $"n_bigrams", "tail")
-          .otherwise("middle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise("middle")))
     scored.count() // materialize so the LM intermediate can release
-    c12.unpersist()
     scored
   }
 
@@ -1936,9 +1918,7 @@ object TextAnalysis {
   private val dsirCache = Memo.cache[(SparkSession, String), DataFrame]("p.dsir")
 
   private[graft] def dsirModel(spark: SparkSession, dir: String): DataFrame =
-    dsirCache.getOrBuild((spark, dir)) {
-      dsirModelBuild(spark, dir)
-    }
+    dsirCache.getOrBuild((spark, dir))(_ => dsirModelBuild(spark, dir))
 
   /** ONE extraction subtree, then ONE corpus scan total: a
     * conditional agg collapses the corpus to ≤4096 (bkt, ct, cr)
@@ -2024,7 +2004,7 @@ object TextAnalysis {
   private def rdivL(a: Long, b: Long): Long = Math.floorDiv(2 * a + b, 2 * b)
 
   private val qcCache = Memo.cache[(SparkSession, String),
-    (DataFrame, DataFrame, Long, Long)]("p.qc", Memo.unpersist)
+    (DataFrame, DataFrame, Long, Long)]("p.qc")
   private val qcModelCache = Memo.cache[(SparkSession, String), Array[Long]](
     "p.qcModel")
 
@@ -2038,22 +2018,19 @@ object TextAnalysis {
     */
   private def qcFrames(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Long, Long) =
-    qcCache.getOrBuild((spark, dir)) {
+    qcCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
-      val lev = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val occ = Tables.documents(spark, dir)
+      val occ = pins(Tables.documents(spark, dir)
         .select($"doc_id", toks($"text").as("t"))
         .select($"doc_id", explode(bigramBuckets($"t")).as("bkt"))
         .groupBy($"doc_id", $"bkt").agg(count(lit(1)).as("k"))
-        .repartition($"doc_id")
-        .persist(lev)
-      val lab = Tables.documents(spark, dir)
+        .repartition($"doc_id"))
+      val lab = pins(Tables.documents(spark, dir)
         .select($"doc_id", toks($"text").as("t"), $"source")
         .filter(size($"t") >= 2)
         .select($"doc_id", (size($"t") - 1).cast("long").as("n"),
           when($"source" === DsirTarget, 1L).otherwise(0L).as("y"))
-        .repartition($"doc_id")
-        .persist(lev)
+        .repartition($"doc_id"))
       val cnts = lab.groupBy($"y").agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       (occ, lab, cnts.getOrElse(1L, 0L), cnts.getOrElse(0L, 0L))
@@ -2078,7 +2055,7 @@ object TextAnalysis {
     * documents).
     */
   private[graft] def qcModel(spark: SparkSession, dir: String): Array[Long] =
-    qcModelCache.getOrBuild((spark, dir)) {
+    qcModelCache.getOrBuild((spark, dir)) { _ =>
       import spark.implicits._
       val (occ, lab, n1, n0) = qcFrames(spark, dir)
       // class-balanced GD divides by BOTH class counts; an

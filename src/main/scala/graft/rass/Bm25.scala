@@ -114,7 +114,7 @@ object Bm25 {
     // a query normalized to zero terms ("???") scores 0 on the BM25
     // clauses and needs no vocabulary
     if (terms.isEmpty) Map.empty
-    else acceptCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) {
+    else acceptCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) { _ =>
       found.acceptSets(fields, terms)
     }
 
@@ -202,7 +202,7 @@ object Bm25 {
     GraftExtensions.register(termStats.sparkSession)
     lazy val found = CorpusStats.lookup(fieldStats, termStats,
       (fields ++ fuzzyFields).distinct, terms)
-    val row = statsRowCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) {
+    val row = statsRowCache.getOrBuild(memoKey(fieldStats, termStats, fields, terms)) { _ =>
       found.statsRow(fields, terms)
     }
     (row, acceptSets(fieldStats, termStats, fuzzyFields, terms, found))

@@ -191,12 +191,8 @@ object Corpus {
     * deployment this is simply the written document table.
     */
   def corpus(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrBuild((spark, dir)) {
-      val c = structured(spark, dir).unionByName(unstructured(spark, dir),
-        allowMissingColumns = true)
-      c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c
-    }
+    cache.getOrBuild((spark, dir))(_(structured(spark, dir)
+      .unionByName(unstructured(spark, dir), allowMissingColumns = true)))
 
   private val cache = Memo.frames("r.corpus")
 
@@ -219,15 +215,14 @@ object Corpus {
     * never collide into sharing stats.
     */
   def statsOf(docs: DataFrame): (DataFrame, DataFrame) =
-    statsCache.getOrBuild((docs.sparkSession, docs.queryExecution.analyzed.canonicalized)) {
+    statsCache.getOrBuild((docs.sparkSession, docs.queryExecution.analyzed.canonicalized)) { pins =>
       val (f, t) = CorpusStats.build(docs, DocSchema.scoredFields)
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (f.persist(lvl), t.persist(lvl))
+      (pins(f), pins(t))
     }
 
   private val statsCache = Memo.cache[
     (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (DataFrame, DataFrame)]("r.stats", Memo.unpersist)
+    (DataFrame, DataFrame)]("r.stats")
 
   /** Release the memoized corpus and stats tables (see
     * [[graft.pipeline.Dedup.invalidateCaches]] for the policy), and with

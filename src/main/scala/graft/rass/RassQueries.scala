@@ -25,7 +25,7 @@ object RassQueries {
     graft.Memo.cache[(SparkSession, String, Long), Seq[Double]]("r.qv")
 
   private def qv(spark: SparkSession, dir: String, vecId: Long = 0): Seq[Double] =
-    qvCache.getOrBuild((spark, dir, vecId)) {
+    qvCache.getOrBuild((spark, dir, vecId)) { _ =>
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") === vecId).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble)

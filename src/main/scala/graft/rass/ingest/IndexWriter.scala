@@ -49,10 +49,13 @@ object IndexWriter {
     }
     // xxhash64 tie-break: duplicate doc_ids WITHIN one batch (e.g. the
     // same resource exported in two bundle files) would otherwise pick a
-    // shuffle-order-dependent winner, breaking run-to-run reproducibility
+    // shuffle-order-dependent winner, breaking run-to-run reproducibility.
+    // The columns hash in the schema's fixed order, not the frame's, so
+    // the winner never depends on how a caller or a table's layout
+    // orders the columns
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("_gen").desc,
-        xxhash64(all.columns.filter(_ != "_gen").map(c => col(c).cast("string")): _*))
+        xxhash64(DocSchema.schema.fieldNames.map(c => col(c).cast("string")): _*))
     all.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_gen", "_rn")

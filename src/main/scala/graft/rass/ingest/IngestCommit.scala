@@ -3,7 +3,7 @@ package graft.rass.ingest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.StagedDir
+import graft.{Memo, StagedDir}
 import graft.rass.{CorpusStats, DocSchema, Embedder}
 
 /** Crash-safe commit of one parsed ingest batch into the document
@@ -41,7 +41,7 @@ object IngestCommit {
     }
 
   private def commitLocked(spark: SparkSession, tablePath: String,
-      parsed: DataFrame, embedder: Embedder): Unit = {
+      parsed: DataFrame, embedder: Embedder): Unit = Memo.scoped { pins =>
     val fs = StagedDir.fs(spark, tablePath)
     val tables = Seq(tablePath, statsFieldsPath(tablePath),
       statsTermsPath(tablePath))
@@ -51,35 +51,31 @@ object IngestCommit {
     val existing =
       if (fs.exists(new Path(tablePath)))
         Some(IndexWriter.read(spark, tablePath)) else None
-    val merged = IndexWriter.upsert(existing, docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // stage EVERYTHING first (Spark refuses to overwrite a path it
-      // is reading in the same plan, and `existing`'s resolved file
-      // list dies the moment the doc table is swapped), THEN swap
-      IndexWriter.write(merged, StagedDir.staging(tablePath))
+    val merged = pins(IndexWriter.upsert(existing, docs))
+    // stage EVERYTHING first (Spark refuses to overwrite a path it
+    // is reading in the same plan, and `existing`'s resolved file
+    // list dies the moment the doc table is swapped), THEN swap
+    IndexWriter.write(merged, StagedDir.staging(tablePath))
 
-      val batchIds = parsed.select("doc_id").distinct()
-      val (newFields, newTerms) = existing match {
-        case Some(e) if tables.tail.forall(p => fs.exists(new Path(p))) =>
-          // upsert winners for batch ids are always the batch rows,
-          // so: new corpus = existing − replaced + batch winners
-          val replaced = e.join(batchIds, Seq("doc_id"), "left_semi")
-          val added = merged.join(batchIds, Seq("doc_id"), "left_semi")
-          CorpusStats.merge(
-            (StagedDir.read(spark, statsFieldsPath(tablePath)),
-              StagedDir.read(spark, statsTermsPath(tablePath))),
-            added, replaced, DocSchema.scoredFields)
-        case _ => // first batch, or stats not yet materialized
-          CorpusStats.build(merged, DocSchema.scoredFields)
-      }
-      newFields.write.mode("overwrite")
-        .parquet(StagedDir.staging(statsFieldsPath(tablePath)))
-      newTerms.write.mode("overwrite")
-        .parquet(StagedDir.staging(statsTermsPath(tablePath)))
+    val batchIds = parsed.select("doc_id").distinct()
+    val (newFields, newTerms) = existing match {
+      case Some(e) if tables.tail.forall(p => fs.exists(new Path(p))) =>
+        // upsert winners for batch ids are always the batch rows,
+        // so: new corpus = existing − replaced + batch winners
+        val replaced = e.join(batchIds, Seq("doc_id"), "left_semi")
+        val added = merged.join(batchIds, Seq("doc_id"), "left_semi")
+        CorpusStats.merge(
+          (StagedDir.read(spark, statsFieldsPath(tablePath)),
+            StagedDir.read(spark, statsTermsPath(tablePath))),
+          added, replaced, DocSchema.scoredFields)
+      case _ => // first batch, or stats not yet materialized
+        CorpusStats.build(merged, DocSchema.scoredFields)
+    }
+    newFields.write.mode("overwrite")
+      .parquet(StagedDir.staging(statsFieldsPath(tablePath)))
+    newTerms.write.mode("overwrite")
+      .parquet(StagedDir.staging(statsTermsPath(tablePath)))
 
-      tables.foreach(StagedDir.swapIn(fs, _))
-    } finally merged.unpersist()
-    ()
+    tables.foreach(StagedDir.swapIn(fs, _))
   }
 }

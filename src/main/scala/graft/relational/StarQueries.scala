@@ -572,13 +572,12 @@ object StarQueries {
     * rebuild it (4 full scans at 100 TB for one |users|-sized frame).
     */
   private def rfmUsers(spark: SparkSession, dir: String): DataFrame =
-    rfmCache.getOrBuild((spark, dir)) {
+    rfmCache.getOrBuild((spark, dir)) { pins =>
       import spark.implicits._
-      Tables.events(spark, dir)
+      pins(Tables.events(spark, dir)
         .groupBy($"user_id")
         .agg(max($"ts").as("last_ts"), count(lit(1)).as("n_events"),
-          sum(money($"value")).as("monetary"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          sum(money($"value")).as("monetary")))
     }
 
   private val rfmCache = graft.Memo.frames("q.rfm")

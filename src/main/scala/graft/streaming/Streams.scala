@@ -677,14 +677,8 @@ object Streams {
   * are parsed, embedded, and idempotently merged into the document
   * table inside foreachBatch (exactly-once per batch via the
   * checkpoint; the upsert keyed on doc_id makes replays harmless).
-  *
-  * Each batch also maintains the materialized BM25 statistics tables
-  * ([[graft.rass.CorpusStats]]) next to the document table
-  * (`<table>_stats_fields` / `<table>_stats_terms`): the signed merge
-  * subtracts the replaced doc versions and adds the new ones, so the
-  * stats update cost is proportional to the BATCH, not the corpus —
-  * the property that lets a search at 100 TB read its stats row
-  * without any corpus scan.
+  * Each batch commits through [[IngestCommit]], which also maintains
+  * the materialized BM25 statistics tables.
   */
 object AutoIngest {
 

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * durable read-through written by hand beside the shared one; and a
   * `"_staging"`/`"_old"` suffix or a `swapIn`/`listComplete` definition
   * outside StagedDir.scala is another copy of the staged-directory
-  * protocol.
+  * protocol; and a `persist`/`unpersist`/`cache()` call or a
+  * `StorageLevel` outside Memo.scala is a frame cached by hand, with no
+  * owner to release it on a throw or a rebuild.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
@@ -107,5 +109,29 @@ class MemoGuardSpec extends AnyFunSuite {
     assert(protocolPieces("""// p + "_old"
       |/** [[StagedDir.swapIn]] */
       |StagedDir.swapIn(fs, StagedDir.staging(p)); df.as("t_old")""".stripMargin) == 0)
+  }
+
+  /** Caching a frame by hand: a persist, unpersist or `cache()` call, or
+    * a storage level.
+    */
+  private val HandCache = """\.\s*(?:persist|unpersist)\s*\(|\.\s*cache\s*\(\s*\)|\bStorageLevel\b""".r
+
+  private def handCaches(code: String): Int =
+    HandCache.findAllMatchIn(stripped(code)).size
+
+  test("frames are persisted and unpersisted only in Memo") {
+    val owners = mainSources.filter(kv => handCaches(kv._2) > 0).map(_._1)
+    assert(owners == Seq("Memo"),
+      s"a frame cached outside Memo's pins: $owners")
+  }
+
+  test("the cache scan catches a planted persist") {
+    assert(handCaches("df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)") == 2)
+    assert(handCaches("val c = df\n  .persist()\n  c.unpersist()") == 2)
+    assert(handCaches("corpus.cache().count()") == 1)
+    assert(handCaches("import org.apache.spark.storage.StorageLevel\nval l = StorageLevel.NONE") == 1)
+    assert(handCaches("""// df.persist()
+      |/** a `cache()`d frame, see [[Memo]]; `unpersist()` */
+      |pins(df); cache.getOrBuild(k)(_ => 1); pins.release(df)""".stripMargin) == 0)
   }
 }

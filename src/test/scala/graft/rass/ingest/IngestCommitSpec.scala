@@ -165,4 +165,37 @@ class IngestCommitSpec extends SparkSpec {
     assert(spark.read.parquet(tab).count() == n1, "read, then upserted")
     statsMatchRebuild(tab)
   }
+
+  /** The fixture batch with every document exported a second time from
+    * another bundle file: each doc_id has two rows that differ only in
+    * `file_path`.
+    */
+  private def duplicatedBatch: DataFrame = {
+    val base = parsed(bundleJson, "/f/b.json")
+    base.unionByName(base.withColumn("file_path",
+      org.apache.spark.sql.functions.lit("/f/copy.json")))
+  }
+
+  /** doc_id -> the `file_path` of the row that won. */
+  private def winners(docs: DataFrame): Map[String, String] =
+    docs.select("doc_id", "file_path").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("which duplicate of a batch wins does not depend on the batch's column order") {
+    val batch = IndexWriter.withEmbeddings(duplicatedBatch, emb)
+    val reordered = batch.select(batch.columns.reverse.map(batch.col).toIndexedSeq: _*)
+    assert(winners(IndexWriter.upsert(None, reordered)) ==
+      winners(IndexWriter.upsert(None, batch)))
+  }
+
+  test("a batch's duplicates win the same over a flat table and a partitioned one") {
+    val root = java.nio.file.Files.createTempDirectory("tiebreak")
+    val (flat, parted) = (root.resolve("flat").toString, root.resolve("parted").toString)
+    val earlier = parsed(bundleJson.replace("thirst", "hunger"), "/f/a.json")
+    IndexWriter.upsert(None, IndexWriter.withEmbeddings(earlier, emb)).write.parquet(flat)
+    IngestCommit.commit(spark, parted, earlier, emb)
+    assert(parquetFiles(flat).nonEmpty && parquetFiles(parted).isEmpty)
+    Seq(flat, parted).foreach(IngestCommit.commit(spark, _, duplicatedBatch, emb))
+    assert(winners(IndexWriter.read(spark, flat)) == winners(IndexWriter.read(spark, parted)))
+  }
 }
