@@ -3,12 +3,13 @@ package graft
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionSpec}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
+  InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one protocol behind every durable parquet directory: the
@@ -34,6 +35,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     the scan's file index, so a concurrent swap fails the read
   *     loudly ([[pathGone]]) instead of serving part of a directory,
   *     and building the frame runs no listing or schema-inference job.
+  *   - A directory that takes many small batches (the document table)
+  *     is committed by PARTS, copy-on-write at file granularity, so a
+  *     commit rewrites the files it touches and no others:
+  *     [[commitParts]] takes the new files staged at `staging(p)` in
+  *     `p`'s own layout, the files of `p` they supersede, and the
+  *     complete stagings of the commit's other tables. Its commit point
+  *     is one marker file in `staging(p)`, written under a hidden name
+  *     and renamed, that holds the delete list. Past the marker, the
+  *     commit rolls forward: the staged files move into place, the
+  *     listed files are deleted, the other stagings swap in, and the
+  *     staging is removed. Every step is idempotent, so
+  *     [[recoverParts]] repeats them after a kill; with no marker it
+  *     discards the stagings, as [[recover]] does.
+  *   - A writer that adds single files to a live directory (the chat
+  *     store) writes each under a `_`-prefixed name, which every
+  *     listing skips, and [[publish]]es it by rename; [[sweep]] deletes
+  *     what a killed writer left hidden.
   */
 private[graft] object StagedDir {
 
@@ -72,10 +90,7 @@ private[graft] object StagedDir {
     * staging, so it is discarded.
     */
   def recover(fs: FileSystem, paths: Seq[String]): Unit = {
-    paths.foreach { p =>
-      if (!fs.exists(new HPath(p)) && fs.exists(new HPath(retired(p))))
-        fs.rename(new HPath(retired(p)), new HPath(p))
-    }
+    restoreRetired(fs, paths)
     val firstStagingLeft = fs.exists(new HPath(staging(paths.head)))
     paths.foreach { p =>
       val stage = new HPath(staging(p))
@@ -86,6 +101,115 @@ private[graft] object StagedDir {
       }
     }
   }
+
+  /** Step 1 of [[recover]]: a path a kill left at `_old` is restored. */
+  private def restoreRetired(fs: FileSystem, paths: Seq[String]): Unit =
+    paths.foreach { p =>
+      if (!fs.exists(new HPath(p)) && fs.exists(new HPath(retired(p))))
+        fs.rename(new HPath(retired(p)), new HPath(p))
+    }
+
+  /** The commit point of a part commit into `p`: it lists, one per
+    * line and relative to `p`, the files the staged parts supersede.
+    */
+  private def marker(p: String): HPath = new HPath(staging(p), "_COMMITTED")
+
+  /** Commit the parts staged at `staging(p)` into `p`, superseding
+    * `deletes` (files of `p`), and promote the complete staging of
+    * each of `others`: write the marker, then roll forward. The parts
+    * are staged in `p`'s layout (`staging(p)/user_id=u/part-…`), so a
+    * part moves to the same relative path under `p`.
+    */
+  def commitParts(fs: FileSystem, p: String, deletes: Seq[HPath], others: Seq[String]): Unit = {
+    mark(fs, p, deletes)
+    rollForward(fs, p, others)
+  }
+
+  /** Write the marker of a part commit into `p`: its content under a
+    * hidden name first, then one rename, so the marker is whole or
+    * absent.
+    */
+  private[graft] def mark(fs: FileSystem, p: String, deletes: Seq[HPath]): Unit = {
+    val root = fs.makeQualified(new HPath(p)).toString + "/"
+    val lines = deletes.map { d =>
+      val abs = fs.makeQualified(d).toString
+      require(abs.startsWith(root), s"$d is not a file of $p")
+      abs.stripPrefix(root)
+    }
+    val pending = new HPath(staging(p), "_COMMITTED.pending")
+    val out = fs.create(pending, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(pending, marker(p)))
+      throw new java.io.IOException(s"could not write the commit marker of $p")
+  }
+
+  /** Finish a marked part commit; safe to repeat from any point. */
+  private def rollForward(fs: FileSystem, p: String, others: Seq[String]): Unit = {
+    val (root, stage) = (new HPath(p), new HPath(staging(p)))
+    val stageRoot = fs.makeQualified(stage).toString + "/"
+    dataFiles(fs, stage).foreach { f =>
+      val dest = new HPath(root, f.getPath.toString.stripPrefix(stageRoot))
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(f.getPath, dest))
+        throw new java.io.IOException(s"could not move ${f.getPath} to $dest")
+    }
+    val in = fs.open(marker(p))
+    val deletes =
+      try new String(in.readAllBytes(), "UTF-8").linesIterator.filter(_.nonEmpty).toList
+      finally in.close()
+    deletes.foreach(rel => fs.delete(new HPath(root, rel), false))
+    others.foreach(o => if (fs.exists(new HPath(staging(o)))) swapIn(fs, o))
+    fs.delete(stage, true)
+  }
+
+  /** Crash recovery for a part-committed `p` and the `others` its
+    * commits stage beside it: a marked commit is rolled forward;
+    * otherwise [[recover]] runs over `p +: others`, which discards
+    * every staging while `staging(p)` exists (a commit stages its
+    * parts first and removes their staging last) and keeps its meaning
+    * for a directory swapped whole by an earlier writer.
+    */
+  def recoverParts(fs: FileSystem, p: String, others: Seq[String]): Unit =
+    if (fs.exists(marker(p))) {
+      restoreRetired(fs, p +: others)
+      rollForward(fs, p, others)
+    } else recover(fs, p +: others)
+
+  /** Names every listing skips, Spark's included: `_SUCCESS`, a marker,
+    * a part still hidden, `.crc` checksums.
+    */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** The data files under `dir`, in partition directories too; none
+    * when `dir` is absent.
+    */
+  def dataFiles(fs: FileSystem, dir: HPath): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName))
+      .sortBy(_.getPath.toString)
+      .flatMap(s => if (s.isDirectory) dataFiles(fs, s.getPath) else Seq(s))
+
+  /** Rows of a parquet file, from its footer, read on the driver. */
+  def rows(spark: SparkSession, file: FileStatus): Long = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  /** Publish a file written under a hidden name in a live directory:
+    * one rename to `name`, so listings see it whole or not at all.
+    */
+  def publish(fs: FileSystem, hiddenFile: HPath, name: String): Unit =
+    if (!fs.rename(hiddenFile, new HPath(hiddenFile.getParent, name)))
+      throw new java.io.IOException(s"could not publish $hiddenFile")
+
+  /** Delete the files of `dir` named `prefix…`: files a killed writer
+    * left hidden before their [[publish]].
+    */
+  def sweep(fs: FileSystem, dir: HPath, prefix: String): Unit =
+    if (fs.exists(dir))
+      fs.listStatus(dir).filter(_.getPath.getName.startsWith(prefix))
+        .foreach(s => fs.delete(s.getPath, false))
 
   /** `p`, or `p_old` when a crash between swapIn's renames left the
     * data there. Read-only: the repair is the next writer's.
@@ -150,10 +274,7 @@ private[graft] object StagedDir {
     *     and the file index would plan no split for it.
     */
   def parts(fs: FileSystem, dir: HPath): Array[FileStatus] = {
-    val found = listComplete(fs, dir).filterNot { s =>
-      val name = s.getPath.getName
-      name.startsWith("_") || name.startsWith(".")
-    }
+    val found = listComplete(fs, dir).filterNot(s => hidden(s.getPath.getName))
     if (found.isEmpty || found.exists(_.getLen == 0L))
       throw new FileNotFoundException(
         s"no complete listing of $dir: ${found.length} files, " +
@@ -164,6 +285,8 @@ private[graft] object StagedDir {
   /** A scan of exactly `parts` with the given schema: the file index
     * serves `parts` as the listing of `dir`, so building the frame lists
     * nothing and infers nothing — the scan's own job is the only one.
+    * Parts in `key=value` directories under `dir` give `schema`'s `key`
+    * column from the directory name, as a read of `dir` would.
     */
   def scan(spark: SparkSession, dir: HPath, parts: Array[FileStatus],
       schema: StructType): DataFrame = {
@@ -173,15 +296,16 @@ private[graft] object StagedDir {
       override def invalidateAll(): Unit = ()
     }
     val index = new InMemoryFileIndex(spark, Seq(dir), Map.empty, Some(schema),
-      listing, Some(PartitionSpec.emptySpec), None)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), schema,
+      fileStatusCache = listing)
+    val partitionCols = index.partitionSchema.fieldNames.toSet
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(schema.filterNot(f => partitionCols(f.name))),
       None, new ParquetFileFormat(), Map.empty)(spark))
   }
 
   /** [[scan]] over a fresh [[parts]] listing of `dir`. Without a given
-    * schema, `dir` must be Spark-written: the schema is the Spark schema
-    * one part's footer stores, read on the driver and made nullable the
-    * way Spark's file sources make an inferred one.
+    * schema, the schema is one part's, read from its footer on the
+    * driver ([[schemaOf]]).
     */
   def read(spark: SparkSession, dir: String, schema: Option[StructType] = None): DataFrame = {
     val d = new HPath(dir)
@@ -199,16 +323,28 @@ private[graft] object StagedDir {
       case _: java.io.IOException => None
     }
 
+  /** The schema `spark.read.parquet(path)` infers, for a parquet file
+    * or for a directory (from its first data file), read from one
+    * footer on the driver: no job runs.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val (pfs, p) = (fs(spark, path), new HPath(path))
+    val status = pfs.getFileStatus(p)
+    footerSchema(spark, if (status.isFile) status else parts(pfs, p).head)
+  }
+
+  /** What Spark's schema inference reads from a footer: the Spark
+    * schema the writer stored, else the parquet schema converted under
+    * the session's SQL conf (so `nanosAsLong` and the other timestamp
+    * and binary flags apply); made nullable the way Spark's file
+    * sources make an inferred schema.
+    */
   private def footerSchema(spark: SparkSession, part: FileStatus): StructType = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromStatus(part, spark.sparkContext.hadoopConfiguration))
-    val stored =
-      try reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get(ParquetReadSupport.SPARK_METADATA_KEY)
-      finally reader.close()
-    if (stored == null)
-      throw new IllegalStateException(s"${part.getPath} stores no Spark schema in its footer")
-    nullable(DataType.fromJson(stored)).asInstanceOf[StructType]
+    val footer = try reader.getFooter finally reader.close()
+    nullable(ParquetFileFormat.readSchemaFromFooter(new Footer(part.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))).asInstanceOf[StructType]
   }
 
   private def nullable(t: DataType): DataType = t match {

@@ -14,8 +14,13 @@ object Tables {
   val allTables: Seq[String] =
     starTables ++ Seq("events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table with the schema Spark would infer, read from its footer
+    * on the driver ([[StagedDir.schemaOf]]), so loading runs no job.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(StagedDir.schemaOf(spark, path)).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")

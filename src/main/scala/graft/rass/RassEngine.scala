@@ -134,8 +134,7 @@ final class ParquetChatStore(spark: SparkSession, path: String,
     val hidden = new HPath(path, HiddenPrefix + name)
     val writer = factory.newInstance(hidden.toString, Schema, ctx)
     try writer.write(toRow(m)) finally writer.close()
-    if (!fs.rename(hidden, new HPath(path, name)))
-      throw new java.io.IOException(s"could not publish chat part $hidden")
+    StagedDir.publish(fs, hidden, name)
   }
 
   /** StagedDir's crash recovery (a table left at `_old` is restored, a
@@ -151,10 +150,7 @@ final class ParquetChatStore(spark: SparkSession, path: String,
     */
   private def recover(): Unit = {
     StagedDir.recover(fs, Seq(path))
-    val target = new HPath(path)
-    if (fs.exists(target))
-      fs.listStatus(target).filter(_.getPath.getName.startsWith(HiddenPrefix))
-        .foreach(s => fs.delete(s.getPath, false))
+    StagedDir.sweep(fs, new HPath(path), HiddenPrefix)
   }
 
   private def maybeCompact(): Unit = {

@@ -17,8 +17,10 @@ import graft.rass.{DocSchema, Embedder, VectorOps}
   * a patient's documents co-locate in files (the reference's shard
   * routing) — patient-filtered scans then prune at both levels.
   * Upsert = union + keep-newest-per-doc_id, the foreachBatch-friendly
-  * idempotent merge (no Delta in this environment, so the merge is a
-  * partition overwrite).
+  * idempotent merge. A commit ([[IngestCommit]]) runs it over the batch
+  * alone and writes the result as a new part beside the table's other
+  * files; [[fold]] is the size-tier rule that keeps the number of parts
+  * per partition logarithmic.
   */
 object IndexWriter {
 
@@ -72,6 +74,8 @@ object IndexWriter {
     * analogue of the reference's `_routing = patientId` shard pruning
     * (`app/main.py:1230,1263`), with no metastore/bucketing metadata
     * needed. IngestSpec asserts the disjoint-ranges property on disk.
+    * The ranges are disjoint within one write: parts of different
+    * commits overlap until [[fold]] rewrites them into one.
     *
     * 100 TB deployment note: plain parquet records no bucket metadata,
     * so this layout accelerates patient-FILTERED scans but a patientId
@@ -88,6 +92,35 @@ object IndexWriter {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("user_id")
       .parquet(path)
+
+  /** The size-tier fold (Bentley–Saxe, the LSM rule): a new part of
+    * `rows` rows absorbs every existing part that holds no more rows
+    * than it does, smallest first, growing as it absorbs, while that
+    * holds. Returns the parts absorbed. Part sizes then stay
+    * geometric: a partition holds O(log(table/batch)) parts, each row
+    * is rewritten O(log) times, and a small batch never folds a big
+    * part. Rows, not bytes: parquet's per-file overhead and compression
+    * would stall a byte rule.
+    */
+  def fold[P](rows: Long, parts: Seq[(P, Long)]): Seq[P] = {
+    var n = rows
+    parts.sortBy(_._2).takeWhile { case (_, r) =>
+      val absorbs = r <= n
+      if (absorbs) n += r
+      absorbs
+    }.map(_._1)
+  }
+
+  /** Spark names every file of one write `part-<task>-<write uuid>…`:
+    * the files sharing the uuid are one part. A file named otherwise is
+    * a part of its own.
+    */
+  private val WriteId = """part-\d+-(\p{XDigit}{8}(?:-\p{XDigit}{4}){3}-\p{XDigit}{12})""".r.unanchored
+
+  def writeOf(fileName: String): String = fileName match {
+    case WriteId(uuid) => uuid
+    case _ => fileName
+  }
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(DocSchema.schema).parquet(path)

@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * outside StagedDir.scala is another copy of the staged-directory
   * protocol; and a `persist`/`unpersist`/`cache()` call or a
   * `StorageLevel` outside Memo.scala is a frame cached by hand, with no
-  * owner to release it on a throw or a rebuild.
+  * owner to release it on a throw or a rebuild; and a `rename(` or
+  * `delete(` call outside StagedDir.scala is a file move under a
+  * durable directory that no crash recovery knows about.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
@@ -133,5 +135,25 @@ class MemoGuardSpec extends AnyFunSuite {
     assert(handCaches("""// df.persist()
       |/** a `cache()`d frame, see [[Memo]]; `unpersist()` */
       |pins(df); cache.getOrBuild(k)(_ => 1); pins.release(df)""".stripMargin) == 0)
+  }
+
+  /** A file rename or delete. */
+  private val FileMove = """\.\s*(?:rename|delete)\s*\(""".r
+
+  private def fileMoves(code: String): Int =
+    FileMove.findAllMatchIn(stripped(code)).size
+
+  test("files under a durable directory are renamed and deleted only in StagedDir") {
+    val owners = mainSources.filter(kv => fileMoves(kv._2) > 0).map(_._1)
+    assert(owners == Seq("StagedDir"),
+      s"a rename or delete outside StagedDir's recovery: $owners")
+  }
+
+  test("the file-move scan catches a planted rename or delete") {
+    assert(fileMoves("if (!fs.rename(hidden, new HPath(path, name))) throw e") == 1)
+    assert(fileMoves("parts.foreach(s => fs\n  .delete (s.getPath, false))") == 1)
+    assert(fileMoves("""// fs.delete(p, true)
+      |/** renamed by [[StagedDir.publish]]; `fs.rename(a, b)` */
+      |StagedDir.publish(fs, hidden, name); StagedDir.sweep(fs, dir, prefix)""".stripMargin) == 0)
   }
 }

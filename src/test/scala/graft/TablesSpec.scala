@@ -4,7 +4,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The events loader is the single seam between the driver's parquet and
+/** `Tables.load` takes its schema from one footer on the driver: the
+  * schema equals Spark's inferred one, and loading runs no job.
+  *
+  * The events loader is the single seam between the driver's parquet and
   * every event query, batch twin, and streaming source. The driver's
   * generator has shipped `ts` three different ways across rounds —
   * TIMESTAMP(NANOS) (readable only as a long), TIMESTAMP_NTZ, and plain
@@ -48,5 +51,33 @@ class TablesSpec extends SparkSpec {
       assert(dt == TimestampType, s"$variant: loaded type $dt")
       assert(us == want, s"$variant: micros $us != $want")
     }
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The test tables at sf0.001 and, beside them, sf0.01. */
+  private def sfDirs = Seq(sfDir, new java.io.File(sfDir).getParent + "/sf0.01")
+    .filter(d => new java.io.File(d).isDirectory)
+
+  test("Tables.load's schema is the one spark.read.parquet infers, for every table") {
+    assert(sfDirs.nonEmpty)
+    val prev = spark.conf.getOption(NanosAsLong)
+    try for (dir <- sfDirs; name <- Tables.allTables; nanos <- Seq("true", "false")
+        if nanos == "true" || name == "events") {
+      spark.conf.set(NanosAsLong, nanos)
+      assert(Tables.load(spark, dir, name).schema ==
+        spark.read.parquet(s"$dir/$name.parquet").schema, s"$dir/$name, nanosAsLong=$nanos")
+    } finally prev.fold(spark.conf.unset(NanosAsLong))(spark.conf.set(NanosAsLong, _))
+  }
+
+  test("Tables.load runs no Spark job") {
+    for (dir <- sfDirs; name <- Tables.allTables)
+      assert(jobsDuring(Tables.load(spark, dir, name)).isEmpty, s"$dir/$name")
+  }
+
+  test("a directory's schema is read from its first data file") {
+    val dir = Files.createTempDirectory("schemaOf").resolve("t").toString
+    spark.range(3).selectExpr("id", "cast(id as string) as s").write.parquet(dir)
+    assert(StagedDir.schemaOf(spark, dir) == spark.read.parquet(dir).schema)
   }
 }
